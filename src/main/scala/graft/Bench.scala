@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line. Measurement discipline:
@@ -310,17 +309,7 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[GraftSessionExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Flaco.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
     val clock = new TaskClockListener
     spark.sparkContext.addSparkListener(clock)
 
@@ -349,8 +338,9 @@ object Bench {
       // that deliberately retains one for a lazy consumer (q193's
       // band table) used to leak it into every later query's window.
       // Released here, OUTSIDE the timed window, exactly like
-      // clearCache — measurement hygiene, not query cost.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // clearCache — measurement hygiene, not query cost. Blocking, so
+      // block removal cannot bleed into the next query's timing.
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       if (ok) Some(Sample(t,
         (clock.runMs.get() - run0) / 1e3,
         (clock.cpuNs.get() - cpu0) / 1e9,

@@ -7311,8 +7311,9 @@ object SparkEntry {
     * pain, while 1024 APPLY iterations are one recursive CTE).
     */
   private def bpeSeqOracle: String = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // The active session, not a builder: getOrCreate with configs
+    // would rewrite the calling session's runtime conf.
+    val spark = SparkSession.active
     val merges = TextAnalysis.bpeSeqMergesFor(spark, oracleCorpusDir)
     def esc(s: String) = s.replace("'", "''")
     val values = merges

@@ -264,17 +264,7 @@ object Sweep {
     val srcDir = args(1)
     val workDir = args(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", classOf[GraftSessionExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Flaco.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
 
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -150,6 +150,11 @@ class PagilaLiveSpec extends AnyFunSuite {
       assert(e.getMessage.contains("copy-start"))
       val r = wire.query("select 42").head
       assert(r.data.text(0, 0) === "42")
+      // The same for COPY TO STDOUT through query: its CopyData
+      // stream must be drained before the error surfaces.
+      intercept[java.sql.SQLException](
+        wire.query("copy (select 1) to stdout"))
+      assert(wire.query("select 42").head.data.text(0, 0) === "42")
     } finally wire.close()
   }
 

@@ -278,30 +278,40 @@ object Flaco {
       // ONE cached isolated session per parent (r21 ADVICE): a fresh
       // newSession() per write leaks SessionState on heavy interop
       // use. The runtime conf is re-synced on every write (the parent
-      // may have changed between writes); only MODIFIABLE keys are
-      // copied — statics are already equal (same context) and a
-      // blanket catch would mask a genuinely-needed copy failing.
+      // may have changed between writes): keys the parent no longer
+      // sets are unset, and only MODIFIABLE keys are touched —
+      // statics are already equal (same context) and a blanket catch
+      // would mask a genuinely-needed copy failing. Sync and write
+      // hold the isolated session's monitor, so concurrent interop
+      // writes cannot change each other's conf mid-write.
       val isolated = interopSessions.synchronized {
         interopSessions.computeIfAbsent(sess, s => s.newSession())
       }
-      sess.conf.getAll.foreach { case (ck, cv) =>
-        if (isolated.conf.isModifiable(ck)) isolated.conf.set(ck, cv)
+      isolated.synchronized {
+        val parentConf = sess.conf.getAll
+        isolated.conf.getAll.keys.foreach { ck =>
+          if (!parentConf.contains(ck) && isolated.conf.isModifiable(ck))
+            isolated.conf.unset(ck)
+        }
+        parentConf.foreach { case (ck, cv) =>
+          if (isolated.conf.isModifiable(ck)) isolated.conf.set(ck, cv)
+        }
+        isolated.conf
+          .set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
+        // Re-bind the plan to the isolated session through a global temp
+        // view (the cross-session handle Spark exposes publicly). The
+        // database name is a conf, not a constant (r21 ADVICE).
+        val gtDb = sess.conf.get("spark.sql.globalTempDatabase", "global_temp")
+        val vname = "flaco_interop_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        out.createOrReplaceGlobalTempView(vname)
+        try {
+          var wi = isolated.table(s"`$gtDb`.$vname").write.mode("overwrite")
+          if (parity.uncompressed) wi = wi.option("compression", "none")
+          wi.option("spark.sql.variant.inferShreddingSchema", "false")
+            .parquet(path)
+        } finally { sess.catalog.dropGlobalTempView(vname): Unit }
       }
-      isolated.conf
-        .set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-      // Re-bind the plan to the isolated session through a global temp
-      // view (the cross-session handle Spark exposes publicly). The
-      // database name is a conf, not a constant (r21 ADVICE).
-      val gtDb = sess.conf.get("spark.sql.globalTempDatabase", "global_temp")
-      val vname = "flaco_interop_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      out.createOrReplaceGlobalTempView(vname)
-      try {
-        var wi = isolated.table(s"`$gtDb`.$vname").write.mode("overwrite")
-        if (parity.uncompressed) wi = wi.option("compression", "none")
-        wi.option("spark.sql.variant.inferShreddingSchema", "false")
-          .parquet(path)
-      } finally { sess.catalog.dropGlobalTempView(vname): Unit }
     } else w.parquet(path)
   }
 

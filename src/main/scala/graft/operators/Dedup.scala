@@ -149,48 +149,24 @@ object Dedup {
     * verification rows and vanish at the exact join. Result is
     * row-identical to [[decontaminate]] (same oracle; spec-pinned).
     */
-  def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
+  def decontaminateBloom(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     val docs = Corpus.read(spark, dir, "documents")
     val evalDocs = docs.filter(col("doc_id") % 10 === 0)
-    // Materialized ONCE (lineage-free): consumed three times — the
-    // sizing count, the distributed bit build, and the exact
-    // verification join — and the explode+distinct behind it is the
-    // dominant eval-side cost; the blocks are disk-backed (see
-    // [[materializeOnce]] for the r22 persist-vs-checkpoint numbers).
-    val benchDF = shinglesOf(evalDocs).select(col("shingle")).distinct()
-      .localCheckpoint(true)
-    val n = benchDF.count()
-    val nWords = graft.functions.BloomKernel.wordsFor(n)
-    // Per-partition build + tree OR-merge: each task ALLOCATES its
-    // array fresh (only the int size rides the closure) — an
-    // aggregate with an array zero-value would deserialize a full
-    // bit-array copy per task, multiplying executor memory by the
-    // task count at exactly the scale this path exists for.
-    val bits = benchDF.rdd.mapPartitions { rows =>
-      val w = new Array[Long](nWords)
-      rows.foreach(r => graft.functions.BloomKernel.add(w,
-        org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0))))
-      Iterator.single(w)
-    }.treeReduce { (a, b) =>
-      var i = 0
-      while (i < a.length) { a(i) |= b(i); i += 1 }
-      a
-    }
-    val bc = spark.sparkContext.broadcast(bits)
+    val (benchDF, bc) = shingleBloom(s, spark,
+      shinglesOf(evalDocs).select(col("shingle")).distinct())
     val cands = docs.filter(col("doc_id") % 10 =!= 0)
       .filter(graft.functions.BloomFunctions
         .shingle_bloom_hits(TextAnalysis.tokens(col("text")), bc) > 0)
-    // Materialize the (tiny) RESULT and release benchDF's checkpoint
-    // blocks before returning — the candidatePairJaccard discipline:
-    // callers get a small self-contained relation, not a plan pinning
-    // eval-universe blocks in executor storage (and not one that dies
-    // unrecomputably if a holding executor is lost later).
-    val out = shinglesOf(cands).join(benchDF, Seq("shingle"))
+    // Materialize the (tiny) RESULT so the scope releases benchDF's
+    // blocks before returning: callers get a small self-contained
+    // relation, not a plan pinning eval-universe blocks in executor
+    // storage (and not one that dies unrecomputably if a holding
+    // executor is lost later).
+    val out = Materialize(shinglesOf(cands).join(benchDF, Seq("shingle"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint(true)
-    releaseMaterialized(benchDF)
+      .orderBy(col("doc_id")))
     // The bits broadcast is eval-universe-sized too; out is fully
     // materialized (the prefilter already ran), so destroy it now
     // rather than pinning executor blocks until GC.
@@ -329,21 +305,16 @@ object Dedup {
     * shared by the token-array path above and the shingle-array path
     * ([[rawBandsOfShingles]]) so both see the same bucket universe.
     */
-  private def cappedBandsFromRaw(raw: DataFrame): DataFrame = {
-    // Materialized via [[materializeOnce]] (r22): see its scaladoc
-    // for the measured persist-vs-localCheckpoint trade-off on this
-    // corpus-shaped (4 rows/doc) relation.
-    val bands0 = materializeOnce(raw)
+  private def cappedBandsFromRaw(raw: DataFrame): DataFrame =
+      Materialize.scoped { s =>
+    val bands0 = s(raw)
     // Bucket-size cap (see MaxBandDocs): the hot-bucket list is tiny
     // (it only holds pathological buckets) so the anti-join broadcasts.
     val hot = bands0.groupBy(col("lang"), col("band"), col("bkey"))
       .agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > MaxBandDocs)
       .select(col("lang"), col("band"), col("bkey"))
-    val capped = materializeOnce(
-      bands0.join(hot, Seq("lang", "band", "bkey"), "left_anti"))
-    releaseMaterialized(bands0)
-    capped
+    s(bands0.join(hot, Seq("lang", "band", "bkey"), "left_anti"))
   }
 
   /** Incremental LSH band-index maintenance under CDC (q251) — the
@@ -419,43 +390,72 @@ object Dedup {
     // 1.6→2.1 s, q28 1.5→1.8 s, q43 2.9→3.2 s, q229 2.1→3.7 s, q185
     // 5.0→11.3 s, with task cpu 4-6x (text serde through the exchange
     // plus the scan stats loss re-planning downstream joins).
-    val bands = cappedBands(docs)
+    verifiedBandPairs(cappedBands(docs))(verifyCandidates(docs, _))
+  }
+
+  /** The `a < b` same-(lang, band, bkey) pairs of a capped band table,
+    * verified by `verify`; the band blocks are released once the
+    * verified set is materialized.
+    */
+  private def verifiedBandPairs(bands0: DataFrame)(
+      verify: DataFrame => DataFrame): DataFrame = Materialize.scoped { s =>
+    val bands = s.hold(bands0)
     val bl = bands.select(col("doc_id").as("a"), col("lang"), col("band"), col("bkey"))
     val br = bands.select(col("doc_id").as("b"), col("lang").as("lang_b"),
       col("band").as("band_b"), col("bkey").as("bkey_b"))
-    // Cached: consumed by candDocs and by the pair semi-join below.
-    val cand = bl.join(br,
+    // Cached: consumed by candDocs and by the pair semi-join of the
+    // verification.
+    verify(bl.join(br,
         col("bkey") === col("bkey_b") && col("band") === col("band_b") &&
           col("lang") === col("lang_b") && col("a") < col("b"))
-      .select(col("a"), col("b")).distinct().cache()
-    val out = verifyCandidates(docs, cand)
-    // The verified pair set is materialized; the capped band blocks
-    // are dead — release them (the OperatorsSpec cache-hygiene bound).
-    releaseMaterialized(bands)
-    out
+      .select(col("a"), col("b")).distinct().cache())
   }
 
   /** Exact word-3-gram Jaccard verification of a cached candidate
     * pair set `(a, b)` — shared by [[candidatePairJaccard]] and
     * [[deltaNearDup]]. Returns the checkpointed `(doc_a, doc_b,
-    * jaccard)` relation and releases `cand` plus its own shingle
-    * cache.
+    * jaccard)` relation and releases `cand`.
     */
-  private def verifyCandidates(docs: DataFrame, cand: DataFrame): DataFrame = {
-    val candDocs = cand.select(col("a").as("doc_id"))
-      .union(cand.select(col("b").as("doc_id"))).distinct()
+  private def verifyCandidates(docs: DataFrame, cand: DataFrame): DataFrame =
     // Sorted shingle arrays only for candidate docs — the semi-join
     // runs BEFORE tokenization, and shingling happens ONCE per doc
     // here rather than once per pair (hub docs sit in many pairs).
+    verifyPairs(cand)(candDocs =>
+      docs.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), graft.functions.MinHashFunctions
+          .sorted_shingles(TextAnalysis.tokens(col("text"))).as("shs")))
+
+  /** [[verifyCandidates]] over an already-MATERIALIZED (doc_id, lang,
+    * shs) shingle-array relation (r22): the per-candidate
+    * sorted-shingles kernel pass disappears — candidate arrays are a
+    * broadcast semi-join against the materialized blocks. Only
+    * correct when `shArr` is materialized ([[Materialize]]):
+    * on a lazy plan the semi-join would sit ABOVE the kernel
+    * projection and shingle every document, which is exactly what
+    * [[verifyCandidates]]' join-before-kernel ordering avoids.
+    */
+  private def verifyCandidatesShingled(shArr: DataFrame,
+      cand: DataFrame): DataFrame =
+    verifyPairs(cand)(candDocs =>
+      shArr.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("shs")))
+
+  /** The verification tail both forms share: `shinglesOf(candDocs)`
+    * gives the (doc_id, shs) arrays of the candidate docs; the
+    * verified pairs are checkpointed and `cand` plus the cached
+    * arrays released.
+    */
+  private def verifyPairs(cand0: DataFrame)(
+      shinglesOf: DataFrame => DataFrame): DataFrame = Materialize.scoped { s =>
+    val cand = s.hold(cand0)
+    val candDocs = cand.select(col("a").as("doc_id"))
+      .union(cand.select(col("b").as("doc_id"))).distinct()
     // Cached: consumed by both sides of the pair join. Only the bare
     // doc_id list is hint-broadcast; the shingle table joins WITHOUT
     // a hint — candidate-sized but payload-heavy, so whether it
     // broadcasts is AQE's size-based call, never a forced
     // corpus-fraction ship to every executor.
-    val candShingles = docs.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), graft.functions.MinHashFunctions
-        .sorted_shingles(TextAnalysis.tokens(col("text"))).as("shs"))
-      .cache()
+    val candShingles = s.hold(shinglesOf(candDocs).cache())
     // Filter on the RAW kernel value: jraw > 0 iff the pair shares at
     // least one shingle — exactly the pairs the declarative
     // join-on-shared-shingle formulation (and the DuckDB oracle)
@@ -469,42 +469,9 @@ object Dedup {
       .filter(col("jraw") > 0)
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         round(col("jraw"), 6).as("jaccard"))
-    // Materialize (cuts lineage back to a leaf), then release the
-    // intermediates — nothing downstream references them anymore.
-    val out = verified.localCheckpoint(true)
-    cand.unpersist(false)
-    candShingles.unpersist(false)
-    out
-  }
-
-  /** [[verifyCandidates]] over an already-MATERIALIZED (doc_id, lang,
-    * shs) shingle-array relation (r22): the per-candidate
-    * sorted-shingles kernel pass disappears — candidate arrays are a
-    * broadcast semi-join against the materialized blocks. Only
-    * correct when `shArr` is materialized ([[materializeOnce]]):
-    * on a lazy plan the semi-join would sit ABOVE the kernel
-    * projection and shingle every document, which is exactly what
-    * [[verifyCandidates]]' join-before-kernel ordering avoids.
-    */
-  private def verifyCandidatesShingled(shArr: DataFrame,
-      cand: DataFrame): DataFrame = {
-    val candDocs = cand.select(col("a").as("doc_id"))
-      .union(cand.select(col("b").as("doc_id"))).distinct()
-    val candShingles = shArr.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("shs"))
-      .cache()
-    val verified = cand
-      .join(candShingles.select(col("doc_id").as("a"), col("shs").as("shs_a")), Seq("a"))
-      .join(candShingles.select(col("doc_id").as("b"), col("shs").as("shs_b")), Seq("b"))
-      .withColumn("jraw", graft.functions.MinHashFunctions
-        .shingle_jaccard(col("shs_a"), col("shs_b")))
-      .filter(col("jraw") > 0)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"),
-        round(col("jraw"), 6).as("jaccard"))
-    val out = verified.localCheckpoint(true)
-    cand.unpersist(false)
-    candShingles.unpersist(false)
-    out
+    // Materialize (cuts lineage back to a leaf); the scope releases
+    // the intermediates — nothing downstream references them anymore.
+    Materialize(verified)
   }
 
   /** [[candidatePairJaccardOver]] built from a MATERIALIZED shingle-
@@ -516,19 +483,9 @@ object Dedup {
     * anyway. Same bucket universe, same verification, same rows
     * (MinHashSpec pins the signature equality).
     */
-  private def candidatePairJaccardShingled(shArr: DataFrame): DataFrame = {
-    val bands = cappedBandsFromRaw(rawBandsOfShingles(shArr))
-    val bl = bands.select(col("doc_id").as("a"), col("lang"), col("band"), col("bkey"))
-    val br = bands.select(col("doc_id").as("b"), col("lang").as("lang_b"),
-      col("band").as("band_b"), col("bkey").as("bkey_b"))
-    val cand = bl.join(br,
-        col("bkey") === col("bkey_b") && col("band") === col("band_b") &&
-          col("lang") === col("lang_b") && col("a") < col("b"))
-      .select(col("a"), col("b")).distinct().cache()
-    val out = verifyCandidatesShingled(shArr, cand)
-    releaseMaterialized(bands)
-    out
-  }
+  private def candidatePairJaccardShingled(shArr: DataFrame): DataFrame =
+    verifiedBandPairs(cappedBandsFromRaw(rawBandsOfShingles(shArr)))(
+      verifyCandidatesShingled(shArr, _))
 
   /** Incremental (delta) near-dup detection (q168) — the snapshot-
     * ingest question: which NEW documents near-duplicate something
@@ -547,9 +504,10 @@ object Dedup {
     * delta. Verification is the same exact-Jaccard kernel on
     * candidates only; ≥ 0.2 is q27's near-dup bar.
     */
-  def deltaNearDup(spark: SparkSession, dir: String): DataFrame = {
+  def deltaNearDup(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     val docs = Corpus.read(spark, dir, "documents")
-    val bands = cappedBands(docs)
+    val bands = s.hold(cappedBands(docs))
     val bl = bands.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id").as("a"), col("lang"), col("band"), col("bkey"))
     val br = bands.filter(col("doc_id") % 2 === 1)
@@ -559,11 +517,7 @@ object Dedup {
         col("bkey") === col("bkey_b") && col("band") === col("band_b") &&
           col("lang") === col("lang_b"))
       .select(col("a"), col("b")).distinct().cache()
-    val out = verifyCandidates(docs, cand)
-    // Verified set materialized — release the capped band blocks
-    // (the candidatePairJaccardOver hygiene).
-    releaseMaterialized(bands)
-    out
+    verifyCandidates(docs, cand)
       .filter(col("jaccard") >= 0.2)
       .select(col("doc_a").as("base_doc"), col("doc_b").as("delta_doc"),
         col("jaccard"))
@@ -625,18 +579,6 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Connected components over the verified near-dup pair graph — the
-    * clustering step an at-scale dedup pipeline runs after pair
-    * generation (keep one representative per component). Iterative
-    * min-label propagation: each round every node adopts the smallest
-    * label among itself and its neighbors; a round is one
-    * join + aggregate over the (small) edge set plus a pointer-jumping
-    * step (rep := rep(rep)) that halves label-chain depth, so the
-    * loop converges in O(log n) rounds regardless of component
-    * diameter (long chains included). The driver only orchestrates
-    * rounds and reads one convergence count; all data work is
-    * distributed — the same shape GraphX/Pregel use.
-    */
   /** q188 constants — integer PageRank mass scale, damping as the
     * exact rational 85/100, iteration count. Shared with the oracle
     * by name.
@@ -800,22 +742,35 @@ object Dedup {
     * the checkpointed shared blocks and the bits broadcast release
     * eagerly (the decontaminateBloom hygiene).
     */
-  /** The DISTRIBUTED df ≥ 2 shared-shingle relation (localCheckpoint
-    * — never collected) plus its tree-OR-merged Bloom bits — the
+  /** The DISTRIBUTED df ≥ 2 shared-shingle relation (materialized in
+    * `s` — never collected) plus its tree-OR-merged Bloom bits — the
     * 100 TB build shared by [[dupSpansBloom]] (q190b) and
-    * [[exciseSpansBloom]] (q231b). Callers must release the
-    * checkpoint blocks and destroy the broadcast once their result
-    * materializes (the decontaminateBloom hygiene).
+    * [[exciseSpansBloom]] (q231b). Callers must destroy the broadcast
+    * once their result materializes (the decontaminateBloom hygiene).
     */
-  private def sharedShingleBloom(spark: SparkSession, docs: DataFrame)
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[Array[Long]]) = {
-    val shared = shinglesOf(docs)
+  private def sharedShingleBloom(s: Materialize.Scope, spark: SparkSession,
+      docs: DataFrame)
+      : (DataFrame, org.apache.spark.broadcast.Broadcast[Array[Long]]) =
+    shingleBloom(s, spark, shinglesOf(docs)
       .select(col("doc_id"), col("shingle")).distinct()
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2)
-      .select(col("shingle"))
-      .localCheckpoint(true)
+      .select(col("shingle")))
+
+  /** A one-column shingle relation materialized in `s` — consumed by
+    * the sizing count, the distributed bit build, and the caller's
+    * exact verification join — plus its broadcast Bloom bits.
+    */
+  private def shingleBloom(s: Materialize.Scope, spark: SparkSession,
+      shingles: DataFrame)
+      : (DataFrame, org.apache.spark.broadcast.Broadcast[Array[Long]]) = {
+    val shared = s(shingles)
     val nWords = graft.functions.BloomKernel.wordsFor(shared.count())
+    // Per-partition build + tree OR-merge: each task ALLOCATES its
+    // array fresh (only the int size rides the closure) — an
+    // aggregate with an array zero-value would deserialize a full
+    // bit-array copy per task, multiplying executor memory by the
+    // task count at exactly the scale this path exists for.
     val bits = shared.rdd.mapPartitions { rows =>
       val w = new Array[Long](nWords)
       rows.foreach(r => graft.functions.BloomKernel.add(w,
@@ -850,13 +805,12 @@ object Dedup {
       .distinct()
   }
 
-  def dupSpansBloom(spark: SparkSession, dir: String): DataFrame = {
+  def dupSpansBloom(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     val docs = Corpus.read(spark, dir, "documents")
-    val (shared, bc) = sharedShingleBloom(spark, docs)
-    val covered = verifiedCoveredPositions(docs, shared, bc)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("covered"))
-      .localCheckpoint(true)
-    checkpointRdd(shared).foreach(_.unpersist(false))
+    val (shared, bc) = sharedShingleBloom(s, spark, docs)
+    val covered = Materialize(verifiedCoveredPositions(docs, shared, bc)
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("covered")))
     bc.destroy()
     docs
       .select(col("doc_id"),
@@ -880,14 +834,13 @@ object Dedup {
     * oracle: FPs die at the verification join, so the position sets
     * are exactly the exact-set leg's.
     */
-  def exciseSpansBloom(spark: SparkSession, dir: String): DataFrame = {
+  def exciseSpansBloom(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     val docs = Corpus.read(spark, dir, "documents")
-    val (shared, bc) = sharedShingleBloom(spark, docs)
-    val covArr = verifiedCoveredPositions(docs, shared, bc)
+    val (shared, bc) = sharedShingleBloom(s, spark, docs)
+    val covArr = Materialize(verifiedCoveredPositions(docs, shared, bc)
       .groupBy(col("doc_id"))
-      .agg(collect_list(col("p")).as("cov"))
-      .localCheckpoint(true)
-    checkpointRdd(shared).foreach(_.unpersist(false))
+      .agg(collect_list(col("p")).as("cov")))
     bc.destroy()
     docs
       .withColumn("toks", TextAnalysis.tokens(col("text")))
@@ -926,43 +879,57 @@ object Dedup {
     * Scale: per round = one co-partitioned join (pr ⋈ edges on the
     * node key) + one map-side-combinable sum — the CC shape with a
     * value instead of a min-label; rounds are fixed, state one long
-    * per node, localCheckpoint truncates lineage per round (the
+    * per node, each round materialized (lineage truncated — the
     * trainedCentroids move). Output: (node, deg, pr).
     */
-  def integerPageRank(pairs: DataFrame): DataFrame = {
+  def integerPageRank(pairs: DataFrame): DataFrame = Materialize.scoped { s =>
     val p = pairs.toDF("a", "b", "w")
-    val edges = p.select(col("a").as("src"), col("b").as("dst"), col("w"))
+    val edges = s(p.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .unionByName(
-        p.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      .localCheckpoint(true)
+        p.select(col("b").as("src"), col("a").as("dst"), col("w"))))
     val deg = edges.groupBy(col("src"))
       .agg(count(lit(1)).as("deg"), sum(col("w")).as("wsum"))
     val nRow = deg.agg(count(lit(1)).as("n"))
-    var pr = deg.select(col("src").as("node"), col("deg"), col("wsum"))
+    val pr0 = s(deg.select(col("src").as("node"), col("deg"), col("wsum"))
       .crossJoin(broadcast(nRow))
       .select(col("node"), col("deg"), col("wsum"), col("n"),
-        expr(s"$PrScale div n").as("pr"))
-      .localCheckpoint(true)
-    for (_ <- 1 to PrIters) {
+        expr(s"$PrScale div n").as("pr")))
+    val (pr, _) = s.rounds("integerPageRank", pr0, PrIters)(Seq(_)) {
+        (pr, round) =>
       val contrib = pr
         .join(edges, pr("node") === edges("src"))
         .select(col("dst"), expr("(pr * w) div wsum").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-      pr = pr.select(col("node"), col("deg"), col("wsum"), col("n"))
+      (s(pr.select(col("node"), col("deg"), col("wsum"), col("n"))
         .join(contrib, pr("node") === contrib("dst"))
         .select(col("node"), col("deg"), col("wsum"), col("n"),
           expr(s"($PrScale * 15 div 100) div n + inflow * 85 div 100")
-            .as("pr"))
-        .localCheckpoint(true)
+            .as("pr"))), round + 1 < PrIters)
     }
     pr.select(col("node"), col("deg"), col("pr"))
   }
 
+  /** Connected components over the verified near-dup pair graph — the
+    * clustering step an at-scale dedup pipeline runs after pair
+    * generation (keep one representative per component). Iterative
+    * min-label propagation: each round every node adopts the smallest
+    * label among itself and its neighbors; a round is one
+    * join + aggregate over the (small) edge set plus a pointer-jumping
+    * step (rep := rep(rep)) that halves label-chain depth, so the
+    * loop converges in O(log n) rounds regardless of component
+    * diameter (long chains included). The driver only orchestrates
+    * rounds and reads one convergence count; all data work is
+    * distributed — the same shape GraphX/Pregel use.
+    */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    connectedComponents(minhashLshPairs(spark, dir)
+      Materialize.scoped { s =>
+    // The verified pairs are dead once the components materialize.
+    connectedComponents(s.hold(candidatePairJaccard(spark, dir))
+      .filter(col("jaccard") >= 0.2)
       .select(col("doc_a").as("a"), col("doc_b").as("b")))
       .select(col("id").as("doc_id"), col("rep").as("cluster_rep"))
       .orderBy(col("doc_id"))
+  }
 
   /** Canonical-survivor selection (q135) — the policy step after
     * clustering that actually DEDUPES: per near-dup cluster keep one
@@ -1049,91 +1016,18 @@ object Dedup {
     * rounds regardless of component diameter (CcSpec drives a
     * 200-node chain through it).
     */
-  /** The persisted RDD behind a `localCheckpoint(true)`'d Dataset —
-    * its logical plan is a `LogicalRDD` leaf wrapping the
-    * materialized blocks. Holding this handle lets the loop release a
-    * superseded round's storage EAGERLY via `RDD.unpersist` instead
-    * of waiting for GC + ContextCleaner (`Dataset.unpersist` is a
-    * no-op here: it only evicts CacheManager entries, and checkpoint
-    * blocks live as persisted RDD blocks).
-    */
-  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    connectedComponentsRounds(pairs)._1
 
-  /** Materialize a multi-consumer derived relation ONCE so every
-    * consumer reads the built blocks instead of re-evaluating the
-    * upstream kernel (Spark has no common-subplan dedup).
-    *
-    * Primitive choice (r22, VERDICT #2 — MEASURED both directions):
-    * the lineage-preserving alternative, `persist(MEMORY_AND_DISK_SER)`
-    * + eager count, was implemented first exactly as the verdict
-    * asked and benched same-session at sf0.1/local[32]: the SQL
-    * columnar cache's encode+decode multiplied task cpu 1.5–6×
-    * on the string-heavy relations this helper guards — q185
-    * cpu 2.7→15.7 s (wall 3.2→5.8), q79 4.2→10.5 (4.0→5.3), q226
-    * 3.1→5.1 (3.1→5.7), q73 1.0→1.3 (1.4→1.9) — so it was reverted
-    * to `localCheckpoint(true)`, which stores plain UnsafeRow blocks.
-    * What remains of the verdict's scale-safety ask, stated honestly:
-    * localCheckpoint's default level is disk-backed (MEMORY_AND_DISK
-    * via `LocalRDDCheckpointData.transformStorageLevel`), so blocks
-    * SPILL rather than pin executor memory at scale; the residual
-    * limitation is executor-loss/downscale unrecoverability
-    * mid-query (truncated lineage cannot recompute a lost block) —
-    * acceptable for a per-query intermediate that is rebuilt on
-    * retry, and the price of not paying the measured columnar-cache
-    * cpu on every consumer. Bounded relations (vocab tables,
-    * verified pair sets) and ITERATIVE loops
-    * ([[connectedComponents]], BPE rounds — whose point is lineage
-    * TRUNCATION) use localCheckpoint directly.
-    */
-  private[graft] def materializeOnce(df: DataFrame): DataFrame =
-    df.localCheckpoint(true)
-
-  /** Release a [[materializeOnce]]d relation's storage, whichever
-    * primitive produced it: evicts a CacheManager entry if one
-    * exists and unpersists checkpoint block RDDs. Safe on any plan.
-    */
-  private[graft] def releaseMaterialized(df: DataFrame): Unit = {
-    df.unpersist(false)
-    checkpointRdd(df).foreach(_.unpersist(false))
-  }
-
-  // NO AQE-off child session for the iterative loops (r22, VERDICT
-  // #6 — measured and REVERTED): running q108b/q146/q204's rounds on
-  // an isolated session with spark.sql.adaptive.enabled=false
-  // ("static round plans") made every round pay the full static
-  // shuffle-partition fan-out that AQE's partition coalescing had
-  // been collapsing to 1-2 post-shuffle partitions: q108b 4.2→6.3 s
-  // wall with task cpu 4.8→79.5 s, q146 1.9→4.2 (cpu 1.7→20.6),
-  // q204 1.7→4.9 (cpu 3.7→11.0) at sf0.1/local[32]. AQE's per-round
-  // re-planning is not overhead here — it IS the mechanism keeping
-  // tiny frontier rounds tiny.
-
-  /** Rounds the last [[connectedComponents]] call took — exposed so
-    * CcSpec can assert the O(log n) bound DIRECTLY (a 200-node chain
-    * in ≤ 9 rounds), not just infer it from the 64-round guard.
-    */
-  @volatile private[graft] var lastRounds: Int = 0
-
-  def connectedComponents(pairs: DataFrame): DataFrame = {
+  /** [[connectedComponents]] and the number of rounds it ran. */
+  private[graft] def connectedComponentsRounds(
+      pairs: DataFrame): (DataFrame, Int) = Materialize.scoped { s =>
     // Only the symmetrized edge view — read every round — needs a
     // cache (callers pass small materialized pair sets).
     val p = pairs.select(col("a"), col("b"))
-    val edges = p.union(p.select(col("b").as("a"), col("a").as("b")))
-      .cache()
+    val edges = s.hold(p.union(p.select(col("b").as("a"), col("a").as("b")))
+      .cache())
     val nodes = edges.select(col("a").as("doc_id")).distinct()
-    // Iterative DataFrames MUST truncate lineage every round: labels
-    // is referenced ~3× per round, so the logical plan grows
-    // geometrically and Catalyst re-analysis hangs the driver within
-    // a few rounds. localCheckpoint(eager = true) materializes the
-    // round AND cuts the plan back to a leaf — the standard
-    // iterative-algorithm idiom.
-    var labels = nodes.withColumn("rep", col("doc_id"))
-      .localCheckpoint(true)
-    var labelsRdd = checkpointRdd(labels)
-    var converged = false
     // Labels are per-node non-increasing longs, so the label SUM is a
     // strictly decreasing convergence witness: a round changed
     // nothing iff the sum is unchanged. Observing the sum instead of
@@ -1141,10 +1035,16 @@ object Dedup {
     // per round (no `old` column to carry). Decimal(38,0) keeps the
     // sum exact at any node count × id range.
     var prevSum: java.math.BigDecimal = null
-    // log2(n) pointer-jumping rounds always suffice; the generous cap
-    // is an infinite-loop guard, not a correctness bound.
-    var rounds = 0
-    while (!converged && rounds < 64) {
+    // Every round is materialized: labels is referenced ~3× per
+    // round, so an untruncated plan grows geometrically and Catalyst
+    // re-analysis hangs the driver within a few rounds. log2(n)
+    // pointer-jumping rounds always suffice; the generous cap is an
+    // infinite-loop guard, not a correctness bound. AQE stays on: its
+    // partition coalescing keeps the tiny rounds tiny
+    // (OPTIMIZATION_r22.md #6).
+    val (labels, rounds) = s.rounds("connectedComponents",
+        s(nodes.withColumn("rep", col("doc_id"))), 64)(Seq(_)) {
+        (labels, round) =>
       // One round = min over {self label} ∪ {neighbor labels} (the
       // self-union replaces a labels⋈min-table join — union feeds the
       // same hash aggregate for free), then one pointer-jump hop
@@ -1160,37 +1060,20 @@ object Dedup {
         .groupBy(col("doc_id")).agg(min(col("nrep")).as("rep"))
       val repOfRep = labels
         .select(col("doc_id").as("rep"), col("rep").as("rep2"))
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$rounds")
-      val stepped = minned.join(repOfRep, Seq("rep"), "left")
+      val obs = org.apache.spark.sql.Observation(s"cc_round_$round")
+      val stepped = s(minned.join(repOfRep, Seq("rep"), "left")
         .select(col("doc_id"),
           least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"))
-        .observe(obs, sum(col("rep").cast("decimal(38,0)")).as("label_sum"))
-        .localCheckpoint(true)
+        .observe(obs, sum(col("rep").cast("decimal(38,0)")).as("label_sum")))
       val sum0 = obs.get("label_sum").asInstanceOf[java.math.BigDecimal]
       // sum over zero rows observes null: an empty node set is
       // trivially converged.
-      converged = sum0 == null ||
+      val converged = sum0 == null ||
         (prevSum != null && prevSum.compareTo(sum0) == 0)
       prevSum = sum0
-      // The new round is materialized; the superseded round's blocks
-      // are dead — release them now instead of waiting for GC. Spark
-      // WARNs that a locally-checkpointed RDD cannot be recomputed
-      // after unpersist; that is the point — nothing references it.
-      labelsRdd.foreach(_.unpersist(false))
-      labels = stepped
-      labelsRdd = checkpointRdd(stepped)
-      rounds += 1
+      (stepped, !converged)
     }
-    if (!converged)
-      System.err.println(s"[connectedComponents] round cap hit after $rounds rounds")
-    lastRounds = rounds
-    if (sys.env.contains("GRAFT_CC_LOG"))
-      System.err.println(s"[connectedComponents] converged in $rounds rounds")
-    val out = labels.select(col("doc_id").as("id"), col("rep"))
-      .localCheckpoint(true)
-    labelsRdd.foreach(_.unpersist(false))
-    edges.unpersist(false)
-    out
+    (Materialize(labels.select(col("doc_id").as("id"), col("rep"))), rounds)
   }
 
   /** Embedding-cosine near-duplicate pairs (sim ≥ 0.35 on this random
@@ -1262,20 +1145,20 @@ object Dedup {
     * float ratio to disagree on). All stages are narrow-row shuffle
     * joins on shingle / doc_id keys plus map-side-combinable counts.
     */
-  def containmentPairs(spark: SparkSession, dir: String): DataFrame = {
+  def containmentPairs(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     // Materialized ONCE (r22, the recallCurveOver pattern): the
     // shingle explode+distinct kernel used to re-evaluate on the
     // 1-task scan under FOUR consumers — the df-cap aggregate, the
     // sizes aggregate, and both self-join sides (same-session task
     // cpu 5.4 → 2.9 s at sf0.1; the plan's parquet-scan subtree
     // count drops 24 → 0, plans/r22/q89).
-    val sh = materializeOnce(shinglesOf(Corpus.read(spark, dir, "documents")))
+    val sh = s(shinglesOf(Corpus.read(spark, dir, "documents")))
     val keep = sh.groupBy(col("shingle"))
       .agg(count(lit(1)).as("dfreq"))
       .filter(col("dfreq") <= ContainDfCap)
       .select(col("shingle"))
-    val f = materializeOnce(sh.join(keep, "shingle"))
-    releaseMaterialized(sh)
+    val f = s(sh.join(keep, "shingle"))
     val sizes = f.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
       .filter(col("n_sh") >= ContainMinShingles)
     val common = f.as("x")
@@ -1448,7 +1331,7 @@ object Dedup {
         .cast("long") < RecallSampleBound))
 
   private def recallCurveOver(spark: SparkSession,
-      docs0: DataFrame): DataFrame = {
+      docs0: DataFrame): DataFrame = Materialize.scoped { s =>
     // NOT spread — see [[candidatePairJaccardOver]] (r21: q226 wall
     // flat with 6x cpu, q229 2.1→3.7 s).
     val docs = docs0
@@ -1461,7 +1344,7 @@ object Dedup {
     // the query ran THREE serialized corpus kernel passes on the
     // 1-task scan: minhash signature, candidate shingling, truth
     // shingling.
-    val shArr = materializeOnce(docs.select(col("doc_id"), col("lang"),
+    val shArr = s(docs.select(col("doc_id"), col("lang"),
       graft.functions.MinHashFunctions.sorted_shingles(
         TextAnalysis.tokens(col("text"))).as("shs")))
     // The LSH side (banding → candidates → verification) and the
@@ -1470,7 +1353,8 @@ object Dedup {
     // CONCURRENTLY (guide §2.6 — overlap independent jobs; Spark's
     // scheduler interleaves them and the truth side back-fills the
     // LSH side's stage tails). Job submission is thread-safe; the
-    // Await rethrows any side's failure.
+    // Await rethrows any side's failure, and a failing truth side
+    // waits for the LSH side so the scope releases shArr last.
     val lshF = scala.concurrent.Future(candidatePairJaccardShingled(shArr))(
       scala.concurrent.ExecutionContext.global)
     // Truth-side explode, derived from the materialized arrays — its
@@ -1485,10 +1369,11 @@ object Dedup {
       .agg(count(lit(1)).as("dfreq"))
       .filter(col("dfreq") <= RecallTruthDfCap)
       .select(col("shingle"))
-    val sh = materializeOnce(sh0.join(keep, Seq("shingle")))
+    val sh = try s(sh0.join(keep, Seq("shingle")))
+      finally scala.concurrent.Await.ready(lshF,
+        scala.concurrent.duration.Duration.Inf): Unit
     val lsh = scala.concurrent.Await.result(lshF,
       scala.concurrent.duration.Duration.Inf)
-    releaseMaterialized(shArr)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val common = sh.select(col("doc_id").as("a"), col("lang"),
         col("shingle"))

@@ -498,7 +498,8 @@ object Events {
     * the corpus side; sketches are transparent `array<bigint>`
     * columns; union re-aggregation is the q166 warehouse contract.
     */
-  def thetaIntersections(spark: SparkSession, dir: String): DataFrame = {
+  def thetaIntersections(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     import graft.functions.ThetaSketch._
     // Per-DAY audiences, paired consecutive days: the fixture's
     // event-type audiences overlap COMPLETELY (every type reaches
@@ -509,11 +510,11 @@ object Events {
     // paid ~3.3 s re-deriving this distinct for the sketch aggregate
     // and again for the exact twin): persist the (day, user)
     // collapse, eagerly materialize the two ≤days-row leg outputs,
-    // release the cache, and return a trivial join over them — the
-    // cache-release discipline candidatePairJaccard uses.
-    val ut = Corpus.events(spark, dir)
+    // and return a trivial join over them — the scope releases the
+    // collapse, which the result no longer reads.
+    val ut = s.hold(Corpus.events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      .persist()
+      .persist())
     // Native DataSketches Theta (Spark 4.1 ships theta_sketch_agg /
     // theta_union / theta_intersection / theta_difference): the
     // production sketch column, validated alongside the transparent
@@ -523,15 +524,14 @@ object Events {
     // the method-local ThetaSketch._ import shadows them, so the
     // native ones are reached via the F alias.)
     val F = org.apache.spark.sql.functions
-    val sk = ut.groupBy(col("day"))
+    // Eager, ≤days rows (sketch arrays bounded by 2k+4 longs):
+    // materializes from the cached collapse, truncates lineage so the
+    // final join never re-reads the corpus.
+    val sk = Materialize(ut.groupBy(col("day"))
       .agg(theta_sketch_agg(positionOf(col("user_id")), 4096).as("sk_hi"),
         theta_sketch_agg(positionOf(col("user_id")), 128).as("sk_lo"),
         F.theta_sketch_agg(col("user_id"), 12).as("sk_nat"),
-        countDistinct(col("user_id")).as("nd"))
-      // Eager, ≤days rows (sketch arrays bounded by 2k+4 longs):
-      // materializes from the cached collapse, truncates lineage so
-      // the final join never re-reads the corpus.
-      .localCheckpoint()
+        countDistinct(col("user_id")).as("nd")))
     val pairs = sk.as("x").join(sk.as("y"),
         col("y.day") === date_add(col("x.day"), 1))
       .select(col("x.day").as("day_a"),
@@ -553,13 +553,11 @@ object Events {
           .as("lo_inter"),
         theta_estimate(theta_union(col("x.sk_lo"), col("y.sk_lo"), 128),
           128).as("lo_union"))
-    val exact = ut.as("a").join(ut.as("b"),
+    val exact = Materialize(ut.as("a").join(ut.as("b"),
         col("a.user_id") === col("b.user_id") &&
           col("b.day") === date_add(col("a.day"), 1))
       .groupBy(col("a.day").as("day_a"), col("b.day").as("day_b"))
-      .agg(count(lit(1)).as("exact_inter"))
-      .localCheckpoint() // eager, ≤days rows — see sk above
-    ut.unpersist(false)  // both legs materialized; release the collapse
+      .agg(count(lit(1)).as("exact_inter"))) // ≤days rows — see sk above
     pairs.join(exact, Seq("day_a", "day_b"))
       .withColumn("exact_anotb", col("nd_a") - col("exact_inter"))
       .withColumn("exact_union",
@@ -603,25 +601,24 @@ object Events {
     * 100 TB the twin drops and the sketch warehouse IS the path —
     * per-week partials are ≤ 7 bounded sketch arrays.
     */
-  def thetaWeeklyRollup(spark: SparkSession, dir: String): DataFrame = {
+  def thetaWeeklyRollup(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     import graft.functions.ThetaSketch.{positionOf, theta_estimate}
     val F = org.apache.spark.sql.functions
     val weekExpr = "CAST(datediff(day, DATE'1970-01-01') div 7 AS BIGINT)"
-    val ut = Corpus.events(spark, dir)
+    val ut = s.hold(Corpus.events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      .persist()
-    val daily = ut.groupBy(col("day"))
+      .persist())
+    // Eager, ≤days rows — the q257 discipline.
+    val daily = Materialize(ut.groupBy(col("day"))
       .agg(graft.functions.ThetaSketch
           .theta_sketch_agg(positionOf(col("user_id")), 4096).as("sk_hi"),
         graft.functions.ThetaSketch
           .theta_sketch_agg(positionOf(col("user_id")), 128).as("sk_lo"),
-        F.theta_sketch_agg(col("user_id"), 12).as("sk_nat"))
-      .localCheckpoint() // eager, ≤days rows — the q257 discipline
-    val exact = ut.select(expr(weekExpr).as("week"), col("user_id"))
+        F.theta_sketch_agg(col("user_id"), 12).as("sk_nat")))
+    val exact = Materialize(ut.select(expr(weekExpr).as("week"), col("user_id"))
       .distinct()
-      .groupBy(col("week")).agg(count(lit(1)).as("exact_nd"))
-      .localCheckpoint()
-    ut.unpersist(false)
+      .groupBy(col("week")).agg(count(lit(1)).as("exact_nd")))
     val rolled = daily.withColumn("week", expr(weekExpr))
       .groupBy(col("week"))
       .agg(count(lit(1)).as("n_days"),

@@ -1648,10 +1648,9 @@ object Relational {
     * emulation: a driver loop of frontier expansion →
     * dropDuplicates → anti-join against the accumulated result
     * (exactly PG's "append only rows not already present"
-    * contract), lineage-truncated per round with
-    * localCheckpoint(true) like [[Dedup.connectedComponents]], the
-    * new-row count observed DURING the checkpoint job so each round
-    * is one Spark job.
+    * contract), each round materialized like
+    * [[Dedup.connectedComponents]], the new-row count observed
+    * DURING the checkpoint job so each round is one Spark job.
     *
     * The fixture DAG has two parent edges per key — k div 2 and
     * k div 3 — so every node's ancestor walk collapses onto 1
@@ -1678,8 +1677,7 @@ object Relational {
     closureDistinctLoop(
       Corpus.read(spark, dir, "customer")
         .select(col("c_custkey").cast("long").as("node"))
-        .select(col("node"), col("node").as("anc"))
-        .localCheckpoint(true),
+        .select(col("node"), col("node").as("anc")),
       // 2-step composition is the measured optimum: adding the
       // 3-step divisors {8,12,18,27} cut rounds to ~5 but the extra
       // candidate volume cancelled the saving (4.17 s vs 3.88 s).
@@ -1711,8 +1709,7 @@ object Relational {
     closureDistinctLoop(
       Corpus.read(spark, dir, "customer")
         .select(pmod(col("c_custkey"), lit(101L)).as("node")).distinct()
-        .select(col("node"), col("node").as("anc"))
-        .localCheckpoint(true),
+        .select(col("node"), col("node").as("anc")),
       // 1-step AND its composition (5(5a+3)+3 = 25a+18 mod 101) per
       // round — the q108b move: identical fixpoint, the 25-cycle
       // closes in ~13 rounds instead of 25.
@@ -1740,54 +1737,29 @@ object Relational {
     * symlink/redirect resolution) work is Σ walk lengths = O(n ×
     * cycle bound) with rounds = longest walk; rows are
     * (depth)-bounded tuples and each round is one distributed job
-    * with the eager-unpersist discipline of [[closureDistinctLoop]].
+    * on the [[Materialize]] round loop, like [[closureDistinctLoop]].
     * On general DAGs path enumeration is inherently exponential —
     * that is PG's semantics too; the UNION-distinct closure (q108b)
     * is the scale form when only reachability is asked.
     */
-  def cyclePathWalk(spark: SparkSession, dir: String): DataFrame = {
-    val base = Corpus.read(spark, dir, "customer")
-      .select(pmod(col("c_custkey"), lit(101L)).as("start")).distinct()
-      .select(col("start"), col("start").as("cur"),
-        lit(0L).as("depth"), array(col("start")).as("path"),
-        lit(false).as("is_cycle"))
-      .localCheckpoint(true)
-    var acc = base
-    var frontier = base
-    var accRdd = Dedup.checkpointRdd(acc)
-    var frontierRdd = accRdd
-    var added = 1L
-    var rounds = 0
-    while (added > 0 && rounds < 64) {
-      val obs = org.apache.spark.sql.Observation(s"cycle_round_$rounds")
-      val next = frontier.filter(!col("is_cycle"))
+  def cyclePathWalk(spark: SparkSession, dir: String): DataFrame =
+    frontierLoop("cyclePathWalk", Corpus.read(spark, dir, "customer")
+        .select(pmod(col("c_custkey"), lit(101L)).as("start")).distinct()
+        .select(col("start"), col("start").as("cur"),
+          lit(0L).as("depth"), array(col("start")).as("path"),
+          lit(false).as("is_cycle"))) { (frontier, _) =>
+      frontier.filter(!col("is_cycle"))
         .select(col("start"),
           pmod(col("cur") * 5 + 3, lit(101L)).as("cur"),
           (col("depth") + 1).as("depth"), col("path"))
         .select(col("start"), col("cur"), col("depth"),
           concat(col("path"), array(col("cur"))).as("path"),
           array_contains(col("path"), col("cur")).as("is_cycle"))
-        .observe(obs, count(lit(1)).as("n_new"))
-        .localCheckpoint(true)
-      added = Option(obs.get("n_new")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (added > 0) {
-        acc = acc.union(next).localCheckpoint(true)
-        val nextRdd = Dedup.checkpointRdd(next)
-        accRdd.foreach(_.unpersist(false))
-        frontierRdd.filterNot(r => accRdd.exists(_ eq r))
-          .foreach(_.unpersist(false))
-        accRdd = Dedup.checkpointRdd(acc)
-        frontierRdd = nextRdd
-        frontier = next
-      }
-      rounds += 1
-    }
-    acc.select(col("start"), col("depth"), col("cur"),
+    }.select(col("start"), col("depth"), col("cur"),
         col("is_cycle").cast("long").as("is_cycle"),
         expr("md5(concat_ws('->', transform(path, x -> cast(x AS string))))")
           .as("path_fp"))
       .orderBy(col("start"), col("depth"))
-  }
 
   /** The shared UNION-distinct frontier loop: expand the frontier,
     * drop in-round duplicates, anti-join against everything already
@@ -1796,7 +1768,21 @@ object Relational {
     * to candidate facts.
     */
   private def closureDistinctLoop(base: DataFrame,
-      expand: DataFrame => DataFrame): DataFrame = {
+      expand: DataFrame => DataFrame): DataFrame =
+    frontierLoop("closureDistinctLoop", base) { (frontier, reached) =>
+      expand(frontier)
+        .dropDuplicates("node", "anc")
+        .join(reached, Seq("node", "anc"), "left_anti")
+    }.orderBy(col("node"), col("anc"))
+
+  /** The driver loop behind the recursive-CTE emulations: each round
+    * derives the next frontier from (frontier, everything reached)
+    * and appends it; an empty frontier ends the loop. Returns the
+    * materialized accumulated rows.
+    */
+  private def frontierLoop(name: String, base: DataFrame)(
+      next: (DataFrame, DataFrame) => DataFrame): DataFrame =
+      Materialize.scoped { s =>
     // The accumulated result is RE-MATERIALIZED (union + checkpoint)
     // each round rather than kept as a lazy union over the per-round
     // deltas: both shapes are O(depth × output) total I/O (write
@@ -1804,55 +1790,24 @@ object Relational {
     // and the compact single-table build measured ~20% faster here
     // (4.6 s vs 5.5-5.7 s at sf0.1) because the anti-join's build
     // side stays one co-partitioned table instead of a
-    // rounds-deep union.
-    var reached = base
-    var frontier = base
-    // Checkpoint-block handles for EAGER release (the
-    // [[Dedup.connectedComponents]] pattern): each round supersedes
-    // the previous round's `reached` and `frontier` blocks, and
-    // without an explicit `RDD.unpersist` they sit in the block
-    // manager until session end — O(depth × output) storage for a
-    // loop whose live state is O(output).
-    var reachedRdd = Dedup.checkpointRdd(reached)
-    var frontierRdd = reachedRdd
-    var newRows = 1L
-    var rounds = 0
+    // rounds-deep union. The round loop releases each superseded
+    // `reached` and `frontier`, so storage stays O(output).
+    val base0 = s(base)
     // Rounds = closure depth (log₂(max key) for the ancestor DAG,
     // the cycle length for the modular fixture); 64 is an
-    // infinite-loop guard, not a correctness bound.
-    while (newRows > 0 && rounds < 64) {
-      val obs = org.apache.spark.sql.Observation(s"closure_round_$rounds")
-      val next = expand(frontier)
-        .dropDuplicates("node", "anc")
-        .join(reached, Seq("node", "anc"), "left_anti")
-        .observe(obs, count(lit(1)).as("n_new"))
-        .localCheckpoint(true)
-      newRows = Option(obs.get("n_new")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (newRows > 0) {
-        reached = reached.union(next).localCheckpoint(true)
-        // The new accumulated table is materialized; the old one and
-        // the old frontier (round 0: the same base RDD — unpersist
-        // once) are no longer referenced by anything downstream.
-        val nextRdd = Dedup.checkpointRdd(next)
-        reachedRdd.foreach(_.unpersist(false))
-        frontierRdd.filterNot(r => reachedRdd.exists(_ eq r))
-          .foreach(_.unpersist(false))
-        reachedRdd = Dedup.checkpointRdd(reached)
-        frontierRdd = nextRdd
-        frontier = next
-      } else {
-        // Converged: the empty delta's checkpoint is dead on arrival.
-        Dedup.checkpointRdd(next).foreach(_.unpersist(false))
-      }
-      rounds += 1
-    }
-    // The last frontier's rows are a subset of `reached` (already
-    // unioned in); only the final accumulated table stays persisted.
-    frontierRdd.filterNot(r => reachedRdd.exists(_ eq r))
-      .foreach(_.unpersist(false))
-    if (newRows > 0)
-      System.err.println(s"[closureDistinctLoop] round cap hit at $rounds")
-    reached.orderBy(col("node"), col("anc"))
+    // infinite-loop guard, not a correctness bound. The new-row
+    // count is observed DURING the checkpoint job, so each round is
+    // one Spark job.
+    s.rounds(name, (base0, base0), 64) {
+        case (reached, frontier) => Seq(reached, frontier) } {
+        case ((reached, frontier), round) =>
+      val obs = org.apache.spark.sql.Observation(s"${name}_round_$round")
+      val added = s(next(frontier, reached)
+        .observe(obs, count(lit(1)).as("n_new")))
+      if (Option(obs.get("n_new")).exists(_.asInstanceOf[Long] > 0))
+        ((s(reached.union(added)), added), true)
+      else ((reached, frontier), false)
+    }._1._1
   }
 
   /** QUALIFY semantics (q149) — the post-window filter clause PG
@@ -2265,8 +2220,8 @@ object Relational {
     val docs = Corpus.read(spark, dir, "documents")
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val d0 = cdcDeltaOf(docs, maxId)
-    val delta = CdcDelta(d0.deletes.localCheckpoint(),
-      d0.revised.localCheckpoint(), d0.inserted.localCheckpoint())
+    val delta = CdcDelta(Materialize(d0.deletes),
+      Materialize(d0.revised), Materialize(d0.inserted))
     def fpAgg(renderSql: String) = expr(
       s"bit_xor(cast(conv(substring(md5($renderSql), 1, 15), 16, 10)" +
         " as bigint))")

@@ -163,28 +163,25 @@ object Similarity {
     * trajectory).
     */
   def trainedCentroids(spark: SparkSession, dir: String,
-      ncells: Int = 16, iters: Int = 2): DataFrame = {
+      ncells: Int = 16, iters: Int = 2): DataFrame = Materialize.scoped { s =>
     val e = Corpus.read(spark, dir, "embeddings")
-    var cents = firstNCentroids(e, ncells)
-    for (_ <- 1 to iters) {
-      val assign = cellAssignmentsFor(e, cents)
-      cents = assign.join(e, Seq("vec_id"))
+    // MATERIALIZE each round (ncells rows — pennies): downstream
+    // consumers reference the fitted centroids more than once
+    // (ivfSearch scores AND assigns against them; SemDedup joins
+    // through them), and without truncation every reference
+    // re-executes the whole training chain — at corpus scale that is
+    // iters extra full scans per reference. Same move as
+    // connectedComponents' per-round checkpoint.
+    s.rounds("trainedCentroids", firstNCentroids(e, ncells), iters)(Seq(_)) {
+        (cents, iter) =>
+      (s(cellAssignmentsFor(e, cents).join(e, Seq("vec_id"))
         .select(col("cid"), posexplode(col("embedding")).as(Seq("i", "v")))
         .groupBy(col("cid"), col("i"))
         .agg(round(avg(col("v").cast("double")), 6).as("mv"))
         .groupBy(col("cid"))
         .agg(expr("transform(array_sort(collect_list(struct(i, mv)))," +
-          " x -> CAST(x.mv AS FLOAT))").as("ce"))
-        // MATERIALIZE each round (ncells rows — pennies): downstream
-        // consumers reference the fitted centroids more than once
-        // (ivfSearch scores AND assigns against them; SemDedup joins
-        // through them), and without truncation every reference
-        // re-executes the whole training chain — at corpus scale
-        // that is iters extra full scans per reference. Same move as
-        // connectedComponents' per-round checkpoint.
-        .localCheckpoint(true)
-    }
-    cents
+          " x -> CAST(x.mv AS FLOAT))").as("ce"))), iter + 1 < iters)
+    }._1
   }
 
   /** [[ivfTopK]] with k-means-trained centroids (q31c). nprobe
@@ -473,17 +470,18 @@ object Similarity {
     * the injected rewrite.
     */
   def clusterTopicTerms(spark: SparkSession, dir: String, k: Int = 3,
-      ncells: Int = 16, iters: Int = 2): DataFrame = {
+      ncells: Int = 16, iters: Int = 2): DataFrame = Materialize.scoped { s =>
     val e = Corpus.read(spark, dir, "embeddings")
     // Materialized ONCE (r22, the cappedBands pattern): the cell
     // assignment kernel feeds the cell-terms join AND the cell-sizes
     // aggregate; the tokenize+explode feeds the cell-terms join AND
     // the corpus-frequency aggregate — each used to re-evaluate its
-    // whole upstream per consumer on the 1-task scans.
-    val cells = Dedup.materializeOnce(
-      cellAssignmentsFor(e, trainedCentroids(spark, dir, ncells, iters)))
+    // whole upstream per consumer on the 1-task scans. The centroids
+    // are dead once the cells are.
+    val cells = Materialize(cellAssignmentsFor(e,
+      s.hold(trainedCentroids(spark, dir, ncells, iters))))
     val docs = Corpus.read(spark, dir, "documents")
-    val docTerms = Dedup.materializeOnce(docs.select(col("doc_id"),
+    val docTerms = Materialize(docs.select(col("doc_id"),
       explode(array_distinct(TextAnalysis.tokens(col("text")))).as("term")))
     val cellTerms = docTerms
       .join(cells, docTerms("doc_id") === cells("vec_id"))
@@ -864,15 +862,14 @@ object Similarity {
     val subs = pqSubRows(e)
     val init = pqSubRows(e.filter(col("vec_id") < PqK))
       .select(col("m"), col("vec_id").as("cid"), col("sub").as("ce"))
-    val trained = pqAssign(subs, init)
+    val trained = Materialize(pqAssign(subs, init)
       .join(subs, Seq("vec_id", "m"))
       .select(col("m"), col("cid"), posexplode(col("sub")).as(Seq("i", "v")))
       .groupBy(col("m"), col("cid"), col("i"))
       .agg(round(avg(col("v").cast("double")), 6).as("mv"))
       .groupBy(col("m"), col("cid"))
       .agg(expr("transform(array_sort(collect_list(struct(i, mv)))," +
-        " x -> CAST(x.mv AS FLOAT))").as("ce"))
-      .localCheckpoint(true)
+        " x -> CAST(x.mv AS FLOAT))").as("ce")))
     val codes = pqAssign(subs, trained)
     val adc = pqSubRows(e.filter(col("vec_id") < NumQueries))
       .withColumnRenamed("vec_id", "qid")
@@ -936,7 +933,7 @@ object Similarity {
         .select(lit(d.toLong).as("dim"), col("qid"),
           col("vec_id").as("vb"))
     }
-    val full = topk(dims.max).localCheckpoint(true)
+    val full = Materialize(topk(dims.max))
     val truth = full.select(col("qid"), col("vb"))
     val all = (dims.filter(_ != dims.max).map(topk) :+ full)
       .reduce(_ unionByName _)

@@ -327,13 +327,12 @@ object Temporal {
     // max_by collapse aggregate (the query's dominant cost) evaluated
     // TWICE (Spark has no common-subplan dedup). Narrow (user_id, h,
     // v_obs, n_obs) rows bounded by users × span hours — far smaller
-    // than the event table (see [[Dedup.materializeOnce]] for the
-    // primitive's measured trade-offs; the persist variant measured
-    // cpu 4.2→10.5 s on q79). The r21 attempt spread the events SCAN
+    // than the event table (a persist measured cpu 4.2→10.5 s on q79,
+    // see [[Materialize]]). The r21 attempt spread the events SCAN
     // (before the aggregate) and lost 2.6x — this materializes the
     // aggregate's OUTPUT instead, which also hands the downstream
     // grid/obs join exact size stats.
-    val hourly = Dedup.materializeOnce(Corpus.read(spark, dir, "events")
+    val hourly = Materialize(Corpus.read(spark, dir, "events")
       .select(col("user_id"), Exact.microsDiv(3600000000L).as("h"),
         col("value"),
         concat(lpad(micros.cast("string"), 20, "0"),

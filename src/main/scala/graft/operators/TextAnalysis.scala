@@ -176,6 +176,11 @@ object TextAnalysis {
   /** Exact-dedup stage: keep the lowest doc_id per content
     * fingerprint (input must carry `fp` and `doc_id`) — shared by
     * [[cleanCorpus]] and [[trainingPipeline]].
+    *
+    * Edge semantics (pinned in OperatorsSpec): rows whose `fp` is
+    * NULL form one group of their own, so exactly one of them — the
+    * lowest doc_id — survives; rows repeating the same
+    * `(fp, doc_id)` collapse to a single row.
     */
   def keepFirstByFingerprint(df: DataFrame): DataFrame = {
     // ONE-PASS form (r22, VERDICT #1): the former groupBy(fp).min +
@@ -766,9 +771,9 @@ object TextAnalysis {
   }
 
   private def bpeTrainUncached(spark: SparkSession,
-      dir: String): Seq[(Long, String, String, Long)] = {
+      dir: String): Seq[(Long, String, String, Long)] = Materialize.scoped { s =>
     val sep = "·"
-    var words = Corpus.read(spark, dir, "documents")
+    val words0 = s(Corpus.read(spark, dir, "documents")
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .select(concat(lit(sep),
@@ -784,8 +789,7 @@ object TextAnalysis {
       // microseconds, so even a 100 TB corpus' Heaps/cap-bounded
       // vocab never needs more than one partition per round; 8 thin
       // tasks just multiplied the per-round stage floor).
-      .coalesce(1)
-      .localCheckpoint()
+      .coalesce(1))
     // Per-round argmax: pair-count + (count desc, pair asc) argmax in
     // ONE stage over the single-partition vocab (r21 — the former
     // explode → groupBy → TakeOrdered form planned 3 stages per round
@@ -813,9 +817,13 @@ object TextAnalysis {
     }
     val merges =
       scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    var rank = 1
-    var exhausted = false
-    while (rank <= BpeMerges && !exhausted) {
+    // The state is (the round's vocab, the next round's LAZY vocab):
+    // the lazy one is computed inside the next round's argmax job
+    // from its predecessor's blocks, so a vocab is released only once
+    // its successor has been computed.
+    s.rounds("bpeTrain", (words0, words0), BpeMerges) {
+        case (prev, words) => Seq(prev, words) } {
+        case ((_, words), round) =>
       val rows = words.select(col("sym"), col("cnt")).as[(String, Long)]
         .mapPartitions { it =>
           val m = scala.collection.mutable.HashMap
@@ -850,7 +858,7 @@ object TextAnalysis {
         // before BpeMerges rounds): training is COMPLETE, not broken —
         // return the merges learned so far (r21 ADVICE; Sennrich's
         // loop terminates the same way when the vocab exhausts).
-        exhausted = true
+        ((words, words), false)
       } else {
         require(rows.length == 1,
           s"bpe argmax expects the 1-partition vocab, got ${rows.length} rows")
@@ -861,13 +869,12 @@ object TextAnalysis {
         // — at 64 rounds the driver job round-trip, not data, was the
         // measured cost (6.7 s wall on 1.0 s of cpu with eager
         // checkpoints; ~halved lazy).
-        words = words
+        merges += (((round + 1).toLong, a, b, pc))
+        ((words, s.lazily(words
           .withColumn("sym", regexp_replace(col("sym"),
             lit(java.util.regex.Pattern.quote(s"$sep$a$sep$sep$b$sep")),
-            lit(java.util.regex.Matcher.quoteReplacement(s"$sep$a$b$sep"))))
-          .localCheckpoint(false)
-        merges += ((rank.toLong, a, b, pc))
-        rank += 1
+            lit(java.util.regex.Matcher.quoteReplacement(s"$sep$a$b$sep")))))),
+          round + 1 < BpeMerges)
       }
     }
     merges.toSeq
@@ -1906,16 +1913,14 @@ object TextAnalysis {
   def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame = {
     val docs = Corpus.read(spark, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-    // Materialized ONCE (r21; via [[Dedup.materializeOnce]] since r22
-    // — see its scaladoc for the persist-vs-checkpoint numbers): the
-    // per-doc tf transform (the
+    // Materialized ONCE (r21): the per-doc tf transform (the
     // query's dominant kernel, O(distinct terms × tokens) per doc on
     // the 1-task scan) otherwise re-evaluates under BOTH the df
     // aggregate and the scoring join's probe side. The (doc_id, term,
     // tf) forward table is the retrieval-stack artifact q99 stores
     // anyway. Measured 2.9→1.7 s same-session in r21; the spread
     // alternative was measured wall-neutral and declined.
-    val tf = Dedup.materializeOnce(docs
+    val tf = Materialize(docs
       .select(col("doc_id"), explode(expr(
         """transform(array_distinct(toks),
           |  t -> struct(t AS term,
@@ -1963,7 +1968,8 @@ object TextAnalysis {
     * aggregate + the CC relation + two semi/anti joins + three
     * map-side-combinable per-lang aggregates).
     */
-  def effectiveSize(spark: SparkSession, dir: String): DataFrame = {
+  def effectiveSize(spark: SparkSession, dir: String): DataFrame =
+      Materialize.scoped { s =>
     // Materialized ONCE (r21, the cappedBands move): this narrow
     // (doc_id, lang, n_toks, fp) relation feeds the raw tally, BOTH
     // sides of the exact-dedup semi-join, and through `exact` the
@@ -1972,20 +1978,20 @@ object TextAnalysis {
     // the 1-task scan (measured 3.56→3.45 s same-session on top of
     // the cappedBands win — marginal wall, but the kernel now runs
     // once and task cpu stops scaling with the consumer count).
-    // Materialized via [[Dedup.materializeOnce]] (r22) — see its
-    // scaladoc for the measured trade-off on these corpus-shaped
-    // relations (this query was the persist experiment's worst case:
-    // cpu 2.7→15.7 s). The docs/exact materialization and the
-    // dedupClusters sub-pipeline are INDEPENDENT until the keep join,
-    // so their construction-time jobs run concurrently (guide §2.6).
+    // The docs/exact materialization and the dedupClusters
+    // sub-pipeline are INDEPENDENT until the keep join, so their
+    // construction-time jobs run concurrently (guide §2.6); a failing
+    // dedupClusters waits for them so the scope releases both.
     val docsExactF = scala.concurrent.Future {
-      val docs = Dedup.materializeOnce(Corpus.read(spark, dir, "documents")
+      val docs = s(Corpus.read(spark, dir, "documents")
         .select(col("doc_id"), col("lang"),
           tokenCount(col("text")).cast("long").as("n_toks"),
           fingerprintCol(col("text")).as("fp")))
-      (docs, Dedup.materializeOnce(keepFirstByFingerprint(docs)))
+      (docs, s(keepFirstByFingerprint(docs)))
     }(scala.concurrent.ExecutionContext.global)
-    val cl = Dedup.dedupClusters(spark, dir)
+    val cl = try Dedup.dedupClusters(spark, dir)
+      finally scala.concurrent.Await.ready(docsExactF,
+        scala.concurrent.duration.Duration.Inf): Unit
     val (docs, exact) = scala.concurrent.Await.result(docsExactF,
       scala.concurrent.duration.Duration.Inf)
     val w = Window.partitionBy(col("cluster_rep"))
@@ -2039,9 +2045,8 @@ object TextAnalysis {
     // whole upstream (scan + per-doc tf transform + explode + shuffle)
     // under the vocab heap AND both oov consumers — 3 serialized
     // kernel passes for one bounded table.
-    val langTerm = terms.groupBy(col("lang"), col("term"))
-      .agg(sum(col("tf")).as("cnt"))
-      .localCheckpoint(true)
+    val langTerm = Materialize(terms.groupBy(col("lang"), col("term"))
+      .agg(sum(col("tf")).as("cnt")))
     val vocab = langTerm.groupBy(col("term"))
       .agg(sum(col("cnt")).as("gcnt"))
       .orderBy(col("gcnt").desc, col("term")).limit(OovVocabV)
@@ -2113,7 +2118,7 @@ object TextAnalysis {
     // tokenize→line-explode→md5 kernel feeds the boilerplate
     // aggregate AND the join probe — it used to run twice,
     // serialized on the 1-task scan.
-    val linesM = Dedup.materializeOnce(lines)
+    val linesM = Materialize(lines)
     val boiler = linesM
       .groupBy(col("fp"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -2749,10 +2754,13 @@ object TextAnalysis {
     // The DSIR weight fit (one spread corpus pass, collected to a
     // bounded map) and the dedupClusters sub-pipeline are independent
     // — run their construction-time jobs concurrently (guide §2.6;
-    // same move as effectiveSize's docs/exact overlap).
+    // same move as effectiveSize's docs/exact overlap). A failing
+    // dedupClusters waits for the fit rather than leave it detached.
     val lwF = scala.concurrent.Future(dsirWeightTable(spark, dir))(
       scala.concurrent.ExecutionContext.global)
-    val reps = Dedup.dedupClusters(spark, dir)
+    val reps = try Dedup.dedupClusters(spark, dir)
+      finally scala.concurrent.Await.ready(lwF,
+        scala.concurrent.duration.Duration.Inf): Unit
     val wm = typedLit(scala.concurrent.Await.result(lwF,
       scala.concurrent.duration.Duration.Inf))
     val scored = docQuality(spark, dir)

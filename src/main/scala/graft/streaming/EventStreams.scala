@@ -233,7 +233,7 @@ object EventStreams {
   private[streaming] def stagedGate(prefix: String)(
       body: String => DataFrame): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    try body(tmp.toString).localCheckpoint(true)
+    try graft.operators.Materialize(body(tmp.toString))
     finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile): Unit
   }
 

@@ -18,33 +18,14 @@ class CcSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val chain = (0L until 199L).map(i => (i, i + 1))
-    val got = Dedup.connectedComponents(chain.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (out, rounds) = Dedup.connectedComponentsRounds(chain.toDF("a", "b"))
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === 200)
     assert(got.values.toSet === Set(0L))
     // The direct O(log n) assertion: plain min-propagation needs 199
     // rounds on this chain; pointer jumping must land well under
     // log-with-slack.
-    assert(Dedup.lastRounds <= 9,
-      s"chain took ${Dedup.lastRounds} rounds — pointer jumping broken")
-  }
-
-  test("superseded round checkpoints are released eagerly") {
-    val s = spark
-    import s.implicits._
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    // A 200-node chain drives many pointer-jumping rounds — exactly
-    // the case where GC-reliant cleanup would pin one label copy per
-    // round in block-manager storage.
-    val chain = (0L until 199L).map(i => (i, i + 1))
-    val out = Dedup.connectedComponents(chain.toDF("a", "b"))
-    out.collect()
-    val leaked = s.sparkContext.getPersistentRDDs.keySet -- before
-    // Only the RESULT's own checkpoint may remain persisted (the
-    // caller holds it); every superseded round and the edge cache
-    // must be gone without waiting for GC + ContextCleaner.
-    assert(leaked.size <= 1,
-      s"rounds leaked ${leaked.size} persistent RDDs: $leaked")
+    assert(rounds <= 9, s"chain took $rounds rounds — pointer jumping broken")
   }
 
   test("disjoint components keep separate min-id reps") {

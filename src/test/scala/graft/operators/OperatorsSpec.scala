@@ -85,16 +85,17 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
-  test("candidatePairJaccard leaves no intermediate caches behind") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.size
-    val df = Dedup.candidatePairJaccard(spark, sf)
-    df.count()
-    // Only the operator's own materialized result (one localCheckpoint
-    // RDD) may remain; the cand/candToks caches must be released.
-    assert(sc.getPersistentRDDs.size <= before + 1,
-      s"expected <= ${before + 1} persistent RDDs, " +
-        s"got ${sc.getPersistentRDDs.size}")
+  test("keepFirstByFingerprint: one NULL-fp survivor, repeated rows collapse") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq[(Option[String], Long)](
+      (None, 7L), (None, 3L), (None, 5L),
+      (Some("a"), 2L), (Some("a"), 2L), (Some("a"), 4L),
+      (Some("b"), 9L))
+      .toDF("fp", "doc_id").repartition(3)
+    val got = TextAnalysis.keepFirstByFingerprint(rows)
+      .collect().map(r => (Option(r.getString(0)), r.getLong(1))).toSeq
+    assert(got.sortBy(_._2) === Seq((Some("a"), 2L), (None, 3L), (Some("b"), 9L)))
   }
 
   test("ngram jaccard neighbors stay in domain") {

@@ -78,26 +78,6 @@ class RecursiveSqlSpec extends AnyFunSuite {
         "UNION vs UNION ALL would be indistinguishable")
   }
 
-  test("UNION-distinct closure releases superseded checkpoint rounds eagerly") {
-    // Each round supersedes the previous round's `reached` and
-    // `frontier` checkpoint blocks; without the eager RDD.unpersist
-    // (the connectedComponents pattern) block-manager storage grows
-    // as depth × output until session end. After the loop, only the
-    // FINAL accumulated table may stay persisted — the returned
-    // DataFrame still references it, so it cannot be released inside
-    // the operator. Diff against a pre-call snapshot because the
-    // shared session may hold unrelated persisted RDDs from other
-    // suites.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = Relational.ancestorClosureDistinct(spark, sf)
-    assert(df.count() > 0)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 2,
-      s"${leaked.size} checkpoint RDDs left persisted after the closure " +
-        s"loop (ids ${leaked.toSeq.sorted.mkString(",")}) — superseded " +
-        "rounds must be unpersisted eagerly")
-  }
-
   test("recursive closure agrees with pointer-jumping CC on the same pair graph") {
     val pairs = Dedup.minhashLshPairs(spark, sf)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))

@@ -170,6 +170,29 @@ class VariantInteropSpec extends AnyFunSuite {
     assert(out2.contains(s"NROWS $Rows"), out2)
   }
 
+  test("interop write follows a conf key the parent unset") {
+    val k = "spark.sql.parquet.compression.codec"
+    def footerCodec(dir: String): String = {
+      val part = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.getPath),
+          new org.apache.hadoop.conf.Configuration()))
+      try reader.getFooter.getBlocks.get(0).getColumns.get(0).getCodec.name
+      finally reader.close()
+    }
+    val gz = Files.createTempDirectory("vint_gz").toString + "/t"
+    val dflt = Files.createTempDirectory("vint_dflt").toString + "/t"
+    spark.conf.set(k, "gzip")
+    try Flaco.writeParquet(variantDf(), gz, ParityOptions(variantInterop = true))
+    finally spark.conf.unset(k)
+    Flaco.writeParquet(variantDf(), dflt, ParityOptions(variantInterop = true))
+    assert(footerCodec(gz) === "GZIP")
+    assert(footerCodec(dflt) === "SNAPPY",
+      "the isolated interop session kept the parent's unset codec")
+  }
+
   test("TRIPWIRE: default (shredded+annotated) write still fails in pyarrow") {
     assume(pyarrowOk, "python3/pyarrow unavailable")
     val dir = Files.createTempDirectory("vint_def").toString + "/t"

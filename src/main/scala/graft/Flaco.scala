@@ -252,10 +252,15 @@ object Flaco {
       case FileFormat.Feather => sources.FeatherSource.read(spark, path)
     }
 
+  /** parquet-mr's dictionary budget per column; past it the column falls back to PLAIN. */
+  private val ParquetDictionaryBytes = 64 << 10
+
   /** Parquet sink (`write_table_to_parquet`, `src/lib.rs:116-148`).
     * Spark-native default: many part-files, snappy, dictionary
     * encoding — the 100 TB path. Parity mode: one file, uncompressed,
-    * like the reference's single row group.
+    * like the reference's single row group. Dictionaries are capped at
+    * 64 KiB a column: at parquet-mr's 1 MiB default, a unique column
+    * builds a dictionary it then discards.
     */
   def writeParquet(
       df: DataFrame,
@@ -263,6 +268,7 @@ object Flaco {
       parity: ParityOptions = ParityOptions()): Unit = {
     val out = if (parity.singleFile) df.coalesce(1) else df
     var w = out.write.mode("overwrite")
+      .option("parquet.dictionary.page.size", ParquetDictionaryBytes.toString)
     if (parity.uncompressed) w = w.option("compression", "none")
     if (parity.variantInterop) {
       // The annotation half has no per-write option (verified r20), so
@@ -307,6 +313,7 @@ object Flaco {
         out.createOrReplaceGlobalTempView(vname)
         try {
           var wi = isolated.table(s"`$gtDb`.$vname").write.mode("overwrite")
+            .option("parquet.dictionary.page.size", ParquetDictionaryBytes.toString)
           if (parity.uncompressed) wi = wi.option("compression", "none")
           wi.option("spark.sql.variant.inferShreddingSchema", "false")
             .parquet(path)

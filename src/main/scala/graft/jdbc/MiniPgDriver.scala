@@ -1176,8 +1176,27 @@ object MiniPgJdbc {
 
   // ---- connection ----
 
-  def connection(wire: MiniPgWire, url: String, user: String): java.sql.Connection = {
+  /** The JDBC connection over a wire `open` starts on the first call
+    * that needs the server: statements, transaction control and
+    * `isValid`. `getMetaData`, `close` and `isClosed` answer without
+    * one, so a caller that only reads metadata (Spark's
+    * `JDBCDatabaseMetadata` in every JDBC scan) costs the server no
+    * backend.
+    */
+  def connection(open: () => MiniPgWire, url: String, user: String): java.sql.Connection = {
     var closed = false
+    var opened = false
+    lazy val wire = {
+      if (closed) throw new SQLException("connection is closed", "08003")
+      // Through the proxy a raw socket error would surface as
+      // UndeclaredThrowableException; JDBC callers catch SQLException.
+      val w = try open() catch {
+        case e: SQLException => throw e
+        case NonFatal(e) => throw new SQLException(s"connection failed: $e", "08001", e)
+      }
+      opened = true
+      w
+    }
     // Real transaction demarcation (r18, part of the COPY write
     // path): autoCommit=false opens an explicit BEGIN so Spark's
     // savePartition commits a partition's worth of COPY batches as
@@ -1195,9 +1214,10 @@ object MiniPgJdbc {
       case ("getMetaData", _) => dbMeta(url, user)
       case ("close", _) =>
         // Mid-transaction disconnect rolls back server-side.
-        if (!closed) { closed = true; wire.close() }; null
-      case ("isClosed", _) => B(closed || !wire.isOpen)
-      case ("isValid", _) => B(!closed && wire.isOpen)
+        if (!closed) { closed = true; if (opened) wire.close() }; null
+      case ("isClosed", _) => B(closed || (opened && !wire.isOpen))
+      case ("isValid", _) =>
+        B(!closed && (try wire.isOpen catch { case _: SQLException => false }))
       case ("setAutoCommit", a) =>
         val v = a(0).asInstanceOf[java.lang.Boolean].booleanValue
         if (autoCommit && !v) wire.query("BEGIN"): Unit
@@ -1286,9 +1306,8 @@ class MiniPgDriver extends java.sql.Driver {
     val timeoutSec = opt("socketTimeout").map(_.toInt)
       .getOrElse(MiniPgWire.DefaultSocketTimeoutSec)
     val binary = opt("binaryTransfer").forall(_.toBoolean)
-    val wire = new MiniPgWire(host, port, db, user, opt("password"),
-      timeoutSec, binary)
-    MiniPgJdbc.connection(wire, url, user)
+    MiniPgJdbc.connection(() => new MiniPgWire(host, port, db, user,
+      opt("password"), timeoutSec, binary), url, user)
   }
 
   override def getMajorVersion: Int = 0

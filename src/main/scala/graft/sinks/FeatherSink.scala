@@ -1,17 +1,21 @@
 package graft.sinks
 
-import java.io.{ByteArrayOutputStream, File, FileOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, File, FileOutputStream}
 import java.nio.channels.{Channels, WritableByteChannel}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
-import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter}
+import org.apache.arrow.vector.{VectorLoader, VectorSchemaRoot, VectorUnloader}
+import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter, ReadChannel, WriteChannel}
+import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.arrow.GraftArrowBridge
 import org.apache.spark.sql.types._
 
 import graft.FlacoSparkException
@@ -26,8 +30,11 @@ import graft.FlacoSparkException
   * reference's one-file layout via a driver-side local iterator,
   * still batch-streamed.
   *
-  * Built on Arrow-Java (`/opt/spark/jars/arrow-vector-18.3.0.jar`),
-  * public API only.
+  * One encoder serves every path: the tasks fill Arrow-Java 18.3
+  * vectors from the plan's InternalRows with Spark's own
+  * `execution.arrow.ArrowWriter` — the writer behind Spark's Arrow
+  * exchange with Python — so no row goes through an external `Row`
+  * and its `java.sql`/`String` objects.
   */
 object FeatherSink {
 
@@ -45,26 +52,32 @@ object FeatherSink {
     */
   val DefaultSingleFileByteBudget: Long = 4L << 30
 
+  /** Replaces whatever is at `path`, like the Parquet sink's
+    * `overwrite`. Per-partition mode writes `part-NNNNN.arrow` for
+    * each non-empty partition, or one schema-only file when every
+    * partition is empty.
+    */
   def write(df: DataFrame, path: String, singleFile: Boolean = false,
       singleFileByteBudget: Long = DefaultSingleFileByteBudget): Unit = {
     val schema = df.schema
     validate(schema)
+    val target = new File(path)
+    if (target.exists()) FileUtils.forceDelete(target)
     if (singleFile) {
-      val it = df.toLocalIterator()
-      try writeIterator(schema, it.asScala, path, singleFileByteBudget)
+      try writeFile(schema, path, singleFileByteBudget)(pulled(df))
       catch { case e: Throwable =>
-        new File(path).delete() // no truncated IPC file left behind
+        target.delete() // no truncated IPC file left behind
         throw e
       }
     } else {
-      val dir = new File(path)
-      dir.mkdirs()
-      df.foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          writeIterator(schema, it, f"$path/part-$pid%05d.arrow")
-        }
-      }
+      target.mkdirs()
+      val wrote = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+        val nonEmpty = rows.hasNext
+        if (nonEmpty) writeFile(schema, f"$path/part-$pid%05d.arrow")(_.encode(rows) > 0)
+        Iterator(nonEmpty)
+      }.collect()
+      if (!wrote.contains(true))
+        writeFile(schema, s"$path/part-00000.arrow")(_ => false)
     }
   }
 
@@ -76,15 +89,14 @@ object FeatherSink {
     * Python/Arrow consumer" path, bounded by what one process can
     * hold — same contract and same limit as the reference; the
     * distributed paths (parquet/feather sinks, the DataFrame itself)
-    * remain the 100 TB story. Batch-streamed via toLocalIterator, so
-    * peak memory is one partition plus one 4096-row batch.
+    * remain the 100 TB story. The tasks encode the record batches and
+    * the driver pulls them one partition at a time, so peak memory is
+    * one partition's encoded batches plus one 4096-row batch.
     */
   def collectAsArrowStream(df: DataFrame): Array[Byte] = {
-    val schema = df.schema
-    validate(schema)
+    validate(df.schema)
     val bos = new ByteArrayOutputStream()
-    writeRows(schema, df.toLocalIterator().asScala, Channels.newChannel(bos),
-      stream = true)
+    writeIpc(df.schema, Channels.newChannel(bos), stream = true)(pulled(df))
     bos.toByteArray
   }
 
@@ -131,23 +143,22 @@ object FeatherSink {
     }
   }
 
-  /** Stream `rows` into one IPC file at `file` in BatchRows chunks.
+  /** Write one IPC file at `file` from `next` (see [[writeIpc]]).
     * `byteBudget`, if finite, bounds the bytes actually written.
     */
-  private def writeIterator(
-      schema: StructType, rows: Iterator[Row], file: String,
-      byteBudget: Long = Long.MaxValue): Unit = {
+  private def writeFile(schema: StructType, file: String,
+      byteBudget: Long = Long.MaxValue)(next: BatchEncoder => Boolean): Unit = {
     val out = new FileOutputStream(file)
     try {
       if (byteBudget == Long.MaxValue)
-        writeRows(schema, rows, out.getChannel, stream = false)
+        writeIpc(schema, out.getChannel, stream = false)(next)
       else {
         val ch = new BudgetedChannel(out.getChannel, byteBudget)
         // The trip surfaces as IOException somewhere inside the Arrow
         // writer (possibly wrapped, possibly superseded by the
         // writer's own shutdown) — the flag, not the exception type,
         // is the reliable signal to translate into the typed error.
-        try writeRows(schema, rows, ch, stream = false)
+        try writeIpc(schema, ch, stream = false)(next)
         catch { case e: Throwable =>
           if (ch.tripped) throw new FlacoSparkException(
             s"Feather singleFile output exceeded its $byteBudget-byte " +
@@ -184,145 +195,78 @@ object FeatherSink {
     override def close(): Unit = inner.close()
   }
 
-  /** Stream `rows` into `ch` in BatchRows chunks, as the IPC file
-    * format (Feather) or the IPC stream format (interchange).
+  /** Write `ch` as the IPC file format (Feather) or the IPC stream
+    * format (interchange), one batch per call of `next` that filled
+    * the encoder's root, until a call returns false.
     */
-  private def writeRows(
-      schema: StructType, rows: Iterator[Row], ch: WritableByteChannel,
-      stream: Boolean): Unit = {
-    val allocator = new RootAllocator()
-    val arrowSchema = new Schema(schema.fields.map(arrowField).toSeq.asJava)
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    val writer = if (stream) new ArrowStreamWriter(root, null, ch)
-                 else new ArrowFileWriter(root, null, ch)
+  private def writeIpc(schema: StructType, ch: WritableByteChannel,
+      stream: Boolean)(next: BatchEncoder => Boolean): Unit = {
+    val enc = new BatchEncoder(schema)
+    val writer = if (stream) new ArrowStreamWriter(enc.root, null, ch)
+                 else new ArrowFileWriter(enc.root, null, ch)
     try {
       writer.start()
-      val buf = new Array[Row](BatchRows)
-      while (rows.hasNext) {
-        var n = 0
-        while (n < BatchRows && rows.hasNext) { buf(n) = rows.next(); n += 1 }
-        root.allocateNew()
-        var c = 0
-        while (c < schema.fields.length) {
-          fillVector(root.getVector(c), schema.fields(c).dataType, buf, n, c)
-          c += 1
-        }
-        root.setRowCount(n)
-        writer.writeBatch()
-      }
+      while (next(enc)) writer.writeBatch()
       writer.end()
     } catch { case e: Throwable =>
       // writer.close() re-flushes through the (possibly tripped)
       // channel; don't let its secondary failure supersede the real
       // one or leak the root/allocator.
       try writer.close() catch { case _: Throwable => () }
-      root.close(); allocator.close()
+      enc.close()
       throw e
     }
-    writer.close(); root.close(); allocator.close()
+    writer.close(); enc.close()
   }
 
-  private def fillVector(
-      v: FieldVector, dt: DataType, rows: Array[Row], n: Int, c: Int): Unit = {
-    var i = 0
-    dt match {
-      case IntegerType =>
-        val vec = v.asInstanceOf[IntVector]
-        while (i < n) { if (rows(i).isNullAt(c)) vec.setNull(i) else vec.setSafe(i, rows(i).getInt(c)); i += 1 }
-      case LongType =>
-        val vec = v.asInstanceOf[BigIntVector]
-        while (i < n) { if (rows(i).isNullAt(c)) vec.setNull(i) else vec.setSafe(i, rows(i).getLong(c)); i += 1 }
-      case ShortType =>
-        val vec = v.asInstanceOf[SmallIntVector]
-        while (i < n) { if (rows(i).isNullAt(c)) vec.setNull(i) else vec.setSafe(i, rows(i).getShort(c)); i += 1 }
-      case ByteType =>
-        val vec = v.asInstanceOf[TinyIntVector]
-        while (i < n) { if (rows(i).isNullAt(c)) vec.setNull(i) else vec.setSafe(i, rows(i).getByte(c)); i += 1 }
-      case FloatType =>
-        val vec = v.asInstanceOf[Float4Vector]
-        while (i < n) { if (rows(i).isNullAt(c)) vec.setNull(i) else vec.setSafe(i, rows(i).getFloat(c)); i += 1 }
-      case DoubleType =>
-        val vec = v.asInstanceOf[Float8Vector]
-        while (i < n) { if (rows(i).isNullAt(c)) vec.setNull(i) else vec.setSafe(i, rows(i).getDouble(c)); i += 1 }
-      case StringType =>
-        val vec = v.asInstanceOf[VarCharVector]
-        while (i < n) {
-          if (rows(i).isNullAt(c)) vec.setNull(i)
-          else vec.setSafe(i, rows(i).getString(c).getBytes("UTF-8"))
-          i += 1
-        }
-      case BinaryType =>
-        val vec = v.asInstanceOf[VarBinaryVector]
-        while (i < n) {
-          if (rows(i).isNullAt(c)) vec.setNull(i)
-          else vec.setSafe(i, rows(i).getAs[Array[Byte]](c))
-          i += 1
-        }
-      case BooleanType =>
-        val vec = v.asInstanceOf[BitVector]
-        while (i < n) { if (rows(i).isNullAt(c)) vec.setNull(i) else vec.setSafe(i, if (rows(i).getBoolean(c)) 1 else 0); i += 1 }
-      case DateType =>
-        val vec = v.asInstanceOf[DateDayVector]
-        while (i < n) {
-          if (rows(i).isNullAt(c)) vec.setNull(i)
-          else vec.setSafe(i, rows(i).getAs[Any](c) match {
-            case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-            case d: java.time.LocalDate => d.toEpochDay.toInt
-          })
-          i += 1
-        }
-      case TimestampType =>
-        val vec = v.asInstanceOf[TimeStampMicroTZVector]
-        while (i < n) {
-          if (rows(i).isNullAt(c)) vec.setNull(i)
-          else vec.setSafe(i, rows(i).getAs[Any](c) match {
-            case t: java.sql.Timestamp =>
-              t.getTime * 1000L + (t.getNanos % 1000000) / 1000
-            case t: java.time.Instant =>
-              t.getEpochSecond * 1000000L + t.getNano / 1000
-          })
-          i += 1
-        }
-      case TimestampNTZType =>
-        val vec = v.asInstanceOf[TimeStampMicroVector]
-        while (i < n) {
-          if (rows(i).isNullAt(c)) vec.setNull(i)
-          else {
-            val ldt = rows(i).getAs[java.time.LocalDateTime](c)
-            val micros = ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-              ldt.getNano / 1000
-            vec.setSafe(i, micros)
-          }
-          i += 1
-        }
-      case _: TimeType =>
-        val vec = v.asInstanceOf[TimeMicroVector]
-        while (i < n) {
-          if (rows(i).isNullAt(c)) vec.setNull(i)
-          else vec.setSafe(i,
-            rows(i).getAs[java.time.LocalTime](c).toNanoOfDay / 1000L)
-          i += 1
-        }
-      case ArrayType(elem, _) =>
-        val vec = v.asInstanceOf[ListVector]
-        val w = vec.getWriter
-        while (i < n) {
-          w.setPosition(i)
-          if (rows(i).isNullAt(c)) w.writeNull()
-          else {
-            w.startList()
-            val arr = rows(i).getSeq[Any](c)
-            elem match {
-              case FloatType => arr.foreach(x => w.float4.writeFloat4(x.asInstanceOf[Float]))
-              case DoubleType => arr.foreach(x => w.float8.writeFloat8(x.asInstanceOf[Double]))
-              case _ => throw new FlacoSparkException(s"list<$elem> unsupported")
-            }
-            w.endList()
-          }
-          i += 1
-        }
-        vec.setValueCount(n)
-      case dt => throw new FlacoSparkException(s"unsupported $dt")
+  /** The driver-side paths: each task encodes its partition into IPC
+    * record-batch messages, and the driver pulls them one partition at
+    * a time (toLocalIterator), so it holds one partition's batches.
+    */
+  private def pulled(df: DataFrame): BatchEncoder => Boolean = {
+    val schema = df.schema
+    val messages = df.queryExecution.toRdd.mapPartitions { rows =>
+      val enc = new BatchEncoder(schema)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => enc.close())
+      Iterator.continually(enc.encode(rows)).takeWhile(_ > 0).map(_ => enc.message())
+    }.toLocalIterator
+    enc => messages.hasNext && { enc.load(messages.next()); true }
+  }
+
+  /** An Arrow root for a sink schema that Spark's ArrowWriter fills
+    * from InternalRows, BatchRows rows at a time.
+    */
+  private final class BatchEncoder(schema: StructType) extends AutoCloseable {
+    private val allocator = new RootAllocator()
+    val root: VectorSchemaRoot = VectorSchemaRoot.create(
+      new Schema(schema.fields.map(arrowField).toSeq.asJava), allocator)
+    private val writer = GraftArrowBridge.writer(root)
+
+    /** Fill the root with the next rows; their count, 0 once drained. */
+    def encode(rows: Iterator[InternalRow]): Int = {
+      writer.reset()
+      var n = 0
+      while (n < BatchRows && rows.hasNext) { writer.write(rows.next()); n += 1 }
+      writer.finish()
+      n
     }
+
+    /** The root's batch as one IPC record-batch message. */
+    def message(): Array[Byte] = {
+      val out = new ByteArrayOutputStream()
+      val batch = new VectorUnloader(root).getRecordBatch
+      try MessageSerializer.serialize(new WriteChannel(Channels.newChannel(out)), batch)
+      finally batch.close()
+      out.toByteArray
+    }
+
+    /** Load a [[message]] into the root. */
+    def load(message: Array[Byte]): Unit = {
+      val batch = MessageSerializer.deserializeRecordBatch(
+        new ReadChannel(Channels.newChannel(new ByteArrayInputStream(message))), allocator)
+      try new VectorLoader(root).load(batch) finally batch.close()
+    }
+
+    override def close(): Unit = { root.close(); allocator.close() }
   }
 }

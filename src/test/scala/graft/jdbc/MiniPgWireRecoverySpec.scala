@@ -5,6 +5,7 @@ import java.net.ServerSocket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.SQLException
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -13,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A one-connection PostgreSQL backend on an ephemeral port that
   * replays fixed frames: `hello` answers the StartupMessage, and each
   * frontend message that ends a client turn (Query, Flush, Sync) gets
-  * the next reply of `turns`. It records every frontend message type
-  * it reads and counts `clientClosed` down once the client hangs up.
+  * the next reply of `turns`. It counts the connections it `accepted`,
+  * records every frontend message type it reads and counts
+  * `clientClosed` down once the client hangs up.
   */
 final class ScriptedPgServer(hello: Seq[Array[Byte]],
     turns: Seq[Seq[Array[Byte]]]) extends AutoCloseable {
@@ -22,9 +24,11 @@ final class ScriptedPgServer(hello: Seq[Array[Byte]],
   val port: Int = server.getLocalPort
   val received = new ConcurrentLinkedQueue[Char]()
   val clientClosed = new CountDownLatch(1)
+  val accepted = new AtomicInteger()
 
-  private val thread = new Thread(() => {
+  private val thread = new Thread(() => try {
     val s = server.accept()
+    accepted.incrementAndGet()
     try {
       val in = new DataInputStream(s.getInputStream)
       val out = s.getOutputStream
@@ -43,7 +47,7 @@ final class ScriptedPgServer(hello: Seq[Array[Byte]],
       }
     } catch { case _: java.io.IOException => () }
     finally { s.close(); clientClosed.countDown() }
-  })
+  } catch { case _: java.io.IOException => () }) // closed before a client came
   thread.setDaemon(true)
   thread.start()
 
@@ -156,6 +160,29 @@ class MiniPgWireRecoverySpec extends AnyFunSuite {
       assert((0 until 2).map(i => (r.data.text(0, i), r.data.text(1, i))) ===
         Seq(("1", "2"), ("3", "4")))
     } finally { wire.close(); server.close() }
+  }
+
+  test("a connection opens no backend for metadata, and one for its " +
+    "first statement") {
+    val server = new ScriptedPgServer(Hello, Seq(Select42))
+    val url = s"jdbc:postgresql://localhost:${server.port}/db?user=u&binaryTransfer=false"
+    try {
+      val meta = new MiniPgDriver().connect(url, null)
+      assert(meta.getMetaData.getDatabaseMajorVersion === 15)
+      assert(!meta.isClosed)
+      meta.close()
+      assert(meta.isClosed)
+      // Had it connected, its startup would have waited for the
+      // server's reply, which follows the accept.
+      assert(server.accepted.get === 0)
+
+      val conn = new MiniPgDriver().connect(url, null)
+      try {
+        val rs = conn.createStatement().executeQuery("select 42")
+        assert(rs.next() && rs.getInt(1) === 42)
+        assert(server.accepted.get === 1)
+      } finally conn.close()
+    } finally server.close()
   }
 
   test("an ErrorResponse in queryExtended's describe phase sends Sync " +

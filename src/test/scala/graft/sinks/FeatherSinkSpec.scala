@@ -9,6 +9,7 @@ import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.ListVector
 import org.apache.arrow.vector.ipc.ArrowFileReader
+import org.apache.arrow.vector.types.pojo.ArrowType
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,8 +21,8 @@ import graft.sources.Corpus
   * `write_table_to_feather`, reference `src/lib.rs:150-168`): write
   * every corpus table plus a null matrix, read the files back with the
   * independent Arrow-Java reader, and compare cell-by-cell against the
-  * source DataFrame — covering the Date/Timestamp/List fillVector
-  * branches the round-1 verdict flagged as never executed.
+  * source DataFrame — covering the encoder's Date/Timestamp/TIME/List
+  * field writers.
   */
 class FeatherSinkSpec extends AnyFunSuite {
 
@@ -63,7 +64,7 @@ class FeatherSinkSpec extends AnyFunSuite {
     case TimestampType => v.asInstanceOf[TimeStampMicroTZVector].get(i)
     case TimestampNTZType => v.asInstanceOf[TimeStampMicroVector].get(i)
     case _: TimeType => v.asInstanceOf[TimeMicroVector].get(i)
-    case ArrayType(FloatType, _) =>
+    case ArrayType(FloatType | DoubleType, _) =>
       v.asInstanceOf[ListVector].getObject(i)
         .asInstanceOf[java.util.List[_]].asScala.toSeq
     case other => fail(s"unhandled test type $other")
@@ -89,7 +90,7 @@ class FeatherSinkSpec extends AnyFunSuite {
       case _: TimeType =>
         row.getAs[java.time.LocalTime](c).toNanoOfDay / 1000L
       case BinaryType => row.getAs[Array[Byte]](c).toSeq
-      case ArrayType(FloatType, _) => row.getSeq[Float](c)
+      case ArrayType(_, _) => row.getSeq[Any](c)
       case _ => row.get(c)
     }
 
@@ -206,6 +207,87 @@ class FeatherSinkSpec extends AnyFunSuite {
     assert(back2.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     assert(back2.exceptAll(df).isEmpty && df.exceptAll(back2).isEmpty)
+  }
+
+  test("every supported type, with nulls, encodes the same through " +
+    "collectAsArrowStream and both Feather layouts, in partition order") {
+    val schema = StructType(Seq(
+      StructField("i4", IntegerType), StructField("i8", LongType),
+      StructField("i2", ShortType), StructField("i1", ByteType),
+      StructField("f4", FloatType), StructField("f8", DoubleType),
+      StructField("s", StringType), StructField("b", BinaryType),
+      StructField("bo", BooleanType), StructField("d", DateType),
+      StructField("ts", TimestampNTZType), StructField("tz", TimestampType),
+      StructField("t6", TimeType(6)),
+      StructField("af", ArrayType(FloatType)),
+      StructField("ad", ArrayType(DoubleType))))
+    val rows = (0 until 30).map { i =>
+      if (i % 7 == 3) Row.fromSeq(Seq.fill(schema.length)(null))
+      else Row(i, i * 1000000007L, (i - 15).toShort, (i - 15).toByte,
+        i / 4.0f, i / 3.0, s"s$i-é", Array.tabulate[Byte](i % 4)(_.toByte),
+        i % 2 == 0, java.time.LocalDate.of(1999, 12, 31).plusDays(i),
+        java.time.LocalDateTime.of(2024, 6, 1, 12, 0, 0, 654321000).plusSeconds(i),
+        java.sql.Timestamp.from(
+          java.time.Instant.parse("2024-06-01T12:00:00.123456Z").plusMillis(i)),
+        // sub-millisecond: µs digits must survive
+        java.time.LocalTime.of(i % 24, 59, 59, 999999000 - i * 1000),
+        Seq.tabulate(i % 3)(_ * 0.5f),
+        if (i % 5 == 0) Seq(1.5, null, -2.5) else Seq.tabulate(i % 4)(_ * 0.25))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    assert(df.rdd.getNumPartitions === 3)
+    val want = df.collect().toSeq.map(r =>
+      schema.fields.indices.map(c => expected(r, c, schema.fields(c).dataType)))
+
+    val alloc = new RootAllocator()
+    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(graft.Flaco.collectAsArrowStream(df)), alloc)
+    val streamed = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+    try {
+      val root = reader.getVectorSchemaRoot
+      assert(root.getSchema.findField("t6").getType === new ArrowType.Time(
+        org.apache.arrow.vector.types.TimeUnit.MICROSECOND, 64))
+      while (reader.loadNextBatch()) {
+        (0 until root.getRowCount).foreach { i =>
+          streamed += schema.fields.indices.map { c =>
+            val v = root.getVector(c)
+            if (v.isNull(i)) null else cell(v, schema.fields(c).dataType, i)
+          }
+        }
+      }
+    } finally { reader.close(); alloc.close() }
+    assert(streamed.toSeq === want)
+
+    val single = Files.createTempDirectory("fte").toString + "/t.arrow"
+    FeatherSink.write(df, single, singleFile = true)
+    assert(readBack(single, schema) === want)
+
+    val dir = Files.createTempDirectory("ftep").toString + "/out"
+    FeatherSink.write(df, dir)
+    val parts = new java.io.File(dir).listFiles.map(_.getPath).filter(_.endsWith(".arrow")).sorted
+    assert(parts.length === 3)
+    assert(parts.toSeq.flatMap(readBack(_, schema)) === want)
+  }
+
+  test("a per-partition write replaces what was at its path") {
+    val df = Corpus.read(spark, TestSpark.sf, "orders")
+    val dir = Files.createTempDirectory("ftr").toString + "/out"
+    FeatherSink.write(df.repartition(3), dir)
+    val second = df.filter("o_orderkey % 2 = 0").coalesce(1)
+    FeatherSink.write(second, dir)
+    val back = graft.Flaco.readFile(spark, dir, graft.FileFormat.Feather)
+    assert(back.count() === second.count())
+    assert(back.exceptAll(second).isEmpty && second.exceptAll(back).isEmpty)
+  }
+
+  test("an empty per-partition write reads back as 0 rows with its schema") {
+    val df = Corpus.read(spark, TestSpark.sf, "orders").filter("o_orderkey < 0")
+    val dir = Files.createTempDirectory("fte0").toString + "/out"
+    FeatherSink.write(df, dir)
+    val back = graft.Flaco.readFile(spark, dir, graft.FileFormat.Feather)
+    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+    assert(back.count() === 0)
   }
 
   test("collectAsArrowStream round-trips through an independent Arrow reader") {

@@ -2,6 +2,12 @@ package graft.sinks
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,6 +80,39 @@ class RoundTripSpec extends AnyFunSuite {
     assert(!got(0).anyNull)
     (1 to 2).foreach(r => (0 until schema.length).foreach(c =>
       assert(got(r).isNullAt(c), s"row $r col $c should be null")))
+  }
+
+  test("writeParquet keeps a dictionary for a low-cardinality column " +
+    "and writes a unique int8 column PLAIN, on both writers") {
+    // 50k unique longs are 400 KB, over the 64 KiB budget. (At
+    // parquet-mr's 1 MiB default the page-end compression check also
+    // lands them PLAIN, but only after building the whole dictionary,
+    // which a footer cannot show.)
+    val df = spark.range(50000).selectExpr("id as uniq",
+      "cast(id % 10 as int) as few")
+    Seq(ParityOptions(singleFile = true),
+        ParityOptions(singleFile = true, variantInterop = true)).foreach { parity =>
+      val dir = Files.createTempDirectory("pdict").toString + "/t"
+      Flaco.writeParquet(df, dir, parity)
+      val file = new java.io.File(dir).listFiles
+        .find(_.getName.endsWith(".parquet")).get
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(file.getPath), new Configuration()))
+      try {
+        val chunks = reader.getFooter.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala)
+        def stats(col: String) = {
+          val s = chunks.filter(_.getPath.toDotString == col).map(_.getEncodingStats)
+          assert(s.nonEmpty, s"no column chunk for $col")
+          s
+        }
+        assert(stats("few").forall(s =>
+          s.hasDictionaryPages && !s.hasNonDictionaryEncodedPages), parity)
+        assert(stats("uniq").forall(s =>
+          !s.hasDictionaryPages && !s.hasDictionaryEncodedPages), parity)
+      } finally reader.close()
+      assert(spark.read.parquet(dir).exceptAll(df).isEmpty)
+    }
   }
 
   test("singleFile+uncompressed parity writes one data file") {

@@ -138,26 +138,9 @@ object Flaco {
     spark
   }
 
-  /** Spark-native `read_sql_to_pyarrow` (`src/lib.rs:41-72`): ship an
-    * arbitrary SQL string to PostgreSQL, get a columnar handle back.
-    * The JDBC `query` option is exactly the reference's opaque-SQL
-    * delegation contract (`src/lib.rs:188-189`); `fetchsize` replicates
-    * its streamed row fetch, and the partition options give the
-    * parallelism the single-threaded reference lacks.
-    *
-    * Offline here (no live PostgreSQL, zero egress), so this is
-    * exercised only at the plan level (FlacoSpec: option assembly and
-    * failure wrapping); the type-mapping semantics it applies are
-    * unit-tested in PgTypeMapSpec.
-    *
-    * Install the reference's full wire-type mapping into the JDBC
-    * layer with `types.FlacoPostgresDialect.register(parity)` (once
-    * per JVM — JVM-global like all Spark JDBC dialects); [[ParityOptions]]
-    * passed here then only govern the post-load value transforms.
-    */
   /** The JDBC relation options [[readSqlToDataFrame]] puts in the
     * plan — a pure function so the plan assembly is unit-testable
-    * without a live server (FlacoSpec; execution needs PostgreSQL).
+    * without a live server (FlacoSpec).
     *
     * Spark rejects `query` together with `partitionColumn` (they are
     * mutually exclusive JDBCOptions), so the partitioned form ships
@@ -180,6 +163,40 @@ object Flaco {
     }
   }
 
+  /** Spark-native `read_sql_to_pyarrow` (`src/lib.rs:41-72`): ship an
+    * arbitrary SQL string to PostgreSQL, get a columnar handle back.
+    * The statement is the reference's opaque-SQL delegation contract
+    * (`src/lib.rs:188-189`); `partitionColumn` (column, lower bound,
+    * upper bound, partitions) gives the parallelism the
+    * single-threaded reference lacks.
+    *
+    * Two readers, chosen by the URI, with one plan contract (the
+    * [[jdbcOptions]]):
+    *  - a URI [[graft.jdbc.MiniPgDriver]] accepts (`jdbc:postgresql:`
+    *    without pgjdbc on the classpath) is read by
+    *    [[graft.jdbc.MiniPgScan]]: each task streams its rows off the
+    *    wire into column batches. The schema comes from a Parse +
+    *    Describe that runs nothing, and the text goes to PostgreSQL as
+    *    written (`?` is an operator there, not a parameter).
+    *    `fetchSize` does not apply: a task holds one 4096-row batch.
+    *    A schema with a type no column vector holds (a custom dialect's
+    *    arrays, say) keeps the JDBC reader;
+    *  - any other URI (pgjdbc, Derby, …) goes through Spark's JDBC
+    *    reader, which fetches `fetchSize` rows a round trip.
+    *
+    * Both push the same work to PostgreSQL: the selected columns, the
+    * filters the dialect compiles, and one range predicate per
+    * partition on `partitionColumn`. Connection and statement errors
+    * are raised here as [[FlacoSparkException]]; an error PostgreSQL
+    * raises only when it plans or runs the statement (a constant
+    * `1/0`) comes, on the columnar path, when the DataFrame runs.
+    *
+    * Install the reference's full wire-type mapping with
+    * `types.FlacoPostgresDialect.register(parity)` (once per JVM —
+    * JVM-global like all Spark JDBC dialects); [[ParityOptions]]
+    * passed here then only govern the post-load value transforms. The
+    * type-mapping semantics are unit-tested in PgTypeMapSpec.
+    */
   def readSqlToDataFrame(
       spark: SparkSession,
       uri: String,
@@ -188,9 +205,11 @@ object Flaco {
       partitionColumn: Option[(String, Long, Long, Int)] = None,
       parity: ParityOptions = ParityOptions()): DataFrame =
     try {
-      val r = spark.read.format("jdbc")
-        .options(jdbcOptions(uri, stmt, fetchSize, partitionColumn))
-      types.PgTypeMap.applyParity(r.load(), parity)
+      val opts = jdbcOptions(uri, stmt, fetchSize, partitionColumn)
+      val columnar =
+        if (jdbc.MiniPgDriver.accepts(uri)) jdbc.MiniPgScan.read(spark, opts) else None
+      val df = columnar.getOrElse(spark.read.format("jdbc").options(opts).load())
+      types.PgTypeMap.applyParity(df, parity)
     } catch {
       case e: FlacoSparkException => throw e
       case e: Exception =>

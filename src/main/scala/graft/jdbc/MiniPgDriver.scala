@@ -54,11 +54,12 @@ import scala.util.control.NonFatal
   *
   * NOT a general-purpose driver: no named statements/portals or
   * server-side parameters, no cursors, no cancellation, no SSL — and
-  * each statement's
-  * result is fully buffered in client memory before the ResultSet is
-  * handed back (no fetchSize streaming), which bounds it to
-  * test-harness scales by construction (`python3 perfbench/run.py
-  * --workload pg_ingest --trace 1` measures the cost). It exists so the
+  * a JDBC `ResultSet`'s result is fully buffered in client memory
+  * before it is handed back (no fetchSize streaming). That bounds
+  * `spark.read.jdbc` over this driver to test-harness scales; the
+  * columnar read [[graft.Flaco.readSqlToDataFrame]] takes for these
+  * URLs ([[MiniPgScan]]) streams instead, one batch at a time over
+  * [[MiniPgWire.execute]] / [[MiniPgWire.readRows]]. It exists so the
   * reference's integration surface (live PG round-trips) is
   * executable in-sandbox; production deployments would put the real
   * pgjdbc on the classpath and never load this class (DriverManager
@@ -251,6 +252,66 @@ object MiniPgWire {
         s"$base.$frac"
       }
     }
+
+    /** Binary int2/int4/int8 by payload length. */
+    def binaryIntegral(p: Array[Byte], off: Int, len: Int): Long = len match {
+      case 2 => be16(p, off).toShort.toLong
+      case 4 => be32(p, off).toLong
+      case _ => be64(p, off)
+    }
+    def binaryFloat4(p: Array[Byte], off: Int): Float =
+      java.lang.Float.intBitsToFloat(be32(p, off))
+    def binaryFloat8(p: Array[Byte], off: Int): Double =
+      java.lang.Double.longBitsToDouble(be64(p, off))
+    def binaryBool(p: Array[Byte], off: Int): Boolean = p(off) == 1
+    /** Binary date → epoch day (the ±infinity sentinels shifted alike). */
+    def binaryDate(p: Array[Byte], off: Int): Long = be32(p, off).toLong + PgEpochDay
+    /** Binary timestamp/timestamptz: µs since the PG epoch, raw. */
+    def binaryMicros(p: Array[Byte], off: Int): Long = be64(p, off)
+
+    /** Text int2/int4/int8: `[-]digits`, parsed without a String. */
+    def parseLongCell(p: Array[Byte], off: Int, len: Int): Long = {
+      var v = 0L
+      var i = off
+      val end = off + len
+      var neg = false
+      if (p(i) == '-') { neg = true; i += 1 }
+      while (i < end) { v = v * 10 + (p(i) - '0'); i += 1 }
+      if (neg) -v else v
+    }
+
+    /** Exact no-allocation parse of the common float render
+      * `[-]ddd[.ddd]`: with ≤ 15 significant digits the mantissa is
+      * exact in a long and one division by an exact power of ten is
+      * correctly rounded — bit-identical to parseDouble. Exponents,
+      * specials (NaN/Infinity) and longer digit strings take the
+      * String + parseDouble fallback (exactness over speed).
+      */
+    def parseDoubleCell(payload: Array[Byte], off: Int,
+        len: Int): Double = {
+      val end = off + len
+      var i = off
+      var neg = false
+      if (i < end && payload(i) == '-') { neg = true; i += 1 }
+      var m = 0L
+      var digits = 0
+      var frac = -1
+      var simple = i < end
+      while (i < end && simple) {
+        val b = payload(i)
+        if (b >= '0' && b <= '9') {
+          m = m * 10 + (b - '0'); digits += 1
+          if (frac >= 0) frac += 1
+          i += 1
+        } else if (b == '.' && frac < 0) { frac = 0; i += 1 }
+        else simple = false
+      }
+      if (simple && digits > 0 && digits <= 15) {
+        val d0 = if (frac <= 0) m.toDouble else m / Pow10(frac)
+        if (neg) -d0 else d0
+      } else java.lang.Double.parseDouble(
+        new String(payload, off, len, StandardCharsets.US_ASCII))
+    }
   }
 
   /** Per-column TYPED vectors decoded once at message-read time — the
@@ -273,6 +334,8 @@ object MiniPgWire {
     def this(cols: Array[Col]) = this(cols, new Array[Byte](cols.length))
 
     private val n = cols.length
+    /** Cells a DataRow of this result carries. */
+    def width: Int = n
     private val bin: Array[Boolean] = formats.map(_ == 1.toByte)
     private val oids: Array[Int] = cols.map(_.oid)
     private val kinds: Array[Int] = Array.tabulate(n)(c =>
@@ -374,13 +437,7 @@ object MiniPgWire {
       if (bin(c)) putBinary(c, payload, off, len)
       else kinds(c) match {
         case KindLong =>
-          var v = 0L
-          var i = off
-          val end = off + len
-          var neg = false
-          if (payload(i) == '-') { neg = true; i += 1 }
-          while (i < end) { v = v * 10 + (payload(i) - '0'); i += 1 }
-          longCols(c)(size) = if (neg) -v else v
+          longCols(c)(size) = parseLongCell(payload, off, len)
         case KindDouble =>
           dblCols(c)(size) = parseDoubleCell(payload, off, len)
         case KindBool =>
@@ -397,11 +454,7 @@ object MiniPgWire {
     private def putBinary(c: Int, payload: Array[Byte], off: Int,
         len: Int): Unit = kinds(c) match {
       case KindLong =>
-        longCols(c)(size) = len match {
-          case 2 => be16(payload, off).toShort.toLong
-          case 4 => be32(payload, off).toLong
-          case _ => be64(payload, off)
-        }
+        longCols(c)(size) = binaryIntegral(payload, off, len)
       case KindDouble =>
         dblCols(c)(size) =
           if (len == 4) {
@@ -412,15 +465,15 @@ object MiniPgWire {
             // render, so getDouble/getString are transfer-mode
             // independent (r17 ADVICE). getFloat round-trips exactly
             // either way.
-            val f = java.lang.Float.intBitsToFloat(be32(payload, off))
+            val f = binaryFloat4(payload, off)
             if (java.lang.Float.isNaN(f) || java.lang.Float.isInfinite(f))
               f.toDouble
             else java.lang.Double.parseDouble(java.lang.Float.toString(f))
-          } else java.lang.Double.longBitsToDouble(be64(payload, off))
+          } else binaryFloat8(payload, off)
       case KindBool =>
-        longCols(c)(size) = if (payload(off) == 1) 1L else 0L
+        longCols(c)(size) = if (binaryBool(payload, off)) 1L else 0L
       case KindDate =>
-        longCols(c)(size) = be32(payload, off).toLong + PgEpochDay
+        longCols(c)(size) = binaryDate(payload, off)
       case KindTs | KindTstz =>
         longCols(c)(size) = be64(payload, off)
       case KindDecimal =>
@@ -436,47 +489,21 @@ object MiniPgWire {
 
     def rowDone(): Unit = size += 1
 
-    /** Exact no-allocation parse of the common float render
-      * `[-]ddd[.ddd]`: with ≤ 15 significant digits the mantissa is
-      * exact in a long and one division by an exact power of ten is
-      * correctly rounded — bit-identical to parseDouble. Exponents,
-      * specials (NaN/Infinity) and longer digit strings take the
-      * String + parseDouble fallback (exactness over speed).
-      */
-    private def parseDoubleCell(payload: Array[Byte], off: Int,
-        len: Int): Double = {
-      val end = off + len
-      var i = off
-      var neg = false
-      if (i < end && payload(i) == '-') { neg = true; i += 1 }
-      var m = 0L
-      var digits = 0
-      var frac = -1
-      var simple = i < end
-      while (i < end && simple) {
-        val b = payload(i)
-        if (b >= '0' && b <= '9') {
-          m = m * 10 + (b - '0'); digits += 1
-          if (frac >= 0) frac += 1
-          i += 1
-        } else if (b == '.' && frac < 0) { frac = 0; i += 1 }
-        else simple = false
-      }
-      if (simple && digits > 0 && digits <= 15) {
-        val d0 = if (frac <= 0) m.toDouble else m / Pow10(frac)
-        if (neg) -d0 else d0
-      } else java.lang.Double.parseDouble(
-        new String(payload, off, len, StandardCharsets.US_ASCII))
+    /** Empties the store for reuse; its vectors keep their capacity. */
+    def clear(): Unit = {
+      size = 0
+      nulls.foreach(_.clear())
     }
+
   }
 
   /** Network-order (big-endian) reads: unsigned int16, int32, int64. */
-  private def be16(p: Array[Byte], o: Int): Int =
+  private[jdbc] def be16(p: Array[Byte], o: Int): Int =
     ((p(o) & 0xff) << 8) | (p(o + 1) & 0xff)
-  private def be32(p: Array[Byte], o: Int): Int =
+  private[jdbc] def be32(p: Array[Byte], o: Int): Int =
     ((p(o) & 0xff) << 24) | ((p(o + 1) & 0xff) << 16) |
       ((p(o + 2) & 0xff) << 8) | (p(o + 3) & 0xff)
-  private def be64(p: Array[Byte], o: Int): Long =
+  private[jdbc] def be64(p: Array[Byte], o: Int): Long =
     (be32(p, o).toLong << 32) | (be32(p, o + 4).toLong & 0xffffffffL)
 
   /** Exact powers of ten — built by repeated ×10 so every entry is
@@ -490,6 +517,25 @@ object MiniPgWire {
     var i = 1
     while (i < a.length) { a(i) = a(i - 1) * 10.0; i += 1 }
     a
+  }
+
+  /** Receives a statement's DataRows straight off the wire. */
+  trait RowSink {
+    /** One DataRow in `p(0 until len)`, which the wire reuses once this
+      * returns; `true` ends the read after this row.
+      */
+    def row(p: Array[Byte], len: Int): Boolean
+  }
+
+  /** A frame the protocol does not allow: the stream position is lost. */
+  private[jdbc] def malformed(what: String): SQLException =
+    new SQLException(s"malformed server message: $what", "08P01")
+
+  /** Throws unless DataRow `p` carries `width` cells. */
+  private[jdbc] def checkCells(p: Array[Byte], width: Int): Unit = {
+    val n = be16(p, 0)
+    if (n != width)
+      throw malformed(s"DataRow of $n cells for a $width-column result")
   }
 
   /** One result of a simple query: columns (empty for command-only
@@ -742,6 +788,13 @@ final class MiniPgWire(host: String, port: Int, database: String,
   private val out = new DataOutputStream(new BufferedOutputStream(socket.getOutputStream, 1 << 16))
   @volatile private var open = true
 
+  /** The payload of the last message read, in `buf(0 until bufLen)`;
+    * reused from message to message.
+    */
+  private var buf = new Array[Byte](1 << 12)
+  private var bufLen = 0
+  @volatile private var read = 0L
+
   /** The server's session TimeZone, tracked from ParameterStatus
     * messages (TimeZone is GUC_REPORT: the server announces it at
     * startup and after every SET that changes it). Used to re-render
@@ -749,6 +802,7 @@ final class MiniPgWire(host: String, port: Int, database: String,
     * have sent.
     */
   @volatile private var serverZone: java.time.ZoneId = ZoneOffset.UTC
+  def zone: java.time.ZoneId = serverZone
 
   /** ParameterStatus payload: cstring name + cstring value. */
   private def onParameterStatus(payload: Array[Byte]): Unit = {
@@ -805,13 +859,20 @@ final class MiniPgWire(host: String, port: Int, database: String,
     }
   }
 
-  private def readMessage(): (Char, Array[Byte]) =
+  /** Bytes received on this wire so far, headers included. */
+  def bytesRead: Long = read
+
+  /** Reads one message into [[buf]] and returns its type. */
+  private def readMessage(): Char =
     try {
       val tpe = in.readByte().toChar
       val len = in.readInt() - 4
-      val payload = new Array[Byte](len)
-      in.readFully(payload)
-      (tpe, payload)
+      if (len < 0) throw malformed(s"'$tpe' frame of length ${len + 4}")
+      if (len > buf.length) buf = new Array[Byte](math.max(len, buf.length * 2))
+      in.readFully(buf, 0, len)
+      bufLen = len
+      read += len + 5
+      tpe
     } catch {
       case e: java.net.SocketTimeoutException =>
         // A stalled server must not park a Spark task forever (r16
@@ -835,35 +896,45 @@ final class MiniPgWire(host: String, port: Int, database: String,
     *    sync for the next statement;
     *  - a failed read or handler leaves the stream position unknowable,
     *    so the wire is closed; a pending error is thrown with that
-    *    failure as its cause (fatal errors propagate as themselves).
+    *    failure as its cause (fatal errors propagate as themselves);
+    *  - DataRows go to `rows`, when given, straight from the reused
+    *    read buffer; its `true` ends the call mid-statement, and the
+    *    pump then returns false.
     */
   private def pump(phase: String, stop: String = "Z",
-      syncOwed: Boolean = false, hint: String = "")(
-      on: PartialFunction[(Char, Array[Byte]), Unit]): Unit = {
+      syncOwed: Boolean = false, hint: String = "", rows: RowSink = null)(
+      on: PartialFunction[(Char, Array[Byte]), Unit]): Boolean = {
     var owesSync = syncOwed
     def syncIfOwed(): Unit =
       if (owesSync) { owesSync = false; send('S'.toByte, Array.empty) }
     var failure: SQLException = null
     var done = false
+    var full = false
     try while (!done) {
-      val msg = readMessage()
-      msg._1 match {
-        case 'S' => onParameterStatus(msg._2)
-        case 'N' | 'A' => () // Notice / NotificationResponse
-        case 'Z' if failure != null || stop.indexOf('Z') >= 0 => done = true
-        case _ if failure != null => () // draining to ReadyForQuery
-        case tpe if on.isDefinedAt(msg) =>
-          on(msg)
-          done = stop.indexOf(tpe) >= 0
-        case 'E' =>
-          failure = errorFrom(msg._2)
-          syncIfOwed()
-        case other =>
-          failure = new SQLException(s"unexpected $phase reply '$other'$hint")
-          if (other == 'G') // CopyInResponse: the server awaits data
-            send('f'.toByte, cstr(s"COPY FROM STDIN is not read in $phase"))
-          syncIfOwed()
-          done = other == 'Z'
+      val tpe = readMessage()
+      if (tpe == 'D' && rows != null && failure == null) {
+        full = rows.row(buf, bufLen)
+        done = full
+      } else {
+        def payload = java.util.Arrays.copyOf(buf, bufLen)
+        tpe match {
+          case 'S' => onParameterStatus(payload)
+          case 'N' | 'A' => () // Notice / NotificationResponse
+          case 'Z' if failure != null || stop.indexOf('Z') >= 0 => done = true
+          case _ if failure != null => () // draining to ReadyForQuery
+          case _ if on.isDefinedAt((tpe, null)) =>
+            on((tpe, payload))
+            done = stop.indexOf(tpe) >= 0
+          case 'E' =>
+            failure = errorFrom(payload)
+            syncIfOwed()
+          case other =>
+            failure = new SQLException(s"unexpected $phase reply '$other'$hint")
+            if (other == 'G') // CopyInResponse: the server awaits data
+              send('f'.toByte, cstr(s"COPY FROM STDIN is not read in $phase"))
+            syncIfOwed()
+            done = other == 'Z'
+        }
       }
     } catch {
       case t: Throwable =>
@@ -873,6 +944,7 @@ final class MiniPgWire(host: String, port: Int, database: String,
         throw failure
     }
     if (failure != null) throw failure
+    !full
   }
 
   private def errorFrom(payload: Array[Byte]): SQLException = {
@@ -897,7 +969,8 @@ final class MiniPgWire(host: String, port: Int, database: String,
     * columns — the r17 fast path).
     */
   private def decodeRow(store: ColumnStore, p: Array[Byte]): Unit = {
-    val n = be16(p, 0)
+    checkCells(p, store.width)
+    val n = store.width
     var off = 2
     var c = 0
     while (c < n) {
@@ -1023,16 +1096,7 @@ final class MiniPgWire(host: String, port: Int, database: String,
     // Phase 2: Bind with per-column result formats, Execute, Sync.
     val formats: Array[Byte] =
       cols.map(c => if (BinaryOids(c.oid)) 1.toByte else 0.toByte)
-    val bind = new ArrayBuffer[Byte]()
-    bind ++= cstr("") // portal
-    bind ++= cstr("") // statement
-    bind ++= i16bytes(0) // no param format codes
-    bind ++= i16bytes(0) // no params
-    bind ++= i16bytes(formats.length)
-    formats.foreach(f => bind ++= i16bytes(f.toInt))
-    send('B'.toByte, bind.toArray, flushNow = false)
-    send('E'.toByte, cstr("") ++ Array[Byte](0, 0, 0, 0), flushNow = false)
-    send('S'.toByte, Array.empty) // Sync
+    bindExecuteSync(formats)
     val store = new ColumnStore(cols, formats, serverZone)
     var tag = "SELECT"
     pump("execute") {
@@ -1042,6 +1106,63 @@ final class MiniPgWire(host: String, port: Int, database: String,
       case ('I', _) => tag = "EMPTY"
     }
     Seq(Result(cols, store, tag))
+  }
+
+  /** The result columns of `sql` from one Parse + Describe + Sync: the
+    * statement is planned, never executed.
+    */
+  def describe(sql: String): Array[Col] = synchronized {
+    if (!open) throw new SQLException("connection is closed")
+    send('P'.toByte, cstr("") ++ cstr(sql) ++ i16bytes(0), flushNow = false)
+    send('D'.toByte, 'S'.toByte +: cstr(""), flushNow = false)
+    send('S'.toByte, Array.empty)
+    var cols: Array[Col] = Array.empty
+    pump("describe") {
+      case ('1' | 't', _) => () // ParseComplete / ParameterDescription
+      case ('T', p) => cols = parseRowDescription(p)
+      case ('n', _) => () // NoData (command-only statement)
+    }
+    cols
+  }
+
+  /** Starts `sql` over the extended protocol — Parse, Bind with result
+    * `formats` per column, Execute without a row limit, Sync, in one
+    * flush — and leaves its reply to [[readRows]]. The server streams
+    * the rows; TCP backpressure holds it while the reader is busy.
+    */
+  def execute(sql: String, formats: Array[Byte]): Unit = synchronized {
+    if (!open) throw new SQLException("connection is closed")
+    send('P'.toByte, cstr("") ++ cstr(sql) ++ i16bytes(0), flushNow = false)
+    bindExecuteSync(formats)
+  }
+
+  /** Bind the unnamed statement with result `formats`, Execute it
+    * without a row limit, Sync.
+    */
+  private def bindExecuteSync(formats: Array[Byte]): Unit = {
+    val bind = new ArrayBuffer[Byte]()
+    bind ++= cstr("") // portal
+    bind ++= cstr("") // statement
+    bind ++= i16bytes(0) // no param format codes
+    bind ++= i16bytes(0) // no params
+    bind ++= i16bytes(formats.length)
+    formats.foreach(f => bind ++= i16bytes(f.toInt))
+    send('B'.toByte, bind.toArray, flushNow = false)
+    send('E'.toByte, cstr("") ++ Array[Byte](0, 0, 0, 0), flushNow = false)
+    send('S'.toByte, Array.empty)
+  }
+
+  /** Hands the DataRows of the statement [[execute]] started to `rows`
+    * until it asks to stop or the statement ends. Returns true once
+    * the statement has ended and the wire is ready for the next one;
+    * a server error is thrown then.
+    */
+  def readRows(rows: RowSink): Boolean = synchronized {
+    if (!open) throw new SQLException("connection is closed")
+    pump("execute", rows = rows) {
+      case ('1' | '2', _) => () // ParseComplete / BindComplete
+      case ('C' | 'I', _) => () // CommandComplete / EmptyQueryResponse
+    }
   }
 
   def close(): Unit = synchronized {
@@ -1293,22 +1414,12 @@ object MiniPgJdbc {
 class MiniPgDriver extends java.sql.Driver {
   MiniPgDriver.ensureRegistered()
 
-  override def acceptsURL(url: String): Boolean =
-    url != null && url.startsWith("jdbc:postgresql:") &&
-      !MiniPgDriver.pgjdbcPresent
+  override def acceptsURL(url: String): Boolean = MiniPgDriver.accepts(url)
 
-  override def connect(url: String, info: Properties): java.sql.Connection = {
-    if (!acceptsURL(url)) return null
-    val (host, port, db, params) = MiniPgDriver.parseUrl(url)
-    def opt(k: String): Option[String] =
-      Option(if (info == null) null else info.getProperty(k)).orElse(params.get(k))
-    val user = opt("user").getOrElse("postgres")
-    val timeoutSec = opt("socketTimeout").map(_.toInt)
-      .getOrElse(MiniPgWire.DefaultSocketTimeoutSec)
-    val binary = opt("binaryTransfer").forall(_.toBoolean)
-    MiniPgJdbc.connection(() => new MiniPgWire(host, port, db, user,
-      opt("password"), timeoutSec, binary), url, user)
-  }
+  override def connect(url: String, info: Properties): java.sql.Connection =
+    if (!acceptsURL(url)) null
+    else MiniPgJdbc.connection(() => MiniPgDriver.openWire(url, info), url,
+      MiniPgDriver.user(url, info))
 
   override def getMajorVersion: Int = 0
   override def getMinorVersion: Int = 1
@@ -1325,6 +1436,31 @@ object MiniPgDriver {
     catch { case _: ClassNotFoundException => false }
 
   private val registered = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** The URLs this driver serves: `jdbc:postgresql:` while no pgjdbc is
+    * on the classpath.
+    */
+  def accepts(url: String): Boolean =
+    url != null && url.startsWith("jdbc:postgresql:") && !pgjdbcPresent
+
+  /** A connection property: `info` first, then the URL's parameters. */
+  private def property(url: String, info: Properties, k: String): Option[String] =
+    Option(if (info == null) null else info.getProperty(k))
+      .orElse(parseUrl(url)._4.get(k))
+
+  def user(url: String, info: Properties): String =
+    property(url, info, "user").getOrElse("postgres")
+
+  /** A started wire session for `url` (host, port, database, and the
+    * `user`, `password`, `socketTimeout` and `binaryTransfer` params).
+    */
+  def openWire(url: String, info: Properties): MiniPgWire = {
+    val (host, port, db, _) = parseUrl(url)
+    def opt(k: String) = property(url, info, k)
+    new MiniPgWire(host, port, db, user(url, info), opt("password"),
+      opt("socketTimeout").map(_.toInt).getOrElse(MiniPgWire.DefaultSocketTimeoutSec),
+      opt("binaryTransfer").forall(_.toBoolean))
+  }
 
   /** Idempotent DriverManager registration. */
   def ensureRegistered(): Unit =

@@ -23,6 +23,12 @@ import MiniPgWire.quote
   * batches. Everything Spark's JDBC source does not call throws the
   * same NAMED SQLFeatureNotSupportedException contract as the
   * remaining proxy faces.
+  *
+  * Prepared text treats every `?` outside quotes as a parameter
+  * marker ([[MiniPgJdbc.splitParams]]), PostgreSQL's own `?`, `?|` and
+  * `?&` jsonb operators included: a statement using them fails here
+  * with "parameter 1 not bound". [[graft.Flaco.readSqlToDataFrame]]
+  * sends its statement through [[MiniPgScan]] as written instead.
   */
 final class MiniPgPreparedStatement(wire: MiniPgWire, conn: Connection,
     sqlOpt: Option[String]) extends java.sql.PreparedStatement {

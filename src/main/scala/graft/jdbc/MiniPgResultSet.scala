@@ -123,37 +123,15 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
   override def getBytes(l: String): Array[Byte] = getBytes(findColumn(l))
   override def getDate(i: Int): java.sql.Date =
     if (store.kind(i - 1) == ColumnStore.KindDate) {
-      if (isNull(i)) null
-      else longAt(i) match {
-        case ColumnStore.DatePosInfinity => new java.sql.Date(Long.MaxValue)
-        case ColumnStore.DateNegInfinity => new java.sql.Date(Long.MinValue)
-        case d => java.sql.Date.valueOf(LocalDate.ofEpochDay(d))
-      }
+      if (isNull(i)) null else MiniPgResultSet.dateOf(longAt(i))
     } else {
       val v = strAt(i)
       if (v == null) null else java.sql.Date.valueOf(parseDateFast(v))
     }
   override def getDate(l: String): java.sql.Date = getDate(findColumn(l))
   override def getTimestamp(i: Int): java.sql.Timestamp = store.kind(i - 1) match {
-    case ColumnStore.KindTs =>
-      // Binary wall-clock µs → the same Timestamp.valueOf semantics
-      // as the text path (wall-clock re-interpreted in the JVM zone).
-      // PG ±infinity sentinels map to pgjdbc's convention (a
-      // Timestamp at Long.MAX/MIN ms).
-      if (isNull(i)) null
-      else longAt(i) match {
-        case ColumnStore.TsPosInfinity => new java.sql.Timestamp(Long.MaxValue)
-        case ColumnStore.TsNegInfinity => new java.sql.Timestamp(Long.MinValue)
-        case us => java.sql.Timestamp.valueOf(
-          ColumnStore.microsToLocalDateTime(us))
-      }
-    case ColumnStore.KindTstz =>
-      if (isNull(i)) null
-      else longAt(i) match {
-        case ColumnStore.TsPosInfinity => new java.sql.Timestamp(Long.MaxValue)
-        case ColumnStore.TsNegInfinity => new java.sql.Timestamp(Long.MinValue)
-        case us => ColumnStore.microsToTimestamptz(us)
-      }
+    case k @ (ColumnStore.KindTs | ColumnStore.KindTstz) =>
+      if (isNull(i)) null else MiniPgResultSet.timestampOf(k, longAt(i))
     case _ =>
     val v = strAt(i)
     if (v == null) null
@@ -361,6 +339,32 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
   override def updateTime(p0: java.lang.String, p1: java.sql.Time): Unit = nope("updateTime")
   override def updateTimestamp(p0: Int, p1: java.sql.Timestamp): Unit = nope("updateTimestamp")
   override def updateTimestamp(p0: java.lang.String, p1: java.sql.Timestamp): Unit = nope("updateTimestamp")
+}
+
+object MiniPgResultSet {
+
+  /** The Date a binary date cell (epoch day) reads as; PG's ±infinity
+    * map to pgjdbc's convention, a Date at Long.MAX/MIN ms.
+    */
+  def dateOf(epochDay: Long): java.sql.Date = epochDay match {
+    case ColumnStore.DatePosInfinity => new java.sql.Date(Long.MaxValue)
+    case ColumnStore.DateNegInfinity => new java.sql.Date(Long.MinValue)
+    case d => java.sql.Date.valueOf(LocalDate.ofEpochDay(d))
+  }
+
+  /** The Timestamp a binary timestamp (`KindTs`: wall-clock µs, read
+    * back with the text path's Timestamp.valueOf semantics in the JVM
+    * zone) or timestamptz (`KindTstz`: an instant) cell reads as; PG's
+    * ±infinity map to pgjdbc's convention, a Timestamp at Long.MAX/MIN
+    * ms.
+    */
+  def timestampOf(kind: Int, us: Long): java.sql.Timestamp = us match {
+    case ColumnStore.TsPosInfinity => new java.sql.Timestamp(Long.MaxValue)
+    case ColumnStore.TsNegInfinity => new java.sql.Timestamp(Long.MinValue)
+    case _ if kind == ColumnStore.KindTs =>
+      java.sql.Timestamp.valueOf(ColumnStore.microsToLocalDateTime(us))
+    case _ => ColumnStore.microsToTimestamptz(us)
+  }
 }
 
 /** Concrete metadata twin of [[MiniPgResultSet]] (Spark reads it once

@@ -38,7 +38,7 @@ import graft.FlacoSparkException
   */
 object FeatherSink {
 
-  private val BatchRows = 4096
+  private[graft] val BatchRows = 4096
 
   /** Ceiling for [[write]]'s `singleFile` parity mode. That mode
     * streams the WHOLE result through the driver by design

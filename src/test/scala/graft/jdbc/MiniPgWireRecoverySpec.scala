@@ -11,47 +11,60 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A one-connection PostgreSQL backend on an ephemeral port that
-  * replays fixed frames: `hello` answers the StartupMessage, and each
-  * frontend message that ends a client turn (Query, Flush, Sync) gets
-  * the next reply of `turns`. It counts the connections it `accepted`,
-  * records every frontend message type it reads and counts
-  * `clientClosed` down once the client hangs up.
+/** A PostgreSQL backend on an ephemeral port that replays fixed frames
+  * to each of its connections in turn: `hello` answers the
+  * StartupMessage, and each frontend message that ends a client turn
+  * (Query, Flush, Sync) gets the next reply of that connection's turns
+  * (`turns` for the first connection, `later` for the ones after). A
+  * [[ScriptedPgServer.Gate]] frame in a reply flushes what came before
+  * it and holds the rest until `gate` opens. The server counts the
+  * connections it `accepted`, records every frontend message type it
+  * reads and counts `clientClosed` down as clients hang up.
   */
 final class ScriptedPgServer(hello: Seq[Array[Byte]],
-    turns: Seq[Seq[Array[Byte]]]) extends AutoCloseable {
+    turns: Seq[Seq[Array[Byte]]], later: Seq[Seq[Seq[Array[Byte]]]] = Nil)
+    extends AutoCloseable {
+  private val connections = turns +: later
   private val server = new ServerSocket(0)
   val port: Int = server.getLocalPort
   val received = new ConcurrentLinkedQueue[Char]()
-  val clientClosed = new CountDownLatch(1)
+  val clientClosed = new CountDownLatch(connections.size)
   val accepted = new AtomicInteger()
+  val gate = new CountDownLatch(1)
 
   private val thread = new Thread(() => try {
-    val s = server.accept()
-    accepted.incrementAndGet()
-    try {
-      val in = new DataInputStream(s.getInputStream)
-      val out = s.getOutputStream
-      def reply(frames: Seq[Array[Byte]]): Unit = {
-        frames.foreach(f => out.write(f)); out.flush()
-      }
-      in.readFully(new Array[Byte](in.readInt() - 4)) // StartupMessage
-      reply(hello)
-      val script = turns.iterator
-      var tpe = in.read()
-      while (tpe >= 0) {
-        in.readFully(new Array[Byte](in.readInt() - 4))
-        received.add(tpe.toChar)
-        if ("QHS".indexOf(tpe) >= 0 && script.hasNext) reply(script.next())
-        tpe = in.read()
-      }
-    } catch { case _: java.io.IOException => () }
-    finally { s.close(); clientClosed.countDown() }
+    connections.foreach { turns =>
+      val s = server.accept()
+      accepted.incrementAndGet()
+      try {
+        val in = new DataInputStream(s.getInputStream)
+        val out = s.getOutputStream
+        def reply(frames: Seq[Array[Byte]]): Unit = {
+          frames.foreach { f =>
+            if (f eq ScriptedPgServer.Gate) {
+              out.flush(); gate.await(10, TimeUnit.SECONDS)
+            } else out.write(f)
+          }
+          out.flush()
+        }
+        in.readFully(new Array[Byte](in.readInt() - 4)) // StartupMessage
+        reply(hello)
+        val script = turns.iterator
+        var tpe = in.read()
+        while (tpe >= 0) {
+          in.readFully(new Array[Byte](in.readInt() - 4))
+          received.add(tpe.toChar)
+          if ("QHS".indexOf(tpe) >= 0 && script.hasNext) reply(script.next())
+          tpe = in.read()
+        }
+      } catch { case _: java.io.IOException => () }
+      finally { s.close(); clientClosed.countDown() }
+    }
   } catch { case _: java.io.IOException => () }) // closed before a client came
   thread.setDaemon(true)
   thread.start()
 
-  override def close(): Unit = server.close()
+  override def close(): Unit = { gate.countDown(); server.close() }
 }
 
 object ScriptedPgServer {
@@ -81,20 +94,31 @@ object ScriptedPgServer {
     d.writeByte('M'); cstr(d, msg)
     d.writeByte(0)
   }
-  /** RowDescription of text-format int4 columns. */
-  def int4Cols(names: String*): Array[Byte] = frame('T') { d =>
-    d.writeShort(names.length)
-    names.foreach { n =>
+  /** Holds the rest of a reply until the server's `gate` opens. */
+  val Gate: Array[Byte] = new Array[Byte](0)
+
+  /** RowDescription of `(name, type OID)` columns. */
+  def rowDescription(cols: (String, Int)*): Array[Byte] = frame('T') { d =>
+    d.writeShort(cols.length)
+    cols.foreach { case (n, oid) =>
       cstr(d, n); d.writeInt(0); d.writeShort(0)
-      d.writeInt(23); d.writeShort(4); d.writeInt(-1); d.writeShort(0)
+      d.writeInt(oid); d.writeShort(-1); d.writeInt(-1); d.writeShort(0)
     }
   }
-  def row(cells: String*): Array[Byte] = frame('D') { d =>
+  /** RowDescription of text-format int4 columns. */
+  def int4Cols(names: String*): Array[Byte] = rowDescription(names.map(_ -> 23): _*)
+  def row(cells: String*): Array[Byte] =
+    rawRow(cells.map(c => if (c == null) null else c.getBytes(UTF_8)): _*)
+  /** DataRow of raw cell payloads (null = SQL NULL). */
+  def rawRow(cells: Array[Byte]*): Array[Byte] = frame('D') { d =>
     d.writeShort(cells.length)
-    cells.foreach { c =>
-      val b = c.getBytes(UTF_8); d.writeInt(b.length); d.write(b)
+    cells.foreach { b =>
+      if (b == null) d.writeInt(-1) else { d.writeInt(b.length); d.write(b) }
     }
   }
+  val ParseComplete: Array[Byte] = frame('1')(_ => ())
+  val BindComplete: Array[Byte] = frame('2')(_ => ())
+  val NoParams: Array[Byte] = frame('t')(_.writeShort(0))
   def complete(tag: String): Array[Byte] = frame('C')(cstr(_, tag))
   def notification(channel: String, payload: String): Array[Byte] =
     frame('A') { d => d.writeInt(7); cstr(d, channel); cstr(d, payload) }
@@ -183,6 +207,32 @@ class MiniPgWireRecoverySpec extends AnyFunSuite {
         assert(server.accepted.get === 1)
       } finally conn.close()
     } finally server.close()
+  }
+
+  test("a frame whose length is under 4 bytes is a protocol error " +
+    "that closes the wire") {
+    val bad = Array[Byte]('D', 0, 0, 0, 2)
+    val server = new ScriptedPgServer(Hello, Seq(Seq(int4Cols("x"), bad)))
+    val wire = wireTo(server)
+    try {
+      val e = intercept[SQLException](wire.query("select 1"))
+      assert(e.getSQLState === "08P01")
+      assert(!wire.isOpen)
+      assert(server.clientClosed.await(2, TimeUnit.SECONDS))
+    } finally { wire.close(); server.close() }
+  }
+
+  test("a DataRow whose cell count differs from its RowDescription is " +
+    "a protocol error that closes the wire") {
+    val server = new ScriptedPgServer(Hello,
+      Seq(Seq(int4Cols("x"), row("1", "2"), complete("SELECT 1"), Ready)))
+    val wire = wireTo(server)
+    try {
+      val e = intercept[SQLException](wire.query("select 1"))
+      assert(e.getSQLState === "08P01")
+      assert(!wire.isOpen)
+      assert(server.clientClosed.await(2, TimeUnit.SECONDS))
+    } finally { wire.close(); server.close() }
   }
 
   test("an ErrorResponse in queryExtended's describe phase sends Sync " +

@@ -77,6 +77,16 @@ class PgTypesLiveSpec extends AnyFunSuite {
     assert(byId(3)._2 === "[]")
   }
 
+  test("jsonb's ?, ?| and ?& operators reach PostgreSQL as written") {
+    val u = uri
+    val df = Flaco.readSqlToDataFrame(spark, u,
+      """select '{"a":1}'::jsonb ? 'a' as has_a,
+        |  '{"a":1}'::jsonb ?| array['b'] as any_b,
+        |  '{"a":1}'::jsonb ?& array['a'] as all_a""".stripMargin)
+    val r = df.collect().head
+    assert((r.getBoolean(0), r.getBoolean(1), r.getBoolean(2)) === ((true, false, true)))
+  }
+
   test("xml loads as string via the name-first arm and parses " +
       "downstream with from_xml (the reference hard-aborts on xml, " +
       "lib.rs:382-385)") {

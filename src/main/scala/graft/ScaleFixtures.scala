@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Corpus
@@ -209,195 +209,34 @@ object ScaleFixtures {
       .repartition(FixtureFiles)
       .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
   }
-}
 
-/** Scale-evidence main (SCALING.md's measured numbers):
-  *
-  *   runMain graft.Sweep skew <srcDir> <workDir>
-  *     builds hot-key twins of events + lineitem and times the
-  *     per-key-window queries on uniform vs skewed data;
-  *
-  *   runMain graft.Sweep skewx <srcDir> <workDir> [factor]
-  *     skew × scale: replicates events+lineitem factor× FIRST, then
-  *     skews the replicated corpus — the hot partition is factor×
-  *     the plain-skew one, the first configuration a straggler
-  *     cliff could appear in;
-  *
-  *   runMain graft.Sweep x10 <srcDir> <workDir> [factor] [query...]
-  *     builds the replicated corpus and times the document/event
-  *     heavy queries (or just the listed ones) at 1× and k×,
-  *     reporting the observed scaling exponent log_k(t_k / t_1)
-  *     per query.
-  *
-  *   runMain graft.Sweep skewdocs <srcDir> <workDir> [factor]
-  *     dedup/similarity under skew × scale: replicates documents
-  *     factor× FIRST, then concentrates ~10% of the replicated
-  *     corpus into ONE near-dup cluster — the hot-bucket/df-cap
-  *     stress (candidate pairs inside the cluster would otherwise
-  *     grow quadratically). Times the LSH/containment/CC family on
-  *     uniform-k× vs hot-k× and reports ratios.
-  *
-  * Timing mirrors Bench: min-of-2 fully-materialized (noop write)
-  * runs, caches cleared between queries.
-  */
-object Sweep {
-
-  private val SkewQueries = Seq("q75_gap_fill", "q79_interpolate",
-    "q85_rolling_zscore", "q87_attribution", "q93_twa",
-    "q10_window_running", "q59_range_window",
-    // round 9: the per-user collector — the one new shape whose
-    // state is the GROUP, not O(1): a hot user materializes its
-    // whole event list in one task (q121's scaladoc bounds the
-    // contract to bounded keys; this measures the hot-key cost).
-    "q121_array_agg_order")
-
-  private val DocSkewQueries = Seq("q27_ngram_jaccard",
-    "q28_minhash_lsh", "q43_dedup_clusters", "q89_containment")
-
-  private val SweepQueries = Seq("q58_curated_pipeline",
-    "q52_training_pipeline", "q73_tfidf", "q79_interpolate",
-    "q71_edit_distance", "q43_dedup_clusters", "q89_containment",
-    "q72_chunk_udtf", "q75_gap_fill", "q85_rolling_zscore")
-
-  def main(args: Array[String]): Unit = {
-    val mode = args(0)
-    val srcDir = args(1)
-    val workDir = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Flaco.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-
-    def once(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      t
+  /** The x10 sweep's `factor`× twin of every table it reads, written
+    * to `dir` unless a marker says a matching build is there.
+    * Deterministic fixtures are REUSED across sweep sessions
+    * (marker-tagged by factor+source): rebuilding them leaves
+    * multi-GB of dirty pages flushing through the first timed legs,
+    * and a SHORT session's settle pass is not long enough to absorb
+    * that (measured: q240 t1 15.2 s in a 2-query session with rebuild
+    * vs 1.40 s with prebuilt fixtures). First run of a configuration
+    * still pays once. The tag includes [[FixtureGenVersion]] so a
+    * fixture-writer change invalidates prebuilt fixtures.
+    */
+  def prebuilt(spark: SparkSession, srcDir: String, dir: String,
+      factor: Int): Unit = {
+    val marker = java.nio.file.Paths.get(dir, ".fixture")
+    val tag = s"x$factor:$srcDir:v$FixtureGenVersion"
+    val fresh = !java.nio.file.Files.exists(marker) ||
+      java.nio.file.Files.readString(marker) != tag
+    if (fresh) {
+      replicated(spark, srcDir, dir, factor)
+      // The q108b closure walks customer keys — replicate them too
+      // (cheap; only sweeps that list q108b read the table).
+      replicatedCustomer(spark, srcDir, dir, factor)
+      // orders + lineitem twins for the profiler (q238/q239 scan
+      // orders) and layout-health (q237 scans lineitem) sweeps.
+      replicatedOrders(spark, srcDir, dir, factor)
+      replicatedLineitem(spark, srcDir, dir, factor)
+      java.nio.file.Files.writeString(marker, tag): Unit
     }
-    def minOf2(name: String, dir: String): Double =
-      math.min(once(name, dir), once(name, dir))
-
-    /** FULL settle pass before any timing — every (query, dir) pair
-      * runs once untimed, THEN the timed min-of-2 pass starts. Two
-      * measured contaminations land on the session's early timed
-      * legs otherwise: (a) whole-stage codegen + C2 compilation
-      * (q240 t1 = 4.3/16.3/30.1 s across three sessions on IDENTICAL
-      * 1× data, t10 stable ≈ 6–7 s — a negative "exponent" that was
-      * session order, not data cost), and (b) the page-cache flush
-      * of the multi-GB fixture writes that immediately precede
-      * timing — a per-query warm run was NOT enough (warm + both
-      * timed runs still landed inside the flush window: q240
-      * t1 = 21.8 s warmed vs 1.40 s steady-state via Bench on the
-      * same fixture dir). The settle pass absorbs both.
-      */
-    def settle(qs: Seq[String], dirs: Seq[String]): Unit =
-      for (q <- qs; d <- dirs) once(q, d): Unit
-
-    /** Times SkewQueries on a uniform vs a hot-key twin of the same
-      * corpus — shared by `skew` (driver corpus) and `skewx`
-      * (replicated corpus, where the hot partition is factor× the
-      * sf0.1 one — the first configuration a straggler cliff COULD
-      * appear in).
-      */
-    def skewReport(uniformDir: String, skewDir: String): Unit = {
-      val hotUser = ScaleFixtures.skewedEvents(spark, uniformDir, skewDir)
-      val hotSupp = ScaleFixtures.skewedLineitem(spark, uniformDir, skewDir)
-      val evTotal = Corpus.read(spark, skewDir, "events").count()
-      val evHot = Corpus.read(spark, skewDir, "events")
-        .filter(col("user_id") === hotUser).count()
-      println(f"[skew] hot user $hotUser holds $evHot/$evTotal events " +
-        f"(${100.0 * evHot / evTotal}%.1f%%); hot supplier $hotSupp")
-      settle(SkewQueries, Seq(uniformDir, skewDir))
-      val lines = SkewQueries.map { q =>
-        val tu = minOf2(q, uniformDir)
-        val ts = minOf2(q, skewDir)
-        f""""$q": {"uniform": $tu%.3f, "skewed": $ts%.3f, "ratio": ${ts / tu}%.2f}"""
-      }
-      println(lines.mkString("SWEEP_RESULT {", ", ", "}"))
-    }
-
-    mode match {
-      case "skew" =>
-        skewReport(srcDir, workDir)
-      case "skewx" =>
-        // Skew × scale: replicate events AND lineitem factor× first,
-        // then skew THAT — the hot key then holds ~10% of factor×
-        // the rows (at factor 10 on sf0.1: a ~1M-event corpus with a
-        // ~100k-event hot user).
-        val factor = if (args.length > 3) args(3).toInt else 10
-        val baseDir = s"$workDir/base"
-        ScaleFixtures.replicated(spark, srcDir, baseDir, factor)
-        ScaleFixtures.replicatedLineitem(spark, srcDir, baseDir, factor)
-        skewReport(baseDir, s"$workDir/skew")
-      case "x10" =>
-        val factor = if (args.length > 3) args(3).toInt else 10
-        // Optional trailing query names restrict the sweep (e.g. the
-        // output-linear trio at a deeper factor).
-        val names = if (args.length > 4) args.drop(4).toSeq else SweepQueries
-        // The 1× side is a factor-1 twin written through the SAME
-        // fixture writers ([[ScaleFixtures.FixtureFiles]] part-files
-        // per table, identical rows), NOT the driver corpus directly:
-        // the corpus's single-file tables scan as ONE task, the k×
-        // twin as many, and that parallelism delta — not data cost —
-        // is what a srcDir-based t1 measures on scan-dominated
-        // queries (observed as negative exponents on the profiler
-        // family). Same layout both sides → the exponent is volume.
-        val baseDir = s"$workDir/base1x"
-        val kDir = s"$workDir/x$factor"
-        Seq(1 -> baseDir, factor -> kDir).foreach { case (f, d) =>
-          // Deterministic fixtures are REUSED across sweep sessions
-          // (marker-tagged by factor+source): rebuilding them leaves
-          // multi-GB of dirty pages flushing through the first timed
-          // legs, and a SHORT session's settle pass is not long
-          // enough to absorb that (measured: q240 t1 15.2 s in a
-          // 2-query session with rebuild vs 1.40 s with prebuilt
-          // fixtures). First run of a configuration still pays once.
-          val marker = java.nio.file.Paths.get(d, ".fixture")
-          // Tag includes the generator version so a fixture-writer
-          // change invalidates prebuilt fixtures (r15 ADVICE).
-          val tag = s"x$f:$srcDir:v${ScaleFixtures.FixtureGenVersion}"
-          val fresh = !java.nio.file.Files.exists(marker) ||
-            java.nio.file.Files.readString(marker) != tag
-          if (fresh) {
-            ScaleFixtures.replicated(spark, srcDir, d, f)
-            // The q108b closure walks customer keys — replicate them
-            // too (cheap; only sweeps that list q108b read the table).
-            ScaleFixtures.replicatedCustomer(spark, srcDir, d, f)
-            // orders + lineitem twins for the profiler (q238/q239 scan
-            // orders) and layout-health (q237 scans lineitem) sweeps.
-            ScaleFixtures.replicatedOrders(spark, srcDir, d, f)
-            ScaleFixtures.replicatedLineitem(spark, srcDir, d, f)
-            java.nio.file.Files.writeString(marker, tag): Unit
-          }
-        }
-        settle(names, Seq(baseDir, kDir))
-        val lines = names.map { q =>
-          val t1 = minOf2(q, baseDir)
-          val tk = minOf2(q, kDir)
-          val exp = math.log(tk / t1) / math.log(factor.toDouble)
-          f""""$q": {"t1": $t1%.3f, "t$factor": $tk%.3f, "exponent": $exp%.2f}"""
-        }
-        println(lines.mkString("SWEEP_RESULT {", ", ", "}"))
-      case "skewdocs" =>
-        val factor = if (args.length > 3) args(3).toInt else 10
-        val baseDir = s"$workDir/base"
-        val hotDir = s"$workDir/hot"
-        ScaleFixtures.replicated(spark, srcDir, baseDir, factor)
-        val clusterSize = ScaleFixtures.skewedDocuments(spark, baseDir, hotDir)
-        val total = Corpus.read(spark, hotDir, "documents").count()
-        println(f"[skewdocs] hot near-dup cluster: $clusterSize/$total docs " +
-          f"(${100.0 * clusterSize / total}%.1f%%)")
-        // Optional trailing query names override the default list.
-        val docQs = if (args.length > 4) args.drop(4).toSeq else DocSkewQueries
-        settle(docQs, Seq(baseDir, hotDir))
-        val lines = docQs.map { q =>
-          val tu = minOf2(q, baseDir)
-          val ts = minOf2(q, hotDir)
-          f""""$q": {"uniform": $tu%.3f, "hot": $ts%.3f, "ratio": ${ts / tu}%.2f}"""
-        }
-        println(lines.mkString("SWEEP_RESULT {", ", ", "}"))
-      case other => sys.error(s"unknown mode $other")
-    }
-    spark.stop()
   }
 }

@@ -3,8 +3,11 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+
+import graft.queries.Registry
+
+/** Driver-run correctness dump: each registered query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Queries are submitted from a small thread pool: Spark's scheduler is
   * thread-safe and the suite is dominated by many short jobs, so
@@ -15,22 +18,13 @@ import scala.concurrent.duration.Duration
   * killed part-way).
   */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
-    // Dynamic oracles (q254) embed artifacts trained on the corpus
-    // under verification — point them at it BEFORE the oracle dump.
-    SparkEntry.oracleCorpusDir = sfDir
-    // Optional 3rd+ args: run only these queries (local iteration;
-    // the driver always passes exactly two).
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = Flaco.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+  /** A JSON object of string members. Escapes backslash, quote and ALL
+    * control chars (< 0x20): a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness.
+    */
+  def jsonObject(members: Seq[(String, String)]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -40,22 +34,34 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    members.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
 
-    val todo = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .sortBy(_._1)
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args.take(2)
+    // Optional 3rd+ args: run only these queries (local iteration;
+    // the driver always passes exactly two).
+    val only = args.drop(2).toSet
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val spark = Flaco.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
+    new java.io.File(outDir).mkdirs()
+
+    // Oracles render for the corpus under verification (q254 embeds
+    // the merge table trained on it).
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObject(Registry.oracles(spark, sfDir)))
+
+    val todo = Registry.all.filter(q => only.isEmpty || only(q.name)).sortBy(_.name)
     val workers = math.max(2, math.min(6, cpus.toInt / 4))
     val pool = Executors.newFixedThreadPool(workers)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val futures = todo.map { case (name, fn) =>
+    val futures = todo.map { q =>
       Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
         }
       }
     }

@@ -324,7 +324,7 @@ object MiniPgWire {
     * used.
     */
   final class ColumnStore(cols: Array[Col], formats: Array[Byte],
-      tz: java.time.ZoneId) {
+      tz: java.time.ZoneId) extends RowSink {
     import ColumnStore._
 
     def this(cols: Array[Col], formats: Array[Byte]) =
@@ -334,8 +334,6 @@ object MiniPgWire {
     def this(cols: Array[Col]) = this(cols, new Array[Byte](cols.length))
 
     private val n = cols.length
-    /** Cells a DataRow of this result carries. */
-    def width: Int = n
     private val bin: Array[Boolean] = formats.map(_ == 1.toByte)
     private val oids: Array[Int] = cols.map(_.oid)
     private val kinds: Array[Int] = Array.tabulate(n)(c =>
@@ -489,6 +487,26 @@ object MiniPgWire {
 
     def rowDone(): Unit = size += 1
 
+    /** Appends DataRow `p(0 until len)`: an int16 cell count, then per
+      * cell an int32 length (-1 = NULL) and that many bytes, decoded
+      * straight into the typed vectors (no per-cell String for int/bool
+      * columns — the r17 fast path).
+      */
+    override def row(p: Array[Byte], len: Int): Boolean = {
+      checkCells(p, len, n)
+      var off = 2
+      var c = 0
+      while (c < n) {
+        val l = cellLen(p, len, off)
+        off += 4
+        put(c, p, off, l)
+        if (l > 0) off += l
+        c += 1
+      }
+      rowDone()
+      false
+    }
+
     /** Empties the store for reuse; its vectors keep their capacity. */
     def clear(): Unit = {
       size = 0
@@ -531,11 +549,24 @@ object MiniPgWire {
   private[jdbc] def malformed(what: String): SQLException =
     new SQLException(s"malformed server message: $what", "08P01")
 
-  /** Throws unless DataRow `p` carries `width` cells. */
-  private[jdbc] def checkCells(p: Array[Byte], width: Int): Unit = {
+  /** Throws unless DataRow `p(0 until len)` carries `width` cells. */
+  private[jdbc] def checkCells(p: Array[Byte], len: Int, width: Int): Unit = {
+    if (len < 2) throw malformed("DataRow without a cell count")
     val n = be16(p, 0)
     if (n != width)
       throw malformed(s"DataRow of $n cells for a $width-column result")
+  }
+
+  /** The length (-1 for NULL) of the cell whose length field starts at
+    * `off` of DataRow `p(0 until len)`; throws when the field or the
+    * cell runs past the row, since bytes beyond `len` are stale.
+    */
+  private[jdbc] def cellLen(p: Array[Byte], len: Int, off: Int): Int = {
+    if (off > len - 4) throw malformed("cell length field past its DataRow")
+    val l = be32(p, off)
+    if (l < -1 || l > len - off - 4)
+      throw malformed(s"cell of $l bytes past its DataRow")
+    l
   }
 
   /** One result of a simple query: columns (empty for command-only
@@ -963,26 +994,6 @@ final class MiniPgWire(host: String, port: Int, database: String,
     new SQLException(msg, state)
   }
 
-  /** DataRow → the next row of `store`: an int16 cell count, then per
-    * cell an int32 length (-1 = NULL) and that many bytes, decoded
-    * straight into the typed vectors (no per-cell String for int/bool
-    * columns — the r17 fast path).
-    */
-  private def decodeRow(store: ColumnStore, p: Array[Byte]): Unit = {
-    checkCells(p, store.width)
-    val n = store.width
-    var off = 2
-    var c = 0
-    while (c < n) {
-      val len = be32(p, off)
-      off += 4
-      store.put(c, p, off, len)
-      if (len > 0) off += len
-      c += 1
-    }
-    store.rowDone()
-  }
-
   /** Run one simple query (may contain multiple ';'-separated
     * statements); collect all result sets / command tags.
     */
@@ -992,11 +1003,11 @@ final class MiniPgWire(host: String, port: Int, database: String,
     val results = ArrayBuffer.empty[Result]
     var cols: Array[Col] = Array.empty
     var store: ColumnStore = new ColumnStore(Array.empty)
-    pump("query") {
+    // DataRows go to the store of the latest RowDescription.
+    pump("query", rows = store.row(_, _)) {
       case ('T', p) =>
         cols = parseRowDescription(p)
         store = new ColumnStore(cols)
-      case ('D', p) => decodeRow(store, p)
       case ('C', p) =>
         results += Result(cols, store, new String(p, 0, p.length - 1, UTF_8))
         cols = Array.empty
@@ -1099,9 +1110,8 @@ final class MiniPgWire(host: String, port: Int, database: String,
     bindExecuteSync(formats)
     val store = new ColumnStore(cols, formats, serverZone)
     var tag = "SELECT"
-    pump("execute") {
+    pump("execute", rows = store) {
       case ('2', _) => () // BindComplete
-      case ('D', p) => decodeRow(store, p)
       case ('C', p) => tag = new String(p, 0, p.length - 1, UTF_8)
       case ('I', _) => tag = "EMPTY"
     }
@@ -1484,11 +1494,15 @@ object MiniPgDriver {
     val port = if (u.getPort > 0) u.getPort else 5432
     val db = Option(u.getPath).map(_.stripPrefix("/")).filter(_.nonEmpty)
       .getOrElse("postgres")
-    val params = Option(u.getQuery).map(_.split('&').toSeq).getOrElse(Seq.empty)
+    // Split the RAW query at '&' and each pair at its first '=', then
+    // URL-decode both sides, as pgjdbc does: a decoded %26 or a '=' in
+    // a value (a password) must not split it.
+    def decode(s: String) = java.net.URLDecoder.decode(s, UTF_8)
+    val params = Option(u.getRawQuery).toSeq.flatMap(_.split('&'))
       .flatMap { kv =>
-        kv.split('=') match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
+        kv.indexOf('=') match {
+          case -1 => None
+          case i => Some(decode(kv.take(i)) -> decode(kv.drop(i + 1)))
         }
       }.toMap
     (host, port, db, params)

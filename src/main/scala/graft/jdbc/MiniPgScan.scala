@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-import MiniPgWire.{Col, ColumnStore, Result, be32}
+import MiniPgWire.{Col, ColumnStore, Result}
 
 /** A DataSource V2 read of one statement on a MiniPg-served PostgreSQL:
   * each task's wire rows decode straight into the vectors of a
@@ -192,13 +192,12 @@ final class MiniPgPartitionReader(wire: MiniPgWire, stmt: String,
     } catch { case t: Throwable => close(); throw t }
 
   override def row(p: Array[Byte], len: Int): Boolean = {
-    MiniPgWire.checkCells(p, width)
+    MiniPgWire.checkCells(p, len, width)
     var off = 2
     var c = 0
     while (c < fields.length) {
-      val l = be32(p, off)
+      val l = MiniPgWire.cellLen(p, len, off)
       off += 4
-      if (l > len - off) throw MiniPgWire.malformed(s"cell of $l bytes past its DataRow")
       val cell = cells(c)
       if (cell == null) side.put(sideAt(c), p, off, l)
       else if (l < 0) vectors(c).putNull(n)

@@ -370,4 +370,11 @@ class MiniPgDriverSpec extends AnyFunSuite {
       "jdbc:postgresql://db.example.com/pagila")
     assert((h2, p2, db2) === ("db.example.com", 5432, "pagila"))
   }
+
+  test("URL parameter values keep '=' and decode percent escapes after " +
+    "the split") {
+    val (_, _, _, params) = MiniPgDriver.parseUrl(
+      "jdbc:postgresql://localhost/db?user=u%20x&password=a=b%26c&ssl")
+    assert(params === Map("user" -> "u x", "password" -> "a=b&c"))
+  }
 }

@@ -110,6 +110,23 @@ class MiniPgScanSpec extends AnyFunSuite {
     } finally { r.close(); server.close() }
   }
 
+  test("a DataRow cut short inside a length field fails the reader " +
+    "with 08P01") {
+    // The second row ends one byte into its NULL length; the first
+    // row left that byte 0xff in the reused read buffer, so reading
+    // the field anyway yields -1, a NULL.
+    val cut = frame('D') { d =>
+      d.writeShort(2); d.writeInt(4); d.write(int4(8)); d.write(Array[Byte](-1, -1, -1))
+    }
+    val server = new ScriptedPgServer(Hello,
+      Seq(streamed(Seq(rawRow(int4(7), null), cut))))
+    val r = reader(server, Seq("x" -> 23, "y" -> 23))
+    try {
+      assert(intercept[SQLException](r.next()).getSQLState === "08P01")
+      assert(server.clientClosed.await(2, TimeUnit.SECONDS))
+    } finally { r.close(); server.close() }
+  }
+
   /** The same DataRows through the JDBC path (ColumnStore, then Spark's
     * getters) and through the reader: each side's rows, or its failure.
     */

@@ -235,6 +235,27 @@ class MiniPgWireRecoverySpec extends AnyFunSuite {
     } finally { wire.close(); server.close() }
   }
 
+  test("a DataRow cell that runs past its row is a protocol error that " +
+    "closes the wire, in query and in queryExtended") {
+    val long = frame('D') { d =>
+      d.writeShort(1); d.writeInt(100); d.write("42".getBytes(UTF_8))
+    }
+    val replies = Seq(
+      Seq(Seq(int4Cols("x"), long, complete("SELECT 1"), Ready)),
+      Seq(Seq(ParseComplete, NoParams, int4Cols("x")),
+        Seq(BindComplete, long, complete("SELECT 1"), Ready)))
+    val runs = Seq[MiniPgWire => Any](_.query("select 1"), _.queryExtended("select 1"))
+    replies.zip(runs).foreach { case (turns, run) =>
+      val server = new ScriptedPgServer(Hello, turns)
+      val wire = wireTo(server)
+      try {
+        assert(intercept[SQLException](run(wire)).getSQLState === "08P01")
+        assert(!wire.isOpen)
+        assert(server.clientClosed.await(2, TimeUnit.SECONDS))
+      } finally { wire.close(); server.close() }
+    }
+  }
+
   test("an ErrorResponse in queryExtended's describe phase sends Sync " +
     "and leaves the wire reusable") {
     val server = new ScriptedPgServer(Hello, Seq(

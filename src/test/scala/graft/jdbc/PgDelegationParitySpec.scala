@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.DataFrame
 
-import graft.{Flaco, SparkEntry, TestSpark}
+import graft.{Flaco, TestSpark}
+import graft.queries.Registry
 import graft.sources.Corpus
 
 /** THE reference contract, executed end-to-end: flaco's entire query
@@ -35,7 +36,7 @@ import graft.sources.Corpus
   * casts, grouping_id arity, double type name — plus every oracle
   * over documents/events/embeddings, whose list/regexp/epoch
   * functions PG spells differently). The oracle STRINGS are read from
-  * [[SparkEntry.oracleSql]] — not copies — so drift between the gates
+  * the [[Registry]]'s records — not copies — so drift between the gates
   * is impossible.
   */
 class PgDelegationParitySpec extends AnyFunSuite {
@@ -106,8 +107,8 @@ class PgDelegationParitySpec extends AnyFunSuite {
       val u = uri
       assert(loaded)
       val viaPg = Flaco.readSqlToDataFrame(spark, u,
-        SparkEntry.oracleSql(name))
-      val native = SparkEntry.queries(name)(spark, TestSpark.sf)
+        Registry(name).oracleText(spark, TestSpark.sf).get)
+      val native = Registry(name).build(spark, TestSpark.sf)
       val a = canon(viaPg)
       val b = canon(native)
       assert(a.nonEmpty, "PG returned no rows — tables not loaded?")

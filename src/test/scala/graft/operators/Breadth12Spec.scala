@@ -179,7 +179,7 @@ class Breadth12Spec extends AnyFunSuite {
   }
 
   test("SEARCH DEPTH FIRST rank is exactly recursive preorder; BFS differs") {
-    val rows = graft.Flaco.sql(spark, sf, graft.SparkEntry.searchOrderSparkSql)
+    val rows = graft.Flaco.sql(spark, sf, graft.queries.SqlQueries.searchOrderSparkSql)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4)))
@@ -285,7 +285,7 @@ class Breadth12Spec extends AnyFunSuite {
   test("projected EXISTS plans as an existence join and round-trips to dates") {
     // q164: the EXISTS flags must survive as COLUMNS — the planner
     // emits ExistenceJoin, not a semi-join filter.
-    val plan = graft.Flaco.sql(spark, sf, graft.SparkEntry.selectExistsSql)
+    val plan = graft.Flaco.sql(spark, sf, graft.queries.SqlQueries.selectExistsSql)
       .queryExecution.optimizedPlan
     val hasExistence = plan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join
@@ -299,7 +299,7 @@ class Breadth12Spec extends AnyFunSuite {
       .select(col("o_custkey")).collect().map(_.getLong(0)).toSet
     val any = graft.sources.Corpus.read(spark, sf, "orders")
       .select(col("o_custkey")).collect().map(_.getLong(0)).toSet
-    graft.Flaco.sql(spark, sf, graft.SparkEntry.selectExistsSql)
+    graft.Flaco.sql(spark, sf, graft.queries.SqlQueries.selectExistsSql)
       .collect().foreach { r =>
         val c = r.getLong(0)
         assert(r.getLong(1) === (if (big(c)) 1L else 0L), s"has_big $c")

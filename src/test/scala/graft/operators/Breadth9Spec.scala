@@ -84,7 +84,7 @@ class Breadth9Spec extends AnyFunSuite {
   }
 
   test("calendar spine is gap-free, quarter-weighted and zero-filled") {
-    val rows = graft.SparkEntry.queries("q124_calendar_spine")(spark, sf)
+    val rows = graft.queries.Registry("q124_calendar_spine").build(spark, sf)
       .collect()
       .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
@@ -206,7 +206,7 @@ class Breadth9Spec extends AnyFunSuite {
   }
 
   test("range predicates replay the definitional truth table") {
-    val rows = graft.SparkEntry.queries("q131_range_predicates")(spark, sf)
+    val rows = graft.queries.Registry("q131_range_predicates").build(spark, sf)
       .collect()
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getLong(1)),

@@ -121,7 +121,7 @@ class BreadthSpec extends AnyFunSuite {
   }
 
   test("null-semantics gate: one NULL poisons NOT IN, EXISTS mirrors IN") {
-    val got = graft.Flaco.sql(spark, sf, graft.SparkEntry.oracleSql("q68_null_semantics"))
+    val got = graft.Flaco.sql(spark, sf, graft.queries.Registry("q68_null_semantics").oracleText(spark, sf).get)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val custTotal = graft.sources.Corpus.read(spark, sf, "customer").count()
     assert(got("not_in_nulls") === 0L)

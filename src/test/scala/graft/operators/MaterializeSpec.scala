@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.TestSpark
+import graft.queries.Registry
 
 /** Storage hygiene of every operator that materializes working
   * relations: after a query is built and collected, each persisted RDD
@@ -63,7 +64,7 @@ class MaterializeSpec extends AnyFunSuite {
     "q175_cluster_topics")
 
   private val rows: Seq[(String, () => DataFrame)] =
-    queries.map(q => q -> (() => SparkEntry.queries(q)(spark, sf))) ++ Seq(
+    queries.map(q => q -> (() => Registry(q).build(spark, sf))) ++ Seq(
       // A 200-node chain drives many pointer-jumping rounds.
       "connectedComponents on a 200-node chain" -> { () =>
         val s = spark

@@ -8,7 +8,7 @@ import graft.functions.VectorFunctions
 
 /** Sanity specs per north-star operator family (the value-level
   * correctness gate is the driver's DuckDB oracle over
-  * SparkEntry.queries; these pin the invariants an oracle can't:
+  * graft.queries.Registry; these pin the invariants an oracle can't:
   * kernel math on known inputs, domain constraints, cross-operator
   * consistency).
   */

@@ -6,7 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.TestSpark
+import graft.queries.Registry
 
 /** The two delegated-SQL-surface gates added in round 8: Spark's own
   * recursive-CTE execution (q108) and LATERAL correlated table
@@ -23,7 +24,7 @@ class RecursiveSqlSpec extends AnyFunSuite {
   private val sf = TestSpark.sf
 
   test("recursive ancestor closure has log-depth and one chain per node") {
-    val rows = SparkEntry.queries("q108_recursive_cte")(spark, sf)
+    val rows = Registry("q108_recursive_cte").build(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val maxKey = rows.map(_._1).max
     val wantDepth = (63 - java.lang.Long.numberOfLeadingZeros(maxKey)).toLong
@@ -45,7 +46,7 @@ class RecursiveSqlSpec extends AnyFunSuite {
 
   test("UNION-distinct closure matches a per-node BFS replay and the " +
       "fixture genuinely converges") {
-    val got = SparkEntry.queries("q108b_recursive_union")(spark, sf)
+    val got = Registry("q108b_recursive_union").build(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val keys = graft.sources.Corpus.read(spark, sf, "customer")
       .select(col("c_custkey").cast("long")).collect().map(_.getLong(0))
@@ -133,7 +134,7 @@ class RecursiveSqlSpec extends AnyFunSuite {
   }
 
   test("lateral subquery decorrelates to a join, matches the window formulation") {
-    val df = SparkEntry.queries("q109_lateral_join")(spark, sf)
+    val df = Registry("q109_lateral_join").build(spark, sf)
     // The 100 TB contract: Catalyst must rewrite the correlated
     // LIMIT subquery to rank-over-partition + join. A surviving
     // LateralJoin, nested-loop or cartesian physical join would mean

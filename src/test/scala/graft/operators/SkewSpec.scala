@@ -16,7 +16,7 @@ import graft.sources.Corpus
   * semantics locally and demands exact agreement, proving the
   * operators' per-key state stays a pure function of the key's own
   * rows no matter how large the partition gets. Wall-clock skew
-  * ratios are measured by `graft.Sweep skew` and recorded in
+  * ratios are measured by `graft.Bench --sweep skew` and recorded in
   * SCALING.md (timing asserts in a spec would flake on a noisy host).
   */
 class SkewSpec extends AnyFunSuite {

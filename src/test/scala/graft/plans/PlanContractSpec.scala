@@ -6,11 +6,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.TestSpark
+import graft.queries.Registry
 
 /** The suite-wide 100 TB plan contract — the r11 verdict's ask #7:
   * the e5cc33e manual plan audit turned into a permanent gate over
-  * EVERY SparkEntry query.
+  * EVERY registered query.
   *
   * Three scale-killers are banned from every optimized plan:
   *
@@ -179,9 +180,10 @@ class PlanContractSpec extends AnyFunSuite {
     (boundedGlobalWindow ++ skip).foreach { case (q, why) =>
       assert(why.trim.nonEmpty, s"allowlist entry $q lacks a justification")
     }
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    Registry.all.sortBy(_.name).foreach { q =>
+      val name = q.name
       if (!skip.contains(name)) {
-        val plan = fn(spark, TestSpark.sf).queryExecution.optimizedPlan
+        val plan = q.build(spark, TestSpark.sf).queryExecution.optimizedPlan
         plan.foreach {
           case w: Window if w.partitionSpec.isEmpty &&
               !boundedGlobalWindow.contains(name) &&

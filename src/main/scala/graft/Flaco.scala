@@ -179,8 +179,9 @@ object Flaco {
     *    Describe that runs nothing, and the text goes to PostgreSQL as
     *    written (`?` is an operator there, not a parameter).
     *    `fetchSize` does not apply: a task holds one 4096-row batch.
-    *    A schema with a type no column vector holds (a custom dialect's
-    *    arrays, say) keeps the JDBC reader;
+    *    A column with no decoder into a column vector (a custom
+    *    dialect's arrays, say) sends the whole statement to the JDBC
+    *    reader;
     *  - any other URI (pgjdbc, Derby, …) goes through Spark's JDBC
     *    reader, which fetches `fetchSize` rows a round trip.
     *

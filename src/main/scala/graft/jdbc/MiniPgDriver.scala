@@ -43,9 +43,11 @@ import scala.util.control.NonFatal
   *    literals (standard_conforming_strings escaping; bytea as
   *    `'\x…'::bytea`, timestamps as quoted ISO text) — batches are
   *    sent as one multi-statement simple query per JDBC batch;
-  *  - results decode from the wire TEXT format by type OID — the same
-  *    per-type dispatch the reference's 19-arm switch performs
-  *    (`lib.rs:199-386`), here to JDBC getter values;
+  *  - a JDBC result decodes by type OID into a [[MiniPgWire.ColumnStore]]
+  *    that the getters serve; [[MiniPgScan]] decodes the same cells
+  *    straight into column vectors, through the cell decoders both
+  *    share — the per-type dispatch the reference's 19-arm switch
+  *    performs (`lib.rs:199-386`);
   *  - the giant JDBC interfaces are served through reflective
   *    [[java.lang.reflect.Proxy]] handlers that implement the ~40
   *    methods Spark's `JdbcUtils`/`JDBCRDD` actually call and throw a
@@ -131,64 +133,6 @@ object MiniPgWire {
       case _ => KindString
     }
 
-    /** PG epoch (2000-01-01) as a Unix epoch-day / epoch-second. */
-    val PgEpochDay = 10957L
-    val PgEpochSec = 946684800L
-
-    /** Binary `numeric` → BigDecimal (NaN/±Infinity → their text
-      * forms, matching PG's text render so the text/binary paths
-      * agree): ndigits base-10000 groups, a group-aligned weight and
-      * a display scale. The unscaled integer is the digit groups read
-      * as one base-10000 number shifted to the dscale grid — exact by
-      * construction (value × 10^dscale is integral whenever dscale
-      * covers the fractional groups, which PG guarantees).
-      */
-    def decodeNumericBinary(p: Array[Byte], off: Int): AnyRef = {
-      val ndigits = be16(p, off)
-      val weight = be16(p, off + 2).toShort.toInt
-      val sign = be16(p, off + 4)
-      val dscale = be16(p, off + 6)
-      sign match {
-        case 0xC000 => "NaN"
-        case 0xD000 => "Infinity"
-        case 0xF000 => "-Infinity"
-        case _ =>
-          val neg = sign == 0x4000
-          if (ndigits == 0)
-            java.math.BigDecimal.ZERO.setScale(dscale)
-          else {
-            // Digit groups as one base-10000 integer…
-            var acc = java.math.BigInteger.ZERO
-            val tenK = java.math.BigInteger.valueOf(10000L)
-            var i = 0
-            var accL = 0L
-            val fitsLong = ndigits <= 4
-            while (i < ndigits) {
-              val d = be16(p, off + 8 + 2 * i)
-              if (fitsLong) accL = accL * 10000 + d
-              else acc = acc.multiply(tenK)
-                .add(java.math.BigInteger.valueOf(d.toLong))
-              i += 1
-            }
-            if (fitsLong) acc = java.math.BigInteger.valueOf(accL)
-            // …aligned: the last group sits at 10^(4·(weight−ndigits+1)).
-            val exp10 = 4 * (weight - ndigits + 1)
-            val bd = new java.math.BigDecimal(acc, -exp10)
-            val scaled = bd.setScale(dscale)
-            if (neg) scaled.negate() else scaled
-          }
-      }
-    }
-
-    /** Binary `uuid` (16 bytes) → the canonical lowercase-hex render
-      * PG's text format uses.
-      */
-    def decodeUuidBinary(p: Array[Byte], off: Int): String = {
-      val hi = be64(p, off)
-      val lo = be64(p, off + 8)
-      new java.util.UUID(hi, lo).toString
-    }
-
     /** PG's binary ±infinity timestamp sentinels (Long.MAX/MIN µs).
       * The typed getters map them to pgjdbc's convention (a
       * Timestamp at Long.MAX/MIN ms); text() renders PG's
@@ -251,66 +195,6 @@ object MiniPgWire {
         while (frac.endsWith("0")) frac = frac.dropRight(1)
         s"$base.$frac"
       }
-    }
-
-    /** Binary int2/int4/int8 by payload length. */
-    def binaryIntegral(p: Array[Byte], off: Int, len: Int): Long = len match {
-      case 2 => be16(p, off).toShort.toLong
-      case 4 => be32(p, off).toLong
-      case _ => be64(p, off)
-    }
-    def binaryFloat4(p: Array[Byte], off: Int): Float =
-      java.lang.Float.intBitsToFloat(be32(p, off))
-    def binaryFloat8(p: Array[Byte], off: Int): Double =
-      java.lang.Double.longBitsToDouble(be64(p, off))
-    def binaryBool(p: Array[Byte], off: Int): Boolean = p(off) == 1
-    /** Binary date → epoch day (the ±infinity sentinels shifted alike). */
-    def binaryDate(p: Array[Byte], off: Int): Long = be32(p, off).toLong + PgEpochDay
-    /** Binary timestamp/timestamptz: µs since the PG epoch, raw. */
-    def binaryMicros(p: Array[Byte], off: Int): Long = be64(p, off)
-
-    /** Text int2/int4/int8: `[-]digits`, parsed without a String. */
-    def parseLongCell(p: Array[Byte], off: Int, len: Int): Long = {
-      var v = 0L
-      var i = off
-      val end = off + len
-      var neg = false
-      if (p(i) == '-') { neg = true; i += 1 }
-      while (i < end) { v = v * 10 + (p(i) - '0'); i += 1 }
-      if (neg) -v else v
-    }
-
-    /** Exact no-allocation parse of the common float render
-      * `[-]ddd[.ddd]`: with ≤ 15 significant digits the mantissa is
-      * exact in a long and one division by an exact power of ten is
-      * correctly rounded — bit-identical to parseDouble. Exponents,
-      * specials (NaN/Infinity) and longer digit strings take the
-      * String + parseDouble fallback (exactness over speed).
-      */
-    def parseDoubleCell(payload: Array[Byte], off: Int,
-        len: Int): Double = {
-      val end = off + len
-      var i = off
-      var neg = false
-      if (i < end && payload(i) == '-') { neg = true; i += 1 }
-      var m = 0L
-      var digits = 0
-      var frac = -1
-      var simple = i < end
-      while (i < end && simple) {
-        val b = payload(i)
-        if (b >= '0' && b <= '9') {
-          m = m * 10 + (b - '0'); digits += 1
-          if (frac >= 0) frac += 1
-          i += 1
-        } else if (b == '.' && frac < 0) { frac = 0; i += 1 }
-        else simple = false
-      }
-      if (simple && digits > 0 && digits <= 15) {
-        val d0 = if (frac <= 0) m.toDouble else m / Pow10(frac)
-        if (neg) -d0 else d0
-      } else java.lang.Double.parseDouble(
-        new String(payload, off, len, StandardCharsets.US_ASCII))
     }
   }
 
@@ -452,10 +336,10 @@ object MiniPgWire {
     private def putBinary(c: Int, payload: Array[Byte], off: Int,
         len: Int): Unit = kinds(c) match {
       case KindLong =>
-        longCols(c)(size) = binaryIntegral(payload, off, len)
+        longCols(c)(size) = binaryIntegral(oids(c), payload, off, len)
       case KindDouble =>
         dblCols(c)(size) =
-          if (len == 4) {
+          if (oids(c) == 700) {
             // float4: widen through the shortest-roundtrip decimal
             // render, NOT the raw bit widen — PG's text path sends
             // '0.1' (parsed to 0.1d) where (double)0.1f is
@@ -463,25 +347,25 @@ object MiniPgWire {
             // render, so getDouble/getString are transfer-mode
             // independent (r17 ADVICE). getFloat round-trips exactly
             // either way.
-            val f = binaryFloat4(payload, off)
+            val f = binaryFloat4(payload, off, len)
             if (java.lang.Float.isNaN(f) || java.lang.Float.isInfinite(f))
               f.toDouble
             else java.lang.Double.parseDouble(java.lang.Float.toString(f))
-          } else binaryFloat8(payload, off)
+          } else binaryFloat8(payload, off, len)
       case KindBool =>
-        longCols(c)(size) = if (binaryBool(payload, off)) 1L else 0L
+        longCols(c)(size) = if (binaryBool(payload, off, len)) 1L else 0L
       case KindDate =>
-        longCols(c)(size) = binaryDate(payload, off)
+        longCols(c)(size) = binaryDate(payload, off, len)
       case KindTs | KindTstz =>
-        longCols(c)(size) = be64(payload, off)
+        longCols(c)(size) = binaryMicros(payload, off, len)
       case KindDecimal =>
-        objCols(c)(size) = decodeNumericBinary(payload, off)
+        objCols(c)(size) = decodeNumericBinary(payload, off, len)
       case KindBytes =>
         objCols(c)(size) =
           java.util.Arrays.copyOfRange(payload, off, off + len)
       case _ =>
         strCols(c)(size) =
-          if (oids(c) == 2950) decodeUuidBinary(payload, off)
+          if (oids(c) == 2950) decodeUuidBinary(payload, off, len)
           else new String(payload, off, len, UTF_8)
     }
 
@@ -567,6 +451,138 @@ object MiniPgWire {
     if (l < -1 || l > len - off - 4)
       throw malformed(s"cell of $l bytes past its DataRow")
     l
+  }
+
+  // Cell decoders both DataRow walks share ([[ColumnStore]] and
+  // MiniPgScan's `Cells`). A binary decoder reads by its type's width,
+  // so it first checks that the cell is that wide: past the cell lie
+  // the next cell's bytes, or stale ones of an earlier row.
+
+  /** PG epoch (2000-01-01) as a Unix epoch-day / epoch-second. */
+  val PgEpochDay = 10957L
+  val PgEpochSec = 946684800L
+
+  /** Throws unless a binary cell of `len` bytes is the `width` its value takes. */
+  private def fixed(len: Int, width: Int): Unit =
+    if (len != width) throw malformed(s"binary cell of $len bytes for a $width-byte value")
+
+  /** Binary int2/int4/int8, by the column's `oid` (21/23/20). */
+  def binaryIntegral(oid: Int, p: Array[Byte], off: Int, len: Int): Long = oid match {
+    case 21 => fixed(len, 2); be16(p, off).toShort.toLong
+    case 23 => fixed(len, 4); be32(p, off).toLong
+    case _ => fixed(len, 8); be64(p, off)
+  }
+  def binaryFloat4(p: Array[Byte], off: Int, len: Int): Float = {
+    fixed(len, 4); java.lang.Float.intBitsToFloat(be32(p, off))
+  }
+  def binaryFloat8(p: Array[Byte], off: Int, len: Int): Double = {
+    fixed(len, 8); java.lang.Double.longBitsToDouble(be64(p, off))
+  }
+  def binaryBool(p: Array[Byte], off: Int, len: Int): Boolean = { fixed(len, 1); p(off) == 1 }
+  /** Binary date → epoch day (the ±infinity sentinels shifted alike). */
+  def binaryDate(p: Array[Byte], off: Int, len: Int): Long = {
+    fixed(len, 4); be32(p, off) + PgEpochDay
+  }
+  /** Binary timestamp/timestamptz: µs since the PG epoch, raw. */
+  def binaryMicros(p: Array[Byte], off: Int, len: Int): Long = { fixed(len, 8); be64(p, off) }
+
+  /** Binary `numeric` → BigDecimal (NaN/±Infinity → their text
+    * forms, matching PG's text render so the text/binary paths
+    * agree): ndigits base-10000 groups, a group-aligned weight and
+    * a display scale. The unscaled integer is the digit groups read
+    * as one base-10000 number shifted to the dscale grid — exact by
+    * construction (value × 10^dscale is integral whenever dscale
+    * covers the fractional groups, which PG guarantees).
+    */
+  def decodeNumericBinary(p: Array[Byte], off: Int, len: Int): AnyRef = {
+    if (len < 8) fixed(len, 8)
+    val ndigits = be16(p, off)
+    fixed(len, 8 + 2 * ndigits)
+    val weight = be16(p, off + 2).toShort.toInt
+    val sign = be16(p, off + 4)
+    val dscale = be16(p, off + 6)
+    sign match {
+      case 0xC000 => "NaN"
+      case 0xD000 => "Infinity"
+      case 0xF000 => "-Infinity"
+      case _ =>
+        val neg = sign == 0x4000
+        if (ndigits == 0)
+          java.math.BigDecimal.ZERO.setScale(dscale)
+        else {
+          // Digit groups as one base-10000 integer…
+          var acc = java.math.BigInteger.ZERO
+          val tenK = java.math.BigInteger.valueOf(10000L)
+          var i = 0
+          var accL = 0L
+          val fitsLong = ndigits <= 4
+          while (i < ndigits) {
+            val d = be16(p, off + 8 + 2 * i)
+            if (fitsLong) accL = accL * 10000 + d
+            else acc = acc.multiply(tenK)
+              .add(java.math.BigInteger.valueOf(d.toLong))
+            i += 1
+          }
+          if (fitsLong) acc = java.math.BigInteger.valueOf(accL)
+          // …aligned: the last group sits at 10^(4·(weight−ndigits+1)).
+          val exp10 = 4 * (weight - ndigits + 1)
+          val bd = new java.math.BigDecimal(acc, -exp10)
+          val scaled = bd.setScale(dscale)
+          if (neg) scaled.negate() else scaled
+        }
+    }
+  }
+
+  /** Binary `uuid` (16 bytes) → the canonical lowercase-hex render
+    * PG's text format uses.
+    */
+  def decodeUuidBinary(p: Array[Byte], off: Int, len: Int): String = {
+    fixed(len, 16)
+    new java.util.UUID(be64(p, off), be64(p, off + 8)).toString
+  }
+
+  /** Text int2/int4/int8: `[-]digits`, parsed without a String. */
+  def parseLongCell(p: Array[Byte], off: Int, len: Int): Long = {
+    var v = 0L
+    var i = off
+    val end = off + len
+    var neg = false
+    if (p(i) == '-') { neg = true; i += 1 }
+    while (i < end) { v = v * 10 + (p(i) - '0'); i += 1 }
+    if (neg) -v else v
+  }
+
+  /** Exact no-allocation parse of the common float render
+    * `[-]ddd[.ddd]`: with ≤ 15 significant digits the mantissa is
+    * exact in a long and one division by an exact power of ten is
+    * correctly rounded — bit-identical to parseDouble. Exponents,
+    * specials (NaN/Infinity) and longer digit strings take the
+    * String + parseDouble fallback (exactness over speed).
+    */
+  def parseDoubleCell(payload: Array[Byte], off: Int,
+      len: Int): Double = {
+    val end = off + len
+    var i = off
+    var neg = false
+    if (i < end && payload(i) == '-') { neg = true; i += 1 }
+    var m = 0L
+    var digits = 0
+    var frac = -1
+    var simple = i < end
+    while (i < end && simple) {
+      val b = payload(i)
+      if (b >= '0' && b <= '9') {
+        m = m * 10 + (b - '0'); digits += 1
+        if (frac >= 0) frac += 1
+        i += 1
+      } else if (b == '.' && frac < 0) { frac = 0; i += 1 }
+      else simple = false
+    }
+    if (simple && digits > 0 && digits <= 15) {
+      val d0 = if (frac <= 0) m.toDouble else m / Pow10(frac)
+      if (neg) -d0 else d0
+    } else java.lang.Double.parseDouble(
+      new String(payload, off, len, StandardCharsets.US_ASCII))
   }
 
   /** One result of a simple query: columns (empty for command-only

@@ -126,35 +126,21 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
       if (isNull(i)) null else MiniPgResultSet.dateOf(longAt(i))
     } else {
       val v = strAt(i)
-      if (v == null) null else java.sql.Date.valueOf(parseDateFast(v))
+      if (v == null) null else MiniPgResultSet.dateOf(v)
     }
   override def getDate(l: String): java.sql.Date = getDate(findColumn(l))
   override def getTimestamp(i: Int): java.sql.Timestamp = store.kind(i - 1) match {
-    case k @ (ColumnStore.KindTs | ColumnStore.KindTstz) =>
-      if (isNull(i)) null else MiniPgResultSet.timestampOf(k, longAt(i))
+    case ColumnStore.KindTs | ColumnStore.KindTstz =>
+      if (isNull(i)) null else MiniPgResultSet.timestampOf(col(i).oid, longAt(i))
     case _ =>
-    val v = strAt(i)
-    if (v == null) null
-    else col(i).oid match {
-      case 1184 => parseTimestamptz(v)
-      // time / timetz: pgjdbc's convention - a timestamp on the epoch
-      // date (PgTypeMap.timeAsMicros re-derives us-since-midnight).
-      case 1083 =>
-        java.sql.Timestamp.valueOf(parseTimestampNtz(s"1970-01-01 $v"))
-      case 1266 => parseTimestamptz(s"1970-01-01 $v")
-      case _ => java.sql.Timestamp.valueOf(parseTimestampNtz(v))
-    }
+      val v = strAt(i)
+      if (v == null) null else MiniPgResultSet.timestampOf(col(i).oid, v)
   }
   override def getTimestamp(l: String): java.sql.Timestamp =
     getTimestamp(findColumn(l))
   override def getTime(i: Int): java.sql.Time = {
     val v = strAt(i)
-    if (v == null) null
-    else {
-      val ts = if (col(i).oid == 1266) parseTimestamptz(s"1970-01-01 $v")
-        else java.sql.Timestamp.valueOf(parseTimestampNtz(s"1970-01-01 $v"))
-      new java.sql.Time(ts.getTime)
-    }
+    if (v == null) null else MiniPgResultSet.timeOf(col(i).oid, v)
   }
   override def getTime(l: String): java.sql.Time = getTime(findColumn(l))
   override def getObject[T](i: Int, cls: Class[T]): T = {
@@ -343,8 +329,17 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
 
 object MiniPgResultSet {
 
-  /** The Date a binary date cell (epoch day) reads as; PG's ±infinity
-    * map to pgjdbc's convention, a Date at Long.MAX/MIN ms.
+  /** A result set of `cols` and no rows: what `JdbcUtils.getSchema`
+    * reads a statement's metadata from.
+    */
+  def describing(cols: Array[Col]): MiniPgResultSet =
+    new MiniPgResultSet(MiniPgWire.Result(cols, new ColumnStore(cols), "SELECT"))
+
+  // The values a cell reads as through the getters; MiniPgScan's
+  // decoders call the same functions where they take the getter's value.
+
+  /** A binary date cell (epoch day); PG's ±infinity map to pgjdbc's
+    * convention, a Date at Long.MAX/MIN ms.
     */
   def dateOf(epochDay: Long): java.sql.Date = epochDay match {
     case ColumnStore.DatePosInfinity => new java.sql.Date(Long.MaxValue)
@@ -352,19 +347,39 @@ object MiniPgResultSet {
     case d => java.sql.Date.valueOf(LocalDate.ofEpochDay(d))
   }
 
-  /** The Timestamp a binary timestamp (`KindTs`: wall-clock µs, read
-    * back with the text path's Timestamp.valueOf semantics in the JVM
-    * zone) or timestamptz (`KindTstz`: an instant) cell reads as; PG's
-    * ±infinity map to pgjdbc's convention, a Timestamp at Long.MAX/MIN
-    * ms.
+  /** A text date cell. */
+  def dateOf(text: String): java.sql.Date = java.sql.Date.valueOf(parseDateFast(text))
+
+  /** A binary timestamp (`oid` 1114: wall-clock µs, read back with the
+    * text path's Timestamp.valueOf semantics in the JVM zone) or
+    * timestamptz (1184: an instant) cell; PG's ±infinity map to
+    * pgjdbc's convention, a Timestamp at Long.MAX/MIN ms.
     */
-  def timestampOf(kind: Int, us: Long): java.sql.Timestamp = us match {
+  def timestampOf(oid: Int, us: Long): java.sql.Timestamp = us match {
     case ColumnStore.TsPosInfinity => new java.sql.Timestamp(Long.MaxValue)
     case ColumnStore.TsNegInfinity => new java.sql.Timestamp(Long.MinValue)
-    case _ if kind == ColumnStore.KindTs =>
+    case _ if oid == 1114 =>
       java.sql.Timestamp.valueOf(ColumnStore.microsToLocalDateTime(us))
     case _ => ColumnStore.microsToTimestamptz(us)
   }
+
+  /** A text timestamptz, time, timetz or (any other `oid`) timestamp
+    * cell. Time and timetz follow pgjdbc's convention, a timestamp on
+    * the epoch date (PgTypeMap.timeAsMicros re-derives µs since
+    * midnight).
+    */
+  def timestampOf(oid: Int, text: String): java.sql.Timestamp = oid match {
+    case 1184 => parseTimestamptz(text)
+    case 1083 => java.sql.Timestamp.valueOf(parseTimestampNtz(s"1970-01-01 $text"))
+    case 1266 => parseTimestamptz(s"1970-01-01 $text")
+    case _ => java.sql.Timestamp.valueOf(parseTimestampNtz(text))
+  }
+
+  /** A text time (or, for `oid` 1266, timetz) cell: whole milliseconds,
+    * as `java.sql.Time` holds them.
+    */
+  def timeOf(oid: Int, text: String): java.sql.Time =
+    new java.sql.Time(timestampOf(if (oid == 1266) 1266 else 1083, text).getTime)
 }
 
 /** Concrete metadata twin of [[MiniPgResultSet]] (Spark reads it once

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-import MiniPgWire.{Col, ColumnStore, Result}
+import MiniPgWire.Col
 
 /** A DataSource V2 read of one statement on a MiniPg-served PostgreSQL:
   * each task's wire rows decode straight into the vectors of a
@@ -40,8 +40,8 @@ object MiniPgScan {
   val BatchRows: Int = graft.sinks.FeatherSink.BatchRows
 
   /** The read Spark's JDBC reader would make with `options`, or None
-    * when a column has a type this read cannot hold in a column vector
-    * (the caller then keeps the JDBC reader).
+    * when a column has no [[Cells]] decoder: the caller then keeps the
+    * JDBC reader for the whole statement.
     */
   def read(spark: SparkSession, options: Map[String, String]): Option[DataFrame] = {
     val jdbc = new JDBCOptions(options)
@@ -52,10 +52,11 @@ object MiniPgScan {
       try {
         val cols = wire.describe(dialect.getSchemaQuery(jdbc.tableOrQuery))
         val conn = MiniPgJdbc.connection(() => wire, jdbc.url, MiniPgDriver.user(jdbc.url, props))
-        val rowless = new MiniPgResultSet(Result(cols, new ColumnStore(cols), "SELECT"))
-        (cols, JdbcUtils.getSchema(conn, rowless, dialect, true, jdbc.preferTimestampNTZ))
+        (cols, JdbcUtils.getSchema(conn, MiniPgResultSet.describing(cols), dialect, true,
+          jdbc.preferTimestampNTZ))
       } finally wire.close()
-    if (!schema.forall(f => Cells.holds(f.dataType))) None
+    if (schema.fields.indices.exists(c =>
+        Cells.decoder(schema(c), cols(c), wire.binaryTransfer, dialect).isEmpty)) None
     else {
       val parts = GraftSqlBridge.jdbcPartitions(spark, schema, jdbc).map(_.whereClause)
       Some(GraftSqlBridge.dataFrame(spark,
@@ -135,32 +136,17 @@ private[jdbc] final class MiniPgReaderFactory(url: String, props: Properties,
 
 /** Reads one statement on its own `wire`, [[MiniPgScan.BatchRows]] rows
   * a batch into reused vectors: a task holds one batch plus the socket
-  * buffers. Each cell goes through its column's [[Cells]] decoder, or,
-  * for the types without one, into a side [[ColumnStore]] that Spark's
-  * JDBC getters read once the batch is full. The wire closes when the
-  * reader does, or at once on a failure.
+  * buffers. Each cell goes through its column's [[Cells]] decoder. The
+  * wire closes when the reader does, or at once on a failure.
   */
 final class MiniPgPartitionReader(wire: MiniPgWire, stmt: String,
     dialect: JdbcDialect, cols: Array[Col], schema: StructType)
     extends PartitionReader[ColumnarBatch] with MiniPgWire.RowSink {
 
   private val fields = schema.fields
-  private val cells: Array[Cells.Cell] =
-    fields.indices.map(c => Cells.direct(fields(c), cols(c), wire.binaryTransfer, dialect)).toArray
-  private val sideIdx = fields.indices.filter(cells(_) == null).toArray
-  private val sideAt = {
-    val a = Array.fill(fields.length)(-1)
-    sideIdx.zipWithIndex.foreach { case (c, j) => a(c) = j }
-    a
-  }
-  private val sideCols = sideIdx.map(cols)
-  private val side =
-    if (sideIdx.isEmpty) null
-    else new ColumnStore(sideCols,
-      sideCols.map(c => Cells.jdbcFormat(c, wire.binaryTransfer)), wire.zone)
-  private val sideSchema = StructType(sideIdx.map(fields))
-  private val formats: Array[Byte] = fields.indices.map { c =>
-    if (cells(c) != null) cells(c).format else Cells.jdbcFormat(cols(c), wire.binaryTransfer)
+  private val cells: Array[Cells.Cell] = fields.indices.map { c =>
+    Cells.decoder(fields(c), cols(c), wire.binaryTransfer, dialect).getOrElse(
+      throw new IllegalArgumentException(s"no column decoder for ${fields(c)} from ${cols(c)}"))
   }.toArray
   /** Cells per DataRow: an empty column list is sent as `SELECT 1`. */
   private val width = math.max(1, fields.length)
@@ -179,12 +165,10 @@ final class MiniPgPartitionReader(wire: MiniPgWire, stmt: String,
   override def next(): Boolean =
     if (ended) false
     else try {
-      if (!started) { wire.execute(stmt, formats); started = true }
+      if (!started) { wire.execute(stmt, cells.map(_.format)); started = true }
       vectors.foreach(_.reset())
-      if (side != null) side.clear()
       n = 0
       ended = wire.readRows(this)
-      if (side != null) fromSide()
       batch.setNumRows(n)
       rows += n
       if (n > 0) batches += 1
@@ -198,32 +182,13 @@ final class MiniPgPartitionReader(wire: MiniPgWire, stmt: String,
     while (c < fields.length) {
       val l = MiniPgWire.cellLen(p, len, off)
       off += 4
-      val cell = cells(c)
-      if (cell == null) side.put(sideAt(c), p, off, l)
-      else if (l < 0) vectors(c).putNull(n)
-      else cell.put(vectors(c), n, p, off, l)
+      if (l < 0) vectors(c).putNull(n)
+      else cells(c).put(vectors(c), n, p, off, l)
       if (l > 0) off += l
       c += 1
     }
-    if (side != null) side.rowDone()
     n += 1
     n == MiniPgScan.BatchRows
-  }
-
-  /** The side columns through Spark's JDBC getters, into their vectors. */
-  private def fromSide(): Unit = {
-    val it = GraftSqlBridge.jdbcRows(
-      new MiniPgResultSet(Result(sideCols, side, "SELECT")), dialect, sideSchema)
-    var r = 0
-    while (it.hasNext) {
-      val row = it.next()
-      var j = 0
-      while (j < sideIdx.length) {
-        Cells.copy(row, j, sideSchema.fields(j).dataType, vectors(sideIdx(j)), r)
-        j += 1
-      }
-      r += 1
-    }
   }
 
   override def get(): ColumnarBatch = batch
@@ -245,40 +210,13 @@ final class MiniPgPartitionReader(wire: MiniPgWire, stmt: String,
 
 /** Per-column decoders from wire cells to column vectors. */
 private[jdbc] object Cells {
-  import ColumnStore._
+  import MiniPgWire._
+  import MiniPgResultSet.{dateOf, timeOf, timestampOf}
 
   abstract class Cell(val format: Byte) {
     /** Writes non-null cell `p(off until off + len)` to row `r` of `v`. */
     def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit
   }
-
-  /** The format the JDBC path requests for `col` (see queryExtended). */
-  def jdbcFormat(col: Col, binaryTransfer: Boolean): Byte =
-    if (binaryTransfer && MiniPgWire.BinaryOids(col.oid)) 1 else 0
-
-  /** Types [[copy]] writes, and so the types this read holds. */
-  def holds(dt: DataType): Boolean = dt match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
-        DoubleType | DateType | TimestampType | TimestampNTZType | BinaryType |
-        _: StringType | _: DecimalType => true
-    case _ => false
-  }
-
-  /** One value of a JDBC getter row into row `r` of `v`. */
-  def copy(row: InternalRow, j: Int, dt: DataType, v: WritableColumnVector, r: Int): Unit =
-    if (row.isNullAt(j)) v.putNull(r)
-    else dt match {
-      case BooleanType => v.putBoolean(r, row.getBoolean(j))
-      case ByteType => v.putByte(r, row.getByte(j))
-      case ShortType => v.putShort(r, row.getShort(j))
-      case IntegerType | DateType => v.putInt(r, row.getInt(j))
-      case LongType | TimestampType | TimestampNTZType => v.putLong(r, row.getLong(j))
-      case FloatType => v.putFloat(r, row.getFloat(j))
-      case DoubleType => v.putDouble(r, row.getDouble(j))
-      case BinaryType => v.putByteArray(r, row.getBinary(j))
-      case d: DecimalType => v.putDecimal(r, row.getDecimal(j, d.precision, d.scale), d.precision)
-      case _ => v.putByteArray(r, row.getUTF8String(j).getBytes)
-    }
 
   private val PgEpochMicros = PgEpochSec * 1000000L
   /** Epoch days in which a date or timestamp reads through JDBC as its
@@ -300,7 +238,7 @@ private[jdbc] object Cells {
   }
 
   /** The dialect keeps JDBC's default date/time conversions, which the
-    * direct decoders assume (an aggregated dialect delegates to the
+    * identity shortcuts assume (an aggregated dialect delegates to the
     * first of the registered ones, FlacoPostgresDialect in practice).
     */
   private def defaultTimes(d: JdbcDialect): Boolean =
@@ -313,22 +251,36 @@ private[jdbc] object Cells {
           owner.getName == "org.apache.spark.sql.jdbc.AggregatedDialect"
     }
 
-  /** A direct decoder for `f` from `col`, or null where the cell goes
-    * through the JDBC getter. Each decoder yields the value Spark's
-    * JDBC getter gives for the same cell through [[MiniPgResultSet]].
+  private def text(p: Array[Byte], off: Int, len: Int): String = new String(p, off, len, UTF_8)
+
+  /** The decoder for `f` from `col`, or None when there is none (the
+    * statement then belongs to Spark's JDBC reader). Each decoder yields
+    * the value Spark's JDBC getter gives for the same cell through
+    * [[MiniPgResultSet]]: a date or time cell takes the helper that
+    * getter calls and the dialect's conversion, which a binary cell
+    * skips where it is the identity (JDBC's default conversions, a date
+    * in the plain range and, for a wall-clock timestamp, a UTC JVM).
     */
-  def direct(f: StructField, col: Col, binaryTransfer: Boolean, dialect: JdbcDialect): Cell = {
-    val bin = jdbcFormat(col, binaryTransfer) == 1
+  def decoder(f: StructField, col: Col, binaryTransfer: Boolean,
+      dialect: JdbcDialect): Option[Cell] = {
+    // The format the JDBC path requests (see queryExtended).
+    val bin = binaryTransfer && BinaryOids(col.oid)
     val fmt: Byte = if (bin) 1 else 0
-    lazy val times = defaultTimes(dialect)
-    (col.oid, f.dataType) match {
+    val times = defaultTimes(dialect)
+    def jdbcDate(d: java.sql.Date): Int =
+      DateTimeUtils.fromJavaDate(dialect.convertJavaDateToDate(d))
+    def jdbcTimestamp(t: DataType, ts: java.sql.Timestamp): Long =
+      if (t == TimestampNTZType)
+        DateTimeUtils.localDateTimeToMicros(dialect.convertJavaTimestampToTimestampNTZ(ts))
+      else DateTimeUtils.fromJavaTimestamp(dialect.convertJavaTimestampToTimestamp(ts))
+    Option((col.oid, f.dataType) match {
       case (16, BooleanType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-          v.putBoolean(r, if (bin) binaryBool(p, off) else p(off) == 't')
+          v.putBoolean(r, if (bin) binaryBool(p, off, len) else p(off) == 't')
       }
       case (20 | 21 | 23, t @ (ByteType | ShortType | IntegerType | LongType)) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit = {
-          val x = if (bin) binaryIntegral(p, off, len) else parseLongCell(p, off, len)
+          val x = if (bin) binaryIntegral(col.oid, p, off, len) else parseLongCell(p, off, len)
           t match {
             case LongType => v.putLong(r, x)
             case IntegerType => v.putInt(r, x.toInt)
@@ -339,11 +291,12 @@ private[jdbc] object Cells {
       }
       case (700, FloatType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-          v.putFloat(r, if (bin) binaryFloat4(p, off) else parseDoubleCell(p, off, len).toFloat)
+          v.putFloat(r,
+            if (bin) binaryFloat4(p, off, len) else parseDoubleCell(p, off, len).toFloat)
       }
       case (701, DoubleType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-          v.putDouble(r, if (bin) binaryFloat8(p, off) else parseDoubleCell(p, off, len))
+          v.putDouble(r, if (bin) binaryFloat8(p, off, len) else parseDoubleCell(p, off, len))
       }
       case (1700, DoubleType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
@@ -365,52 +318,53 @@ private[jdbc] object Cells {
       case (17, BinaryType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
           if (bin) v.putByteArray(r, p, off, len)
-          else v.putByteArray(r, MiniPgWire.parseByteaHex(new String(p, off, len, UTF_8)))
+          else v.putByteArray(r, parseByteaHex(text(p, off, len)))
       }
       case (2950, _: StringType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-          if (bin) v.putByteArray(r, decodeUuidBinary(p, off).getBytes(US_ASCII))
+          if (bin) v.putByteArray(r, decodeUuidBinary(p, off, len).getBytes(US_ASCII))
           else v.putByteArray(r, p, off, len)
       }
-      case (oid, _: StringType) if !MiniPgWire.BinaryOids(oid) => new Cell(0) {
+      case (oid, _: StringType) if !BinaryOids(oid) => new Cell(0) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
           v.putByteArray(r, p, off, len)
       }
-      case (1082, DateType) if bin && times => new Cell(1) {
-        def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit = {
-          val day = binaryDate(p, off)
-          v.putInt(r, if (plainDay(day)) day.toInt
-            else DateTimeUtils.fromJavaDate(
-              dialect.convertJavaDateToDate(MiniPgResultSet.dateOf(day))))
-        }
+      case (1082, DateType) => new Cell(fmt) {
+        def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
+          v.putInt(r, if (!bin) jdbcDate(dateOf(text(p, off, len)))
+            else {
+              val day = binaryDate(p, off, len)
+              if (times && plainDay(day)) day.toInt else jdbcDate(dateOf(day))
+            })
       }
-      case (1184, TimestampType) if bin && times => new Cell(1) {
-        def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit = {
-          val us = binaryMicros(p, off)
-          v.putLong(r, if (plainMicros(us)) us + PgEpochMicros
-            else DateTimeUtils.fromJavaTimestamp(dialect.convertJavaTimestampToTimestamp(
-              MiniPgResultSet.timestampOf(KindTstz, us))))
-        }
+      case (1114 | 1184, t @ (TimestampType | TimestampNTZType)) => new Cell(fmt) {
+        // JDBC reads a wall clock (1114) as a Timestamp in the JVM zone,
+        // and a Timestamp back as a wall clock in UTC: the identity for
+        // an instant read as an instant, otherwise only in a UTC JVM.
+        private val same = times && ((col.oid == 1184 && t == TimestampType) || utcJvm)
+        def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
+          v.putLong(r, if (!bin) jdbcTimestamp(t, timestampOf(col.oid, text(p, off, len)))
+            else {
+              val us = binaryMicros(p, off, len)
+              if (same && plainMicros(us)) us + PgEpochMicros
+              else jdbcTimestamp(t, timestampOf(col.oid, us))
+            })
       }
-      // JDBC reads the wall clock as a Timestamp in the JVM zone and
-      // back as a wall clock in UTC: the identity only in a UTC JVM.
-      case (1114, TimestampNTZType) if bin && times && utcJvm => new Cell(1) {
-        def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit = {
-          val us = binaryMicros(p, off)
-          v.putLong(r, if (plainMicros(us)) us + PgEpochMicros
-            else DateTimeUtils.localDateTimeToMicros(dialect.convertJavaTimestampToTimestampNTZ(
-              MiniPgResultSet.timestampOf(KindTs, us))))
+      // Spark's getter for a TIME column: rs.getTime, whole ms, as µs.
+      case (1083 | 1266, TimestampType) if f.metadata.contains("logical_time_type") =>
+        new Cell(fmt) {
+          def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
+            v.putLong(r, Math.multiplyExact(timeOf(col.oid, text(p, off, len)).getTime, 1000L))
         }
-      }
       case _ => null
-    }
+    })
   }
 
-  /** A numeric cell as [[ColumnStore]] holds it: a BigDecimal, or the
-    * text of NaN/±Infinity.
+  /** A numeric cell as [[MiniPgResultSet]] serves it: a BigDecimal, or
+    * the text of NaN/±Infinity.
     */
   private def numeric(bin: Boolean, p: Array[Byte], off: Int, len: Int): AnyRef =
-    if (bin) decodeNumericBinary(p, off) else new String(p, off, len, UTF_8)
+    if (bin) decodeNumericBinary(p, off, len) else text(p, off, len)
 }
 
 /** Rows a scan read. */

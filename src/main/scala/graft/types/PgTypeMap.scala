@@ -10,9 +10,10 @@ import graft.{FlacoSparkException, ParityOptions}
   * PostgreSQL wire type to Arrow builder (reference `src/lib.rs:199-386`;
   * exhaustive table in SURVEY.md §1.2). Here that switch becomes a pure
   * mapping spec `pg type name -> Catalyst DataType` plus the value-level
-  * conversion semantics the reference applies. Spark's JDBC layer does
-  * the actual row decoding; this object is the contract (and the unit
-  * of test) for WHICH Catalyst type each PG type must land on, and
+  * conversion semantics the reference applies. The row decoding is
+  * done by `graft.jdbc.MiniPgScan`'s per-column decoders (Spark's JDBC
+  * getters for other drivers); this object is the contract (and the
+  * unit of test) for WHICH Catalyst type each PG type must land on, and
   * [[applyParity]] post-processes a loaded DataFrame for the semantics
   * that are flaco-specific rather than JDBC-standard.
   */

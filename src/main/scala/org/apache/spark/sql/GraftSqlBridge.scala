@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
 
 /** Bridge to `private[sql]` pieces of Spark 4.x: Column <-> Expression
   * conversions (the Column class is Connect-agnostic and no longer
-  * exposes `.expr`), and the JDBC reader's own partitioning and getters
-  * for `graft.jdbc.MiniPgScan`. Same technique used by open-source
+  * exposes `.expr`), the JDBC reader's own partitioning for
+  * `graft.jdbc.MiniPgScan`, and its getters, the reference the scan's
+  * tests compare it against. Same technique used by open-source
   * Spark extensions (Delta Lake, Iceberg) to attach custom Catalyst
   * expressions to the classic DataFrame API.
   */

@@ -114,7 +114,7 @@ class MiniPgDriverSpec extends AnyFunSuite {
 
   test("binary numeric decodes to the exact BigDecimal the text " +
     "render parses to (scale preserved, base-10000 groups aligned)") {
-    import MiniPgWire.ColumnStore.decodeNumericBinary
+    import MiniPgWire.decodeNumericBinary
     def enc(ndigits: Int, weight: Int, sign: Int, dscale: Int,
         digits: Int*): Array[Byte] = {
       val b = java.nio.ByteBuffer.allocate(8 + 2 * digits.length)
@@ -123,7 +123,7 @@ class MiniPgDriverSpec extends AnyFunSuite {
       digits.foreach(d => b.putShort(d.toShort))
       b.array()
     }
-    def dec(p: Array[Byte]) = decodeNumericBinary(p, 0)
+    def dec(p: Array[Byte]) = decodeNumericBinary(p, 0, p.length)
     assert(dec(enc(2, 0, 0, 4, 1234, 5678)) ===
       new java.math.BigDecimal("1234.5678"))
     assert(dec(enc(1, -1, 0x4000, 4, 1)) ===
@@ -160,13 +160,13 @@ class MiniPgDriverSpec extends AnyFunSuite {
   }
 
   test("binary uuid decodes to PG's canonical lowercase text render") {
-    import MiniPgWire.ColumnStore.decodeUuidBinary
+    import MiniPgWire.decodeUuidBinary
     val u = java.util.UUID.fromString(
       "a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11")
     val b = java.nio.ByteBuffer.allocate(16)
       .putLong(u.getMostSignificantBits)
       .putLong(u.getLeastSignificantBits).array()
-    assert(decodeUuidBinary(b, 0) === "a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11")
+    assert(decodeUuidBinary(b, 0, 16) === "a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11")
   }
 
   test("a binary-format ColumnStore serves the same getter values " +

@@ -11,8 +11,8 @@ import scala.util.Try
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.jdbc.JdbcDialects
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
+import org.apache.spark.sql.types.{DataType, MetadataBuilder, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Flaco, TestSpark}
@@ -35,8 +35,7 @@ class MiniPgScanSpec extends AnyFunSuite {
     spec.map { case (n, oid) => MiniPgWire.Col(n, oid, -1) }.toArray
 
   private def schemaOf(cols: Array[MiniPgWire.Col]): StructType =
-    JdbcUtils.getSchema(null, new MiniPgResultSet(
-      MiniPgWire.Result(cols, new MiniPgWire.ColumnStore(cols), "SELECT")), dialect, true, false)
+    JdbcUtils.getSchema(null, MiniPgResultSet.describing(cols), dialect, true, false)
 
   private def reader(server: ScriptedPgServer, spec: Seq[(String, Int)],
       binary: Boolean = true): MiniPgPartitionReader = {
@@ -127,6 +126,18 @@ class MiniPgScanSpec extends AnyFunSuite {
     } finally { r.close(); server.close() }
   }
 
+  test("a binary cell whose length is not its type's width fails the " +
+    "reader with 08P01") {
+    wrongWidth.foreach { case (oid, cell) =>
+      val server = new ScriptedPgServer(Hello, Seq(streamed(Seq(rawRow(cell)))))
+      val r = reader(server, Seq("x" -> oid))
+      try {
+        assert(intercept[SQLException](r.next()).getSQLState === "08P01", s"oid $oid")
+        assert(server.clientClosed.await(2, TimeUnit.SECONDS))
+      } finally { r.close(); server.close() }
+    }
+  }
+
   /** The same DataRows through the JDBC path (ColumnStore, then Spark's
     * getters) and through the reader: each side's rows, or its failure.
     */
@@ -168,34 +179,50 @@ class MiniPgScanSpec extends AnyFunSuite {
     (jdbc, columnar)
   }
 
+  /** Both paths read `rows` alike, all together and each row alone (so
+    * a failing cell cannot hide the values of the other rows); returns
+    * the indices of the rows that fail on both.
+    */
   private def assertSame(spec: Seq[(String, Int)], rows: Seq[Array[Byte]],
-      binary: Boolean): Unit = {
-    val (jdbc, columnar) = bothWays(spec, rows, binary)
-    assert(jdbc.isSuccess === columnar.isSuccess,
-      s"JDBC gave $jdbc, the columnar reader $columnar")
-    if (jdbc.isSuccess) assert(columnar.get === jdbc.get)
+      binary: Boolean): Set[Int] = {
+    def same(rs: Seq[Array[Byte]]): Boolean = {
+      val (jdbc, columnar) = bothWays(spec, rs, binary)
+      assert(jdbc.isSuccess === columnar.isSuccess,
+        s"JDBC gave $jdbc, the columnar reader $columnar")
+      if (jdbc.isSuccess) assert(columnar.get === jdbc.get)
+      jdbc.isSuccess
+    }
+    same(rows)
+    rows.indices.filterNot(i => same(Seq(rows(i)))).toSet
   }
 
   test("every binary kind reads as the JDBC getters read ColumnStore's " +
     "decode of the same frames, NULLs and range edges included") {
     val spec = Seq("i2" -> 21, "i4" -> 23, "i8" -> 20, "f4" -> 700, "f8" -> 701,
       "b" -> 16, "d" -> 1082, "ts" -> 1114, "tz" -> 1184, "n" -> 1700,
-      "by" -> 17, "u" -> 2950, "s" -> 25, "t" -> 1083)
+      "by" -> 17, "u" -> 2950, "s" -> 25, "t" -> 1083, "tt" -> 1266)
+    def times(t: String, tt: String) =
+      rawRow(Seq.fill(spec.size - 2)(null) ++ Seq(t, tt).map(c => Option(c).map(utf8).orNull): _*)
     val rows = Seq(
       rawRow(int2(-32768), int4(Int.MinValue), int8(Long.MinValue), float4(0.1f),
         float8(-2.2250738585072014e-308), Array[Byte](1), int4(days(1999, 12, 31)),
         int8(micros(LocalDateTime.of(2021, 3, 14, 1, 2, 3, 250000000))),
         int8(micros(LocalDateTime.of(2021, 3, 13, 19, 32, 3, 250000000))),
         numeric(2, 0, 0, 4, 1234, 5678), Array[Byte](0, 1, -1, 127, -128),
-        int8(0x0123456789abcdefL) ++ int8(-1L), utf8("plain 'text' ü"), utf8("12:34:56.25")),
+        int8(0x0123456789abcdefL) ++ int8(-1L), utf8("plain 'text' ü"), utf8("12:34:56.25"),
+        utf8("12:34:56.5+05:30")),
       rawRow(Seq.fill(spec.size)(null): _*),
       rawRow(int2(32767), int4(Int.MaxValue), int8(Long.MaxValue), float4(Float.NaN),
         float8(Double.PositiveInfinity), Array[Byte](0), int4(days(1000, 1, 1)),
         int8(micros(LocalDateTime.of(1000, 1, 1, 0, 0))),
         int8(micros(LocalDateTime.of(1582, 10, 10, 12, 0))),
         numeric(0, 0, 0xC000, 0), Array.emptyByteArray, new Array[Byte](16),
-        utf8(""), utf8("00:00:00")))
-    assertSame(spec, rows, binary = true)
+        utf8(""), utf8("00:00:00"), utf8("23:59:59+00")),
+      times("12:34:56.123456", "12:34:56.123456-07"),
+      // PG's end of day: its parse fails alike on both paths.
+      times("24:00:00", null),
+      times(null, "24:00:00+00"))
+    assert(assertSame(spec, rows, binary = true) === Set(4, 5))
   }
 
   test("±infinity dates and timestamps fail or read alike on both paths") {
@@ -209,16 +236,21 @@ class MiniPgScanSpec extends AnyFunSuite {
   test("every kind in text transfer reads as the JDBC getters read it") {
     val spec = Seq("i2" -> 21, "i8" -> 20, "f4" -> 700, "f8" -> 701, "b" -> 16,
       "d" -> 1082, "ts" -> 1114, "tz" -> 1184, "n" -> 1700, "by" -> 17,
-      "u" -> 2950, "s" -> 25, "t" -> 1083)
+      "u" -> 2950, "s" -> 25, "t" -> 1083, "tt" -> 1266)
+    def times(t: String, tt: String) = Seq.fill(spec.size - 2)(null) ++ Seq(t, tt)
     val rows = Seq(
       Seq("-32768", "-9007199254740993", "0.1", "1e+300", "t", "1999-12-31",
         "2021-03-14 01:02:03.25", "2021-03-14 01:02:03.25+00", "1234.5678",
-        "\\x0001ff", "a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11", "ü", "12:34:56.25"),
+        "\\x0001ff", "a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11", "ü", "12:34:56.25",
+        "12:34:56.5+05:30"),
       Seq.fill(spec.size)(null),
       Seq("7", "0", "NaN", "-Infinity", "f", "1000-01-01", "1000-01-01 00:00:00",
         "1582-10-10 12:00:00+00", "NaN", "\\x", "00000000-0000-0000-0000-000000000000",
-        "", "23:59:59"))
-    assertSame(spec, rows.map(r => row(r: _*)), binary = false)
+        "", "23:59:59", "00:00:00+00"),
+      times("12:34:56.123456", "12:34:56.123456-07"),
+      times("24:00:00", null),
+      times(null, "24:00:00+00"))
+    assert(assertSame(spec, rows.map(r => row(r: _*)), binary = false) === Set(4, 5))
   }
 
   test("Flaco.readSqlToDataFrame reads a MiniPg URI through the columnar " +
@@ -240,6 +272,37 @@ class MiniPgScanSpec extends AnyFunSuite {
       // One Parse + Describe for the schema, one statement for the task.
       assert(server.received.toArray.toSeq.map(_.toString).mkString.startsWith("PDSXPBES"))
     } finally server.close()
+  }
+
+  test("a column without a decoder sends the whole statement to Spark's " +
+    "JDBC reader") {
+    // Reads int4 as a string, for this test's database alone.
+    val intsAsText = new JdbcDialect {
+      override def canHandle(url: String): Boolean = url.contains("/scan_fallback_db?")
+      override def getCatalystType(sqlType: Int, typeName: String, size: Int,
+          md: MetadataBuilder): Option[DataType] =
+        if (typeName == "int4") Some(StringType) else None
+    }
+    val desc = rowDescription("id" -> 23, "s" -> 25)
+    val describe = Seq(Seq(ParseComplete, NoParams, desc, Ready))
+    val rows = (1 to 3).map(i => row(i.toString, s"row $i"))
+    // MiniPgScan.read twice (the second through Flaco), then the JDBC
+    // reader's schema query and its read.
+    val server = new ScriptedPgServer(Hello, describe, Seq(describe,
+      Seq(Seq(desc, complete("SELECT 0"), Ready)),
+      Seq(Seq(desc) ++ rows ++ Seq(complete("SELECT 3"), Ready))))
+    val url = s"jdbc:postgresql://localhost:${server.port}/scan_fallback_db?user=u&binaryTransfer=false"
+    JdbcDialects.registerDialect(intsAsText)
+    try {
+      assert(MiniPgScan.read(TestSpark.spark, Flaco.jdbcOptions(url, "select id, s from t")).isEmpty)
+      val df = Flaco.readSqlToDataFrame(TestSpark.spark, url, "select id, s from t")
+      assert(df.schema.map(_.dataType) === Seq(StringType, StringType))
+      assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq ===
+        (1 to 3).map(i => (i.toString, s"row $i")))
+      assert(df.queryExecution.executedPlan.collectFirst { case s: BatchScanExec => s }.isEmpty,
+        df.queryExecution.executedPlan.toString)
+      assert(server.accepted.get === 4)
+    } finally { JdbcDialects.unregisterDialect(intsAsText); server.close() }
   }
 }
 
@@ -264,4 +327,10 @@ object MiniPgScanSpec {
     digits.foreach(d => b.putShort(d.toShort))
     b.array()
   }
+  /** Binary cells of a length their type does not have, by column OID:
+    * a 4-byte int8 and timestamptz, and a numeric whose third digit
+    * group runs past its cell.
+    */
+  val wrongWidth: Seq[(Int, Array[Byte])] =
+    Seq(20 -> int4(7), 1184 -> int4(0), 1700 -> numeric(3, 0, 0, 0, 1, 2))
 }

@@ -179,9 +179,10 @@ class MiniPgScanSpec extends AnyFunSuite {
     (jdbc, columnar)
   }
 
-  /** Both paths read `rows` alike, all together and each row alone (so
-    * a failing cell cannot hide the values of the other rows); returns
-    * the indices of the rows that fail on both.
+  /** Both paths read `rows` alike: the whole table, each row alone, and
+    * every row that reads alone all together in one batch (so values
+    * are compared across rows, and a failing cell cannot hide the
+    * others); returns the indices of the rows that fail on both.
     */
   private def assertSame(spec: Seq[(String, Int)], rows: Seq[Array[Byte]],
       binary: Boolean): Set[Int] = {
@@ -193,7 +194,10 @@ class MiniPgScanSpec extends AnyFunSuite {
       jdbc.isSuccess
     }
     same(rows)
-    rows.indices.filterNot(i => same(Seq(rows(i)))).toSet
+    val failing = rows.indices.filterNot(i => same(Seq(rows(i)))).toSet
+    assert(same(rows.indices.filterNot(failing).map(rows)),
+      "rows that read alone fail together")
+    failing
   }
 
   test("every binary kind reads as the JDBC getters read ColumnStore's " +

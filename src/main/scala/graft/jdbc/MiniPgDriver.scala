@@ -634,7 +634,19 @@ object MiniPgWire {
     .optionalStart().appendOffset("+HH:mm", "+00").optionalEnd()
     .toFormatter
 
+  /** Whether the time at char 11 of `s` is PostgreSQL's end of day,
+    * `24:00:00` with no nonzero fraction, which the parsers below read
+    * as the next day's midnight.
+    */
+  private def endOfDay(s: String): Boolean =
+    s.startsWith("24:00:00", 11) && {
+      val rest = s.substring(19)
+      !rest.startsWith(".") || rest.drop(1).takeWhile(_.isDigit).forall(_ == '0')
+    }
+
   def parseTimestamptz(s: String): java.sql.Timestamp = {
+    if (endOfDay(s)) return java.sql.Timestamp.from(
+      parseTimestamptz(s.patch(11, "00", 2)).toInstant.plus(1, java.time.temporal.ChronoUnit.DAYS))
     val t = java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME
     val norm = s.replace(' ', 'T') + (if (s.contains("+") || s.drop(11).contains("-")) "" else "Z")
     // Normalize bare '+00' / '+05' offsets to '+00:00' for ISO parse.
@@ -647,8 +659,10 @@ object MiniPgWire {
     * read carries — a DateTimeFormatter here costs ~1 µs/cell, which
     * alone put the 600k-row probe ~0.5 s over budget); anything else
     * (BC era, special values) falls back to the lenient formatter.
+    * `24:00:00` reads as the next day's midnight.
     */
   def parseTimestampNtz(s: String): LocalDateTime = {
+    if (endOfDay(s)) return parseTimestampNtz(s.patch(11, "00", 2)).plusDays(1)
     if (s.length >= 19 && s.charAt(4) == '-' && s.charAt(7) == '-' &&
         s.charAt(10) == ' ' && s.charAt(13) == ':' && s.charAt(16) == ':') {
       var ok = true

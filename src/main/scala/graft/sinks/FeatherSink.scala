@@ -13,10 +13,13 @@ import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.arrow.GraftArrowBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.FlacoSparkException
 
@@ -26,12 +29,13 @@ import graft.FlacoSparkException
   * writes a single uncompressed IPC file; here we stream fixed-size
   * record batches (bounded memory — the reference's own TODO at
   * `src/lib.rs:75`) and, by default, write one IPC file per partition
-  * in parallel (the 100 TB path). `singleFile = true` gives the
-  * reference's one-file layout via a driver-side local iterator,
-  * still batch-streamed.
+  * in parallel (the 100 TB path), in one Spark job. `singleFile = true`
+  * gives the reference's one-file layout by pulling one partition per
+  * job through the driver, still batch-streamed.
   *
   * One encoder serves every path: the tasks fill Arrow-Java 18.3
-  * vectors from the plan's InternalRows with Spark's own
+  * vectors from InternalRows (the plan's, or row views over a columnar
+  * scan's own batches) with Spark's own
   * `execution.arrow.ArrowWriter` — the writer behind Spark's Arrow
   * exchange with Python — so no row goes through an external `Row`
   * and its `java.sql`/`String` objects.
@@ -71,11 +75,10 @@ object FeatherSink {
       }
     } else {
       target.mkdirs()
-      val wrote = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-        val nonEmpty = rows.hasNext
-        if (nonEmpty) writeFile(schema, f"$path/part-$pid%05d.arrow")(_.encode(rows) > 0)
-        Iterator(nonEmpty)
-      }.collect()
+      val (rdd, columnar) = source(df)
+      val wrote = new Array[Boolean](rdd.getNumPartitions)
+      rdd.sparkContext.runJob(rdd, WritePartition(schema, path, columnar),
+        wrote.indices, (pid: Int, nonEmpty: Boolean) => wrote(pid) = nonEmpty)
       if (!wrote.contains(true))
         writeFile(schema, s"$path/part-00000.arrow")(_ => false)
     }
@@ -219,18 +222,65 @@ object FeatherSink {
     writer.close(); enc.close()
   }
 
-  /** The driver-side paths: each task encodes its partition into IPC
-    * record-batch messages, and the driver pulls them one partition at
-    * a time (toLocalIterator), so it holds one partition's batches.
+  /** The driver-side paths: one job per partition, in order, encodes
+    * that partition into IPC record-batch messages, so the driver holds
+    * one partition's batches at a time.
     */
   private def pulled(df: DataFrame): BatchEncoder => Boolean = {
-    val schema = df.schema
-    val messages = df.queryExecution.toRdd.mapPartitions { rows =>
-      val enc = new BatchEncoder(schema)
-      TaskContext.get().addTaskCompletionListener[Unit](_ => enc.close())
-      Iterator.continually(enc.encode(rows)).takeWhile(_ > 0).map(_ => enc.message())
-    }.toLocalIterator
+    val (rdd, columnar) = source(df)
+    val encode = EncodePartition(df.schema, columnar)
+    val messages = Iterator.range(0, rdd.getNumPartitions).flatMap { pid =>
+      var out = Array.empty[Array[Byte]]
+      rdd.sparkContext.runJob(rdd, encode, Seq(pid),
+        (_: Int, m: Array[Array[Byte]]) => out = m)
+      out
+    }
     enc => messages.hasNext && { enc.load(messages.next()); true }
+  }
+
+  /** What the tasks read: the scan's own column batches when the plan
+    * only turns them into rows (a bare columnar scan such as MiniPgScan
+    * or a vectorized Parquet read), else the plan's rows. Both feed the
+    * same InternalRow getters, so the encoded bytes are the same.
+    */
+  private[sinks] def source(df: DataFrame): (RDD[AnyRef], Boolean) =
+    df.queryExecution.executedPlan match {
+      case WholeStageCodegenExec(ColumnarToRowExec(InputAdapter(scan))) =>
+        (scan.executeColumnar().asInstanceOf[RDD[AnyRef]], true)
+      case _ => (df.queryExecution.toRdd.asInstanceOf[RDD[AnyRef]], false)
+    }
+
+  private def rowsOf(it: Iterator[AnyRef], columnar: Boolean): Iterator[InternalRow] =
+    if (columnar) it.flatMap(_.asInstanceOf[ColumnarBatch].rowIterator().asScala)
+    else it.asInstanceOf[Iterator[InternalRow]]
+
+  /** A task: its partition as IPC record-batch messages. The task
+    * functions are named classes, not lambdas, because Spark's closure
+    * cleaner returns at once for them instead of re-parsing the
+    * bytecode of `RDD` and `SparkContext` on every job.
+    */
+  private final case class EncodePartition(schema: StructType, columnar: Boolean)
+      extends ((TaskContext, Iterator[AnyRef]) => Array[Array[Byte]]) {
+    def apply(ctx: TaskContext, it: Iterator[AnyRef]): Array[Array[Byte]] = {
+      val rows = rowsOf(it, columnar)
+      val enc = new BatchEncoder(schema)
+      try Iterator.continually(enc.encode(rows)).takeWhile(_ > 0).map(_ => enc.message()).toArray
+      finally enc.close()
+    }
+  }
+
+  /** A task: its partition as `part-NNNNN.arrow` under `path`, unless
+    * empty; whether it wrote one.
+    */
+  private final case class WritePartition(schema: StructType, path: String, columnar: Boolean)
+      extends ((TaskContext, Iterator[AnyRef]) => Boolean) {
+    def apply(ctx: TaskContext, it: Iterator[AnyRef]): Boolean = {
+      val rows = rowsOf(it, columnar)
+      val nonEmpty = rows.hasNext
+      if (nonEmpty)
+        writeFile(schema, f"$path/part-${ctx.partitionId()}%05d.arrow")(_.encode(rows) > 0)
+      nonEmpty
+    }
   }
 
   /** An Arrow root for a sink schema that Spark's ArrowWriter fills

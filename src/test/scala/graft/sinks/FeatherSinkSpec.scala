@@ -10,9 +10,14 @@ import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.ListVector
 import org.apache.arrow.vector.ipc.ArrowFileReader
 import org.apache.arrow.vector.types.pojo.ArrowType
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.{FlacoSparkException, TestSpark}
 import graft.sources.Corpus
@@ -209,9 +214,8 @@ class FeatherSinkSpec extends AnyFunSuite {
     assert(back2.exceptAll(df).isEmpty && df.exceptAll(back2).isEmpty)
   }
 
-  test("every supported type, with nulls, encodes the same through " +
-    "collectAsArrowStream and both Feather layouts, in partition order") {
-    val schema = StructType(Seq(
+  /** Every type the sink supports, with a null row every 7th row. */
+  private val allTypes = StructType(Seq(
       StructField("i4", IntegerType), StructField("i8", LongType),
       StructField("i2", ShortType), StructField("i1", ByteType),
       StructField("f4", FloatType), StructField("f8", DoubleType),
@@ -221,8 +225,10 @@ class FeatherSinkSpec extends AnyFunSuite {
       StructField("t6", TimeType(6)),
       StructField("af", ArrayType(FloatType)),
       StructField("ad", ArrayType(DoubleType))))
-    val rows = (0 until 30).map { i =>
-      if (i % 7 == 3) Row.fromSeq(Seq.fill(schema.length)(null))
+
+  private def allTypesRows(n: Int): Seq[Row] =
+    (0 until n).map { i =>
+      if (i % 7 == 3) Row.fromSeq(Seq.fill(allTypes.length)(null))
       else Row(i, i * 1000000007L, (i - 15).toShort, (i - 15).toByte,
         i / 4.0f, i / 3.0, s"s$i-é", Array.tabulate[Byte](i % 4)(_.toByte),
         i % 2 == 0, java.time.LocalDate.of(1999, 12, 31).plusDays(i),
@@ -234,7 +240,11 @@ class FeatherSinkSpec extends AnyFunSuite {
         Seq.tabulate(i % 3)(_ * 0.5f),
         if (i % 5 == 0) Seq(1.5, null, -2.5) else Seq.tabulate(i % 4)(_ * 0.25))
     }
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+
+  test("every supported type, with nulls, encodes the same through " +
+    "collectAsArrowStream and both Feather layouts, in partition order") {
+    val schema = allTypes
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(allTypesRows(30), 3), schema)
     assert(df.rdd.getNumPartitions === 3)
     val want = df.collect().toSeq.map(r =>
       schema.fields.indices.map(c => expected(r, c, schema.fields(c).dataType)))
@@ -355,5 +365,140 @@ class FeatherSinkSpec extends AnyFunSuite {
     // mode) writes fine — the guard gates only the parity path.
     FeatherSink.write(df, path, singleFile = true)
     assert(readBack(path, df.schema).size === df.count())
+  }
+
+  /** Runs `body` with `key` set to `value` on the shared session. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** SHA-256 of each sink output for `df`: the Arrow stream, the
+    * singleFile Feather file and each per-partition file by name.
+    */
+  private def sinkDigests(df: DataFrame): Map[String, String] = {
+    def sha(b: Array[Byte]) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(b).map("%02x".format(_)).mkString
+    val dir = Files.createTempDirectory("ftd")
+    FeatherSink.write(df, s"$dir/one.arrow", singleFile = true)
+    FeatherSink.write(df, s"$dir/parts")
+    val parts = dir.resolve("parts").toFile.listFiles.map(f =>
+      s"parts/${f.getName}" -> sha(Files.readAllBytes(f.toPath)))
+    Map("stream" -> sha(graft.Flaco.collectAsArrowStream(df)),
+      "one.arrow" -> sha(Files.readAllBytes(dir.resolve("one.arrow")))) ++ parts
+  }
+
+  /** 10,000 rows of every type in two Parquet files, and a third that
+    * holds the schema alone: a 3-partition read with one empty partition.
+    */
+  private lazy val allTypesParquet: String = {
+    val dir = Files.createTempDirectory("ftcol").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(allTypesRows(10000), 2), allTypes)
+      .write.parquet(s"$dir/a")
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], allTypes).write.parquet(s"$dir/b")
+    dir
+  }
+
+  private def readAllTypes(): DataFrame =
+    spark.read.parquet(s"$allTypesParquet/a", s"$allTypesParquet/b")
+
+  test("a columnar scan's own batches encode byte for byte as its rows do") {
+    val columnar = readAllTypes()
+    assert(FeatherSink.source(columnar)._2, columnar.queryExecution.executedPlan.toString)
+    assert(columnar.queryExecution.toRdd.mapPartitions(it => Iterator(it.size))
+      .collect().toSeq.sorted === Seq(0, 5000, 5000))
+    val viaBatches = sinkDigests(columnar)
+    val viaRows = withConf("spark.sql.parquet.enableVectorizedReader", "false") {
+      val rows = readAllTypes()
+      assert(!FeatherSink.source(rows)._2, rows.queryExecution.executedPlan.toString)
+      sinkDigests(rows)
+    }
+    assert(viaBatches.keySet ===
+      Set("stream", "one.arrow", "parts/part-00000.arrow", "parts/part-00001.arrow"))
+    assert(viaBatches === viaRows)
+
+    // And the batches carry the values themselves.
+    val single = Files.createTempDirectory("ftc1").toString + "/t.arrow"
+    FeatherSink.write(columnar, single, singleFile = true)
+    assert(readBack(single, allTypes) === columnar.collect().toSeq.map(r =>
+      allTypes.fields.indices.map(c => expected(r, c, allTypes.fields(c).dataType))))
+  }
+
+  /** The Spark jobs `body` starts, counted once every event is delivered. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    GraftListenerBridge.drain(sc)
+    sc.addSparkListener(counter)
+    try { body; GraftListenerBridge.drain(sc) } finally sc.removeSparkListener(counter)
+    started.get
+  }
+
+  /** An Arrow IPC stream read back like [[readBack]] reads a file. */
+  private def readStream(bytes: Array[Byte], schema: StructType): Seq[Seq[Any]] = {
+    val alloc = new RootAllocator()
+    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(bytes), alloc)
+    val out = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+    try {
+      val root = reader.getVectorSchemaRoot
+      while (reader.loadNextBatch())
+        (0 until root.getRowCount).foreach { i =>
+          out += schema.fields.indices.map { c =>
+            val v = root.getVector(c)
+            if (v.isNull(i)) null else cell(v, schema.fields(c).dataType, i)
+          }
+        }
+    } finally { reader.close(); alloc.close() }
+    out.toSeq
+  }
+
+  test("a driver-side pull runs one job per partition and streams the " +
+    "partitions in order; a per-partition write runs one job") {
+    val ranged = spark.range(0, 25000, 1, 5).toDF("id")
+    val parquet = readAllTypes().select("i8")
+    Seq(ranged -> false, parquet -> true).foreach { case (df, columnar) =>
+      assert(FeatherSink.source(df)._2 === columnar)
+      val n = df.queryExecution.toRdd.getNumPartitions
+      var bytes = Array.emptyByteArray
+      assert(jobsDuring { bytes = graft.Flaco.collectAsArrowStream(df) } === n)
+      // collect() returns the partitions in order.
+      assert(readStream(bytes, df.schema) === df.collect().toSeq.map(r => Seq(r.get(0))))
+      val dir = Files.createTempDirectory("ftj").toString
+      assert(jobsDuring(FeatherSink.write(df, s"$dir/one.arrow", singleFile = true)) === n)
+      assert(jobsDuring(FeatherSink.write(df, s"$dir/parts")) === 1)
+    }
+    assert(readStream(graft.Flaco.collectAsArrowStream(ranged), ranged.schema) ===
+      (0L until 25000L).map(Seq(_)))
+  }
+
+  test("a task that throws surfaces its own error, not a leaked-memory " +
+    "one, and leaves no job running") {
+    val boom = udf { (id: Long) =>
+      if (id == 5000) throw new IllegalStateException("row 5000 fails") else id
+    }
+    val df = spark.range(0, 20000, 1, 3).select(boom(col("id")).as("id"))
+    val dir = Files.createTempDirectory("ftf").toString
+    Seq[(String, () => Any)](
+      "collectAsArrowStream" -> (() => graft.Flaco.collectAsArrowStream(df)),
+      "singleFile" -> (() => FeatherSink.write(df, s"$dir/one.arrow", singleFile = true)),
+      "per-partition" -> (() => FeatherSink.write(df, s"$dir/parts"))).foreach {
+      case (sink, run) =>
+        val e = intercept[Exception](run())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(c => c.isInstanceOf[IllegalStateException] &&
+          c.getMessage == "row 5000 fails"), s"$sink: $e")
+        assert(!chain.exists(c => String.valueOf(c.getMessage).contains("Memory was leaked")),
+          s"$sink: $e")
+        eventually(timeout(Span(10, Seconds))) {
+          GraftListenerBridge.drain(spark.sparkContext)
+          assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, sink)
+        }
+    }
+    assert(!new java.io.File(s"$dir/one.arrow").exists())
   }
 }

@@ -15,8 +15,8 @@ import graft.TestSpark
   * in-process (reference `README.md:39-50`,
   * `benchmarks/test_benchmarks.py:103-138`). The Spark-native
   * analogue of that streaming write is
-  * [[FeatherSink.write]]`(singleFile = true)`: a `toLocalIterator`
-  * pull that holds ONE partition plus one 4096-row Arrow batch at a
+  * [[FeatherSink.write]]`(singleFile = true)`: a pull of one partition
+  * per job that holds ONE partition plus one 4096-row Arrow batch at a
   * time, never the table.
   *
   * The probe: build a 1M-row mixed-type table with a null stripe
@@ -162,7 +162,7 @@ class MemoryParitySpec extends AnyFunSuite {
     assert(streamPeakDelta < StreamBoundBytes,
       f"streaming write grew the live set by ${mib(streamPeakDelta)}%.1f" +
         f" MiB — over the ${mib(StreamBoundBytes)}%.1f MiB bound; the " +
-        "toLocalIterator path is no longer partition-bounded")
+        "partition-by-partition pull is no longer partition-bounded")
     assert(streamPeakDelta.toDouble < collectDelta / 4.0,
       f"streaming peak ${mib(streamPeakDelta)}%.1f MiB is not below " +
         f"a quarter of collect retention ${mib(collectDelta)}%.1f MiB " +

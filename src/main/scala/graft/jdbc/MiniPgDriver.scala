@@ -6,7 +6,7 @@ import java.net.Socket
 import java.nio.charset.StandardCharsets
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.{SQLException, SQLFeatureNotSupportedException}
-import java.time.{LocalDate, LocalDateTime, OffsetDateTime, ZoneOffset}
+import java.time.{LocalDate, LocalDateTime, OffsetDateTime}
 import java.time.format.DateTimeFormatterBuilder
 import java.time.temporal.ChronoField
 import java.util.Properties
@@ -30,24 +30,22 @@ import scala.util.control.NonFatal
   * `df.write.jdbc` — runs against a live server.
   *
   * Deliberately minimal, like the reference's client usage:
-  *  - v3 SIMPLE QUERY protocol (`Q` messages, TEXT results) for
-  *    execute/update/batch, plus ONE extended-protocol shape for
-  *    reads (`executeQuery` → unnamed Parse/Bind/Execute with
-  *    per-column BINARY result formats for the types in
-  *    [[MiniPgWire.BinaryOids]] — the same binary typed reads the
-  *    reference's rust-postgres client performs; disable with
-  *    `?binaryTransfer=false`, pgjdbc's param name);
+  *  - v3 SIMPLE QUERY protocol (`Q` messages, TEXT results) for every
+  *    JDBC statement; [[MiniPgScan]] alone runs the extended protocol,
+  *    with per-column BINARY result formats for the types its
+  *    `Cells.BinaryOids` lists (the binary typed reads the reference's
+  *    rust-postgres client performs; `?binaryTransfer=false`, pgjdbc's
+  *    param name, keeps the scan on text);
   *  - trust / cleartext-password auth (the provisioned test cluster
   *    uses trust; no SCRAM);
   *  - `PreparedStatement` parameters are bound client-side as SQL
   *    literals (standard_conforming_strings escaping; bytea as
   *    `'\x…'::bytea`, timestamps as quoted ISO text) — batches are
   *    sent as one multi-statement simple query per JDBC batch;
-  *  - a JDBC result decodes by type OID into a [[MiniPgWire.ColumnStore]]
-  *    that the getters serve; [[MiniPgScan]] decodes the same cells
-  *    straight into column vectors, through the cell decoders both
-  *    share — the per-type dispatch the reference's 19-arm switch
-  *    performs (`lib.rs:199-386`);
+  *  - a JDBC result decodes its text cells by type OID into a
+  *    [[MiniPgWire.ColumnStore]] that the getters serve; [[MiniPgScan]]
+  *    decodes cells straight into column vectors. The two decode
+  *    independently, so either checks the other;
   *  - the giant JDBC interfaces are served through reflective
   *    [[java.lang.reflect.Proxy]] handlers that implement the ~40
   *    methods Spark's `JdbcUtils`/`JDBCRDD` actually call and throw a
@@ -56,11 +54,11 @@ import scala.util.control.NonFatal
   *
   * NOT a general-purpose driver: no named statements/portals or
   * server-side parameters, no cursors, no cancellation, no SSL — and
-  * a JDBC `ResultSet`'s result is fully buffered in client memory
-  * before it is handed back (no fetchSize streaming). That bounds
-  * `spark.read.jdbc` over this driver to test-harness scales; the
-  * columnar read [[graft.Flaco.readSqlToDataFrame]] takes for these
-  * URLs ([[MiniPgScan]]) streams instead, one batch at a time over
+  * a JDBC `ResultSet` holds its whole result in client memory (no
+  * fetchSize streaming), which bounds `spark.read.jdbc` over this
+  * driver to small results. The columnar read
+  * [[graft.Flaco.readSqlToDataFrame]] takes for these URLs
+  * ([[MiniPgScan]]) streams instead, one batch at a time over
   * [[MiniPgWire.execute]] / [[MiniPgWire.readRows]]. It exists so the
   * reference's integration surface (live PG round-trips) is
   * executable in-sandbox; production deployments would put the real
@@ -80,33 +78,18 @@ object MiniPgWire {
     val KindLong = 1
     val KindDouble = 2
     val KindBool = 3
-    /** Binary-format date: int4 days since 2000-01-01, stored as
-      * epoch-day in the long vector.
-      */
+    // No store produces these; perfbench/Probes.scala names them.
     val KindDate = 4
-    /** Binary-format timestamp (NTZ): int8 µs since 2000-01-01 00:00
-      * wall-clock, stored raw in the long vector.
-      */
     val KindTs = 5
-    /** Binary-format timestamptz: int8 µs since 2000-01-01T00:00Z
-      * (an instant), stored raw in the long vector.
-      */
     val KindTstz = 6
-    /** Binary-format numeric: decoded to java.math.BigDecimal (or
-      * the literal text for NaN/±Infinity) in the object vector.
-      */
     val KindDecimal = 7
-    /** Binary-format bytea: the raw payload bytes in the object
-      * vector (no hex round-trip).
-      */
     val KindBytes = 8
-    /** OID → decode kind: the wire layer's row→columnar dispatch
-      * (the reference's 19-arm switch shape, lib.rs:197-389). int2/
-      * int4/int8 parse straight from the payload bytes — no per-cell
-      * String; float4/float8 via one ASCII String (parseDouble takes
-      * only String); everything else keeps its text form for the
-      * typed getters to interpret (numeric → BigDecimal, date/ts →
-      * java.time, bytea → hex decode).
+
+    /** OID → decode kind of a text cell: int2/int4/int8 parse straight
+      * from the payload bytes, with no per-cell String; float4/float8
+      * through the no-allocation parse; bool from `t`/`f`; everything
+      * else keeps its text for the typed getters to interpret (numeric
+      * → BigDecimal, date/ts → java.time, bytea → hex decode).
       */
     def kindOf(oid: Int): Int = oid match {
       case 20 | 23 | 21 => KindLong
@@ -114,134 +97,32 @@ object MiniPgWire {
       case 16 => KindBool
       case _ => KindString
     }
-
-    /** OID → decode kind for BINARY result format (the extended-
-      * protocol fast path): the wire value parses straight into its
-      * typed vector with no intermediate text at all. Only OIDs in
-      * [[MiniPgWire.BinaryOids]] reach here.
-      */
-    def binKindOf(oid: Int): Int = oid match {
-      case 20 | 23 | 21 => KindLong
-      case 700 | 701 => KindDouble
-      case 16 => KindBool
-      case 1082 => KindDate
-      case 1114 => KindTs
-      case 1184 => KindTstz
-      case 1700 => KindDecimal
-      case 17 => KindBytes
-      case 2950 => KindString // decoded to the canonical text render
-      case _ => KindString
-    }
-
-    /** PG's binary ±infinity timestamp sentinels (Long.MAX/MIN µs).
-      * The typed getters map them to pgjdbc's convention (a
-      * Timestamp at Long.MAX/MIN ms); text() renders PG's
-      * 'infinity'/'-infinity'. The TEXT path throws on these at
-      * parse time, so binary is strictly more faithful here.
-      */
-    val TsPosInfinity: Long = Long.MaxValue
-    val TsNegInfinity: Long = Long.MinValue
-
-    /** Binary ±infinity DATE sentinels (Int.MAX/MIN days), stored
-      * epoch-day-shifted like every other date cell.
-      */
-    val DatePosInfinity: Long = Int.MaxValue.toLong + PgEpochDay
-    val DateNegInfinity: Long = Int.MinValue.toLong + PgEpochDay
-
-    /** µs since the PG epoch → wall-clock LocalDateTime (the binary
-      * `timestamp` payload; interpretation zone is the CALLER's
-      * choice, exactly like the text render).
-      */
-    def microsToLocalDateTime(us: Long): LocalDateTime =
-      LocalDateTime.ofEpochSecond(
-        Math.floorDiv(us, 1000000L) + PgEpochSec,
-        (Math.floorMod(us, 1000000L) * 1000L).toInt, ZoneOffset.UTC)
-
-    /** µs since the PG epoch (as an instant) → java.sql.Timestamp
-      * (the binary `timestamptz` payload).
-      */
-    def microsToTimestamptz(us: Long): java.sql.Timestamp =
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L) + PgEpochSec,
-        Math.floorMod(us, 1000000L) * 1000L))
-
-    /** PG's offset spelling: '+00' / '-07' for whole hours, ':MM'
-      * appended when the offset carries minutes ('+05:30'), ':SS'
-      * appended when it carries seconds ('+05:53:28' — historic LMT
-      * zones predate offset standardization; r17 ADVICE).
-      */
-    def renderPgOffset(off: ZoneOffset): String = {
-      val total = off.getTotalSeconds
-      val sign = if (total < 0) "-" else "+"
-      val abs = math.abs(total)
-      val base = f"$sign${abs / 3600}%02d"
-      if (abs % 3600 == 0) base
-      else if (abs % 60 == 0) f"$base:${(abs % 3600) / 60}%02d"
-      else f"$base:${(abs % 3600) / 60}%02d:${abs % 60}%02d"
-    }
-
-    /** PG-style text render of a wall-clock timestamp: fraction
-      * digits only when non-zero, trailing zeros trimmed (what
-      * `timestamp::text` produces, so getString agrees across
-      * formats).
-      */
-    def renderTsText(ldt: LocalDateTime): String = {
-      val base = f"${ldt.toLocalDate}%s ${ldt.getHour}%02d:" +
-        f"${ldt.getMinute}%02d:${ldt.getSecond}%02d"
-      val us = ldt.getNano / 1000
-      if (us == 0) base
-      else {
-        var frac = f"$us%06d"
-        while (frac.endsWith("0")) frac = frac.dropRight(1)
-        s"$base.$frac"
-      }
-    }
   }
 
-  /** Per-column TYPED vectors decoded once at message-read time — the
-    * buffer a [[MiniPgResultSet]] serves without further parsing or
-    * boxing (the r17 wire-decode fast path; see MiniPgResultSet's
-    * docstring for the measured motivation). `tz` is the SERVER's
-    * session TimeZone (tracked from ParameterStatus messages): binary
-    * `timestamptz` payloads are zone-less instants, so re-rendering
-    * the text form PG would have sent needs the zone PG would have
-    * used.
+  /** Per-column typed vectors of a text result, decoded once at
+    * message-read time: the buffer a [[MiniPgResultSet]] serves without
+    * further parsing or boxing.
     */
-  final class ColumnStore(cols: Array[Col], formats: Array[Byte],
-      tz: java.time.ZoneId) extends RowSink {
+  final class ColumnStore(cols: Array[Col]) extends RowSink {
     import ColumnStore._
 
-    def this(cols: Array[Col], formats: Array[Byte]) =
-      this(cols, formats, ZoneOffset.UTC)
-
-    /** Simple-protocol (all-text) store. */
-    def this(cols: Array[Col]) = this(cols, new Array[Byte](cols.length))
-
     private val n = cols.length
-    private val bin: Array[Boolean] = formats.map(_ == 1.toByte)
-    private val oids: Array[Int] = cols.map(_.oid)
-    private val kinds: Array[Int] = Array.tabulate(n)(c =>
-      if (bin(c)) binKindOf(oids(c)) else kindOf(oids(c)))
+    private val kinds: Array[Int] = cols.map(c => kindOf(c.oid))
     val nulls: Array[java.util.BitSet] = Array.fill(n)(new java.util.BitSet())
-    private def longBacked(k: Int): Boolean =
-      k == KindLong || k == KindBool || k == KindDate || k == KindTs ||
-        k == KindTstz
-    private def objBacked(k: Int): Boolean =
-      k == KindDecimal || k == KindBytes
     private val longCols: Array[Array[Long]] = kinds.map(k =>
-      if (longBacked(k)) new Array[Long](64) else null)
+      if (k == KindLong || k == KindBool) new Array[Long](64) else null)
     private val dblCols: Array[Array[Double]] = kinds.map(k =>
       if (k == KindDouble) new Array[Double](64) else null)
     private val strCols: Array[Array[String]] = kinds.map(k =>
       if (k == KindString) new Array[String](64) else null)
-    private val objCols: Array[Array[AnyRef]] = kinds.map(k =>
-      if (objBacked(k)) new Array[AnyRef](64) else null)
     var size = 0
 
     def kind(c: Int): Int = kinds(c)
     def kindLong(c: Int): Array[Long] = longCols(c)
     def kindDouble(c: Int): Array[Double] = dblCols(c)
-    def kindObj(c: Int): Array[AnyRef] = objCols(c)
+    // No store produces these; perfbench/Probes.scala names them.
+    def kindObj(c: Int): Array[AnyRef] =
+      throw new IllegalStateException(s"column $c is not object-backed")
 
     /** Text view of a cell (null-cell → null) — the fallback getters
       * (BigDecimal, date/time, bytea, json…) and getString.
@@ -252,46 +133,6 @@ object MiniPgWire {
         case KindString => strCols(c)(r)
         case KindLong => String.valueOf(longCols(c)(r))
         case KindDouble => String.valueOf(dblCols(c)(r))
-        case KindBool => if (longCols(c)(r) != 0L) "t" else "f"
-        case KindDate =>
-          val d = longCols(c)(r)
-          if (d == DatePosInfinity) "infinity"
-          else if (d == DateNegInfinity) "-infinity"
-          else LocalDate.ofEpochDay(d).toString
-        case KindTs =>
-          val us = longCols(c)(r)
-          if (us == TsPosInfinity) "infinity"
-          else if (us == TsNegInfinity) "-infinity"
-          else renderTsText(microsToLocalDateTime(us))
-        case KindTstz =>
-          // Re-rendered in the SERVER's session zone with PG's own
-          // offset spelling ('+00', '+05:30'), so getString agrees
-          // with what the text wire would have carried; typed access
-          // goes through getTimestamp, which is zone-exact
-          // regardless.
-          val us = longCols(c)(r)
-          if (us == TsPosInfinity) "infinity"
-          else if (us == TsNegInfinity) "-infinity"
-          else {
-            val inst = microsToTimestamptz(us).toInstant
-            renderTsText(LocalDateTime.ofInstant(inst, tz)) +
-              renderPgOffset(tz.getRules.getOffset(inst))
-          }
-        case KindDecimal => objCols(c)(r) match {
-          case bd: java.math.BigDecimal => bd.toPlainString
-          case s => s.asInstanceOf[String]
-        }
-        case KindBytes =>
-          val b = objCols(c)(r).asInstanceOf[Array[Byte]]
-          val sb = new java.lang.StringBuilder(2 + 2 * b.length)
-          sb.append("\\x")
-          var i = 0
-          while (i < b.length) {
-            sb.append(Character.forDigit((b(i) >> 4) & 0xf, 16))
-            sb.append(Character.forDigit(b(i) & 0xf, 16))
-            i += 1
-          }
-          sb.toString
         case _ => if (longCols(c)(r) != 0L) "t" else "f"
       }
 
@@ -306,75 +147,29 @@ object MiniPgWire {
         if (size == strCols(c).length) strCols(c) = grown(strCols(c), size * 2)
       case KindDouble =>
         if (size == dblCols(c).length) dblCols(c) = grown(dblCols(c), size * 2)
-      case KindDecimal | KindBytes =>
-        if (size == objCols(c).length) objCols(c) = grown(objCols(c), size * 2)
       case _ =>
         if (size == longCols(c).length) longCols(c) = grown(longCols(c), size * 2)
     }
 
     /** Decode one cell of the current row (len == -1 → SQL NULL). */
-    def put(c: Int, payload: Array[Byte], off: Int, len: Int): Unit = {
+    private def put(c: Int, payload: Array[Byte], off: Int, len: Int): Unit = {
       ensure(c)
       if (len < 0) { nulls(c).set(size); return }
-      if (bin(c)) putBinary(c, payload, off, len)
-      else kinds(c) match {
+      kinds(c) match {
         case KindLong =>
           longCols(c)(size) = parseLongCell(payload, off, len)
         case KindDouble =>
           dblCols(c)(size) = parseDoubleCell(payload, off, len)
         case KindBool =>
-          longCols(c)(size) = if (payload(off) == 't') 1L else 0L
+          longCols(c)(size) = if (parseBoolCell(payload, off, len)) 1L else 0L
         case _ =>
           strCols(c)(size) = new String(payload, off, len, UTF_8)
       }
     }
 
-    /** Binary-format cell decode (extended-protocol fast path): the
-      * network byte order payloads of PG's `send` functions, straight
-      * into the typed vectors — zero text, zero boxing.
-      */
-    private def putBinary(c: Int, payload: Array[Byte], off: Int,
-        len: Int): Unit = kinds(c) match {
-      case KindLong =>
-        longCols(c)(size) = binaryIntegral(oids(c), payload, off, len)
-      case KindDouble =>
-        dblCols(c)(size) =
-          if (oids(c) == 700) {
-            // float4: widen through the shortest-roundtrip decimal
-            // render, NOT the raw bit widen — PG's text path sends
-            // '0.1' (parsed to 0.1d) where (double)0.1f is
-            // 0.10000000149…; Float.toString is the same shortest
-            // render, so getDouble/getString are transfer-mode
-            // independent (r17 ADVICE). getFloat round-trips exactly
-            // either way.
-            val f = binaryFloat4(payload, off, len)
-            if (java.lang.Float.isNaN(f) || java.lang.Float.isInfinite(f))
-              f.toDouble
-            else java.lang.Double.parseDouble(java.lang.Float.toString(f))
-          } else binaryFloat8(payload, off, len)
-      case KindBool =>
-        longCols(c)(size) = if (binaryBool(payload, off, len)) 1L else 0L
-      case KindDate =>
-        longCols(c)(size) = binaryDate(payload, off, len)
-      case KindTs | KindTstz =>
-        longCols(c)(size) = binaryMicros(payload, off, len)
-      case KindDecimal =>
-        objCols(c)(size) = decodeNumericBinary(payload, off, len)
-      case KindBytes =>
-        objCols(c)(size) =
-          java.util.Arrays.copyOfRange(payload, off, off + len)
-      case _ =>
-        strCols(c)(size) =
-          if (oids(c) == 2950) decodeUuidBinary(payload, off, len)
-          else new String(payload, off, len, UTF_8)
-    }
-
-    def rowDone(): Unit = size += 1
-
     /** Appends DataRow `p(0 until len)`: an int16 cell count, then per
       * cell an int32 length (-1 = NULL) and that many bytes, decoded
-      * straight into the typed vectors (no per-cell String for int/bool
-      * columns — the r17 fast path).
+      * straight into the typed vectors.
       */
     override def row(p: Array[Byte], len: Int): Boolean = {
       checkCells(p, len, n)
@@ -387,16 +182,9 @@ object MiniPgWire {
         if (l > 0) off += l
         c += 1
       }
-      rowDone()
+      size += 1
       false
     }
-
-    /** Empties the store for reuse; its vectors keep their capacity. */
-    def clear(): Unit = {
-      size = 0
-      nulls.foreach(_.clear())
-    }
-
   }
 
   /** Network-order (big-endian) reads: unsigned int16, int32, int64. */
@@ -453,111 +241,51 @@ object MiniPgWire {
     l
   }
 
-  // Cell decoders both DataRow walks share ([[ColumnStore]] and
-  // MiniPgScan's `Cells`). A binary decoder reads by its type's width,
-  // so it first checks that the cell is that wide: past the cell lie
-  // the next cell's bytes, or stale ones of an earlier row.
+  // Text cell decoders both DataRow walks share ([[ColumnStore]] and
+  // MiniPgScan's `Cells`). PostgreSQL renders each type one way, so a
+  // cell these cannot read is a broken stream, not a value.
 
-  /** PG epoch (2000-01-01) as a Unix epoch-day / epoch-second. */
-  val PgEpochDay = 10957L
-  val PgEpochSec = 946684800L
+  /** A text cell the decoder for `what` cannot read. */
+  private def badCell(what: String, p: Array[Byte], off: Int, len: Int): SQLException =
+    malformed(s"$what cell '${new String(p, off, len, UTF_8)}'")
 
-  /** Throws unless a binary cell of `len` bytes is the `width` its value takes. */
-  private def fixed(len: Int, width: Int): Unit =
-    if (len != width) throw malformed(s"binary cell of $len bytes for a $width-byte value")
-
-  /** Binary int2/int4/int8, by the column's `oid` (21/23/20). */
-  def binaryIntegral(oid: Int, p: Array[Byte], off: Int, len: Int): Long = oid match {
-    case 21 => fixed(len, 2); be16(p, off).toShort.toLong
-    case 23 => fixed(len, 4); be32(p, off).toLong
-    case _ => fixed(len, 8); be64(p, off)
-  }
-  def binaryFloat4(p: Array[Byte], off: Int, len: Int): Float = {
-    fixed(len, 4); java.lang.Float.intBitsToFloat(be32(p, off))
-  }
-  def binaryFloat8(p: Array[Byte], off: Int, len: Int): Double = {
-    fixed(len, 8); java.lang.Double.longBitsToDouble(be64(p, off))
-  }
-  def binaryBool(p: Array[Byte], off: Int, len: Int): Boolean = { fixed(len, 1); p(off) == 1 }
-  /** Binary date → epoch day (the ±infinity sentinels shifted alike). */
-  def binaryDate(p: Array[Byte], off: Int, len: Int): Long = {
-    fixed(len, 4); be32(p, off) + PgEpochDay
-  }
-  /** Binary timestamp/timestamptz: µs since the PG epoch, raw. */
-  def binaryMicros(p: Array[Byte], off: Int, len: Int): Long = { fixed(len, 8); be64(p, off) }
-
-  /** Binary `numeric` → BigDecimal (NaN/±Infinity → their text
-    * forms, matching PG's text render so the text/binary paths
-    * agree): ndigits base-10000 groups, a group-aligned weight and
-    * a display scale. The unscaled integer is the digit groups read
-    * as one base-10000 number shifted to the dscale grid — exact by
-    * construction (value × 10^dscale is integral whenever dscale
-    * covers the fractional groups, which PG guarantees).
+  /** Text int2/int4/int8: `[-]digits` within Long's range, parsed
+    * without a String. Digits accumulate negatively, as in
+    * `Long.parseLong`, so Long.MinValue reads too.
     */
-  def decodeNumericBinary(p: Array[Byte], off: Int, len: Int): AnyRef = {
-    if (len < 8) fixed(len, 8)
-    val ndigits = be16(p, off)
-    fixed(len, 8 + 2 * ndigits)
-    val weight = be16(p, off + 2).toShort.toInt
-    val sign = be16(p, off + 4)
-    val dscale = be16(p, off + 6)
-    sign match {
-      case 0xC000 => "NaN"
-      case 0xD000 => "Infinity"
-      case 0xF000 => "-Infinity"
-      case _ =>
-        val neg = sign == 0x4000
-        if (ndigits == 0)
-          java.math.BigDecimal.ZERO.setScale(dscale)
-        else {
-          // Digit groups as one base-10000 integer…
-          var acc = java.math.BigInteger.ZERO
-          val tenK = java.math.BigInteger.valueOf(10000L)
-          var i = 0
-          var accL = 0L
-          val fitsLong = ndigits <= 4
-          while (i < ndigits) {
-            val d = be16(p, off + 8 + 2 * i)
-            if (fitsLong) accL = accL * 10000 + d
-            else acc = acc.multiply(tenK)
-              .add(java.math.BigInteger.valueOf(d.toLong))
-            i += 1
-          }
-          if (fitsLong) acc = java.math.BigInteger.valueOf(accL)
-          // …aligned: the last group sits at 10^(4·(weight−ndigits+1)).
-          val exp10 = 4 * (weight - ndigits + 1)
-          val bd = new java.math.BigDecimal(acc, -exp10)
-          val scaled = bd.setScale(dscale)
-          if (neg) scaled.negate() else scaled
-        }
-    }
-  }
-
-  /** Binary `uuid` (16 bytes) → the canonical lowercase-hex render
-    * PG's text format uses.
-    */
-  def decodeUuidBinary(p: Array[Byte], off: Int, len: Int): String = {
-    fixed(len, 16)
-    new java.util.UUID(be64(p, off), be64(p, off + 8)).toString
-  }
-
-  /** Text int2/int4/int8: `[-]digits`, parsed without a String. */
   def parseLongCell(p: Array[Byte], off: Int, len: Int): Long = {
-    var v = 0L
-    var i = off
     val end = off + len
-    var neg = false
-    if (p(i) == '-') { neg = true; i += 1 }
-    while (i < end) { v = v * 10 + (p(i) - '0'); i += 1 }
-    if (neg) -v else v
+    val neg = len > 0 && p(off) == '-'
+    var i = if (neg) off + 1 else off
+    if (i >= end) throw badCell("integer", p, off, len)
+    val limit = if (neg) Long.MinValue else -Long.MaxValue
+    val multmin = limit / 10
+    var v = 0L
+    while (i < end) {
+      val d = p(i) - '0'
+      if (d < 0 || d > 9 || v < multmin) throw badCell("integer", p, off, len)
+      v *= 10
+      if (v < limit + d) throw badCell("integer", p, off, len)
+      v -= d
+      i += 1
+    }
+    if (neg) v else -v
   }
+
+  /** Text bool: `t` or `f`. */
+  def parseBoolCell(p: Array[Byte], off: Int, len: Int): Boolean =
+    if (len == 1 && p(off) == 't') true
+    else if (len == 1 && p(off) == 'f') false
+    else throw badCell("bool", p, off, len)
 
   /** Exact no-allocation parse of the common float render
     * `[-]ddd[.ddd]`: with ≤ 15 significant digits the mantissa is
     * exact in a long and one division by an exact power of ten is
     * correctly rounded — bit-identical to parseDouble. Exponents,
     * specials (NaN/Infinity) and longer digit strings take the
-    * String + parseDouble fallback (exactness over speed).
+    * String + parseDouble fallback (exactness over speed), which sees
+    * only PostgreSQL's float characters: parseDouble alone would also
+    * take spaces, hex and `d`/`f` suffixes.
     */
   def parseDoubleCell(payload: Array[Byte], off: Int,
       len: Int): Double = {
@@ -581,8 +309,15 @@ object MiniPgWire {
     if (simple && digits > 0 && digits <= 15) {
       val d0 = if (frac <= 0) m.toDouble else m / Pow10(frac)
       if (neg) -d0 else d0
-    } else java.lang.Double.parseDouble(
-      new String(payload, off, len, StandardCharsets.US_ASCII))
+    } else {
+      val s = new String(payload, off, len, StandardCharsets.US_ASCII)
+      if (s == "NaN" || s == "Infinity" || s == "-Infinity") java.lang.Double.parseDouble(s)
+      else if (s.isEmpty || !s.forall(c => (c >= '0' && c <= '9') || "+-.eE".indexOf(c) >= 0))
+        throw badCell("float", payload, off, len)
+      else
+        try java.lang.Double.parseDouble(s)
+        catch { case _: NumberFormatException => throw badCell("float", payload, off, len) }
+    }
   }
 
   /** One result of a simple query: columns (empty for command-only
@@ -644,22 +379,43 @@ object MiniPgWire {
       !rest.startsWith(".") || rest.drop(1).takeWhile(_.isDigit).forall(_ == '0')
     }
 
-  def parseTimestamptz(s: String): java.sql.Timestamp = {
-    if (endOfDay(s)) return java.sql.Timestamp.from(
-      parseTimestamptz(s.patch(11, "00", 2)).toInstant.plus(1, java.time.temporal.ChronoUnit.DAYS))
-    val t = java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME
-    val norm = s.replace(' ', 'T') + (if (s.contains("+") || s.drop(11).contains("-")) "" else "Z")
-    // Normalize bare '+00' / '+05' offsets to '+00:00' for ISO parse.
-    val fixed = norm.replaceAll("([+-]\\d{2})$", "$1:00")
-    java.sql.Timestamp.from(OffsetDateTime.parse(fixed, t).toInstant)
+  /** The year of a PostgreSQL date or timestamp render `s` that
+    * java.time's four-digit parsers cannot take — one past 9999, or one
+    * before 1 AD, rendered `yyyy-MM-dd… BC` — as its ISO year and `s`
+    * with year 2000 and no era; None for any other render. 2000 is a
+    * leap year, so a Feb 29 stays valid until the true year is set.
+    */
+  private def pgYear(s: String): Option[(Int, String)] = {
+    val bc = s.endsWith(" BC")
+    val dash = s.indexOf('-')
+    if (dash < 4 || (dash == 4 && !bc)) None
+    else {
+      val y = s.substring(0, dash).toInt
+      Some((if (bc) 1 - y else y, "2000" + s.substring(dash, s.length - (if (bc) 3 else 0))))
+    }
+  }
+
+  def parseTimestamptz(s: String): java.sql.Timestamp =
+    java.sql.Timestamp.from(offsetDateTime(s).toInstant)
+
+  private def offsetDateTime(s: String): OffsetDateTime = {
+    if (endOfDay(s)) return offsetDateTime(s.patch(11, "00", 2)).plusDays(1)
+    pgYear(s) match {
+      case Some((y, s2000)) => offsetDateTime(s2000).withYear(y)
+      case None =>
+        val norm = s.replace(' ', 'T') + (if (s.contains("+") || s.drop(11).contains("-")) "" else "Z")
+        // Normalize bare '+00' / '+05' offsets to '+00:00' for ISO parse.
+        val fixed = norm.replaceAll("([+-]\\d{2})$", "$1:00")
+        OffsetDateTime.parse(fixed, java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
+    }
   }
 
   /** Fast manual parse of PG's standard render
     * `yyyy-MM-dd HH:mm:ss[.f{1,6}]` (the shape every row of a bulk
     * read carries — a DateTimeFormatter here costs ~1 µs/cell, which
-    * alone put the 600k-row probe ~0.5 s over budget); anything else
-    * (BC era, special values) falls back to the lenient formatter.
-    * `24:00:00` reads as the next day's midnight.
+    * alone put the 600k-row probe ~0.5 s over budget); a BC or
+    * five-digit year takes [[pgYear]], anything else the lenient
+    * formatter. `24:00:00` reads as the next day's midnight.
     */
   def parseTimestampNtz(s: String): LocalDateTime = {
     if (endOfDay(s)) return parseTimestampNtz(s.patch(11, "00", 2)).plusDays(1)
@@ -689,10 +445,15 @@ object MiniPgWire {
       }
       if (ok) return LocalDateTime.of(y, mo, dd, h, mi, se, nano)
     }
-    LocalDateTime.parse(s, TsFmt)
+    pgYear(s) match {
+      case Some((y, s2000)) => parseTimestampNtz(s2000).withYear(y)
+      case None => LocalDateTime.parse(s, TsFmt)
+    }
   }
 
-  /** Fast `yyyy-MM-dd` parse with ISO fallback (same rationale). */
+  /** Fast `yyyy-MM-dd` parse with [[pgYear]] and ISO fallbacks (same
+    * rationale).
+    */
   def parseDateFast(s: String): LocalDate = {
     if (s.length == 10 && s.charAt(4) == '-' && s.charAt(7) == '-') {
       var ok = true
@@ -706,7 +467,10 @@ object MiniPgWire {
       val dd = d(8) * 10 + d(9)
       if (ok) return LocalDate.of(y, mo, dd)
     }
-    LocalDate.parse(s)
+    pgYear(s) match {
+      case Some((y, s2000)) => parseDateFast(s2000).withYear(y)
+      case None => LocalDate.parse(s)
+    }
   }
 
   def parseByteaHex(s: String): Array[Byte] = {
@@ -729,103 +493,6 @@ object MiniPgWire {
 
   /** Default blocking-read bound (seconds) — see the class doc. */
   val DefaultSocketTimeoutSec = 300
-
-  /** OIDs requested in BINARY result format on the extended-protocol
-    * read path (everything else stays text, chosen per column in the
-    * Bind message): the types whose binary decode is (a) cheaper than
-    * text parse and (b) value-identical to it through the typed
-    * getters Spark calls. Notably ABSENT: time/timetz/interval/json/
-    * jsonb (text decode is already the contract the dialect parities
-    * pin) and float-adjacent types where only the getter-level value
-    * is pinned (float4 IS here — getFloat is bit-identical either
-    * way; see the parity spec).
-    */
-  val BinaryOids: Set[Int] =
-    Set(16, 17, 20, 21, 23, 700, 701, 1082, 1114, 1184, 1700, 2950)
-
-  /** True when `sql` is PROVABLY a single statement (no top-level
-    * ';' except a trailing one) — the extended protocol rejects
-    * multi-statement strings, so those take the simple-query path.
-    * The scanner understands all four PG lexical forms that can hide
-    * a ';': standard `''`-escaped literals, `E''` literals with
-    * backslash escapes, `$tag$…$tag$` dollar quotes, and `--`/nested
-    * `/* */` comments (r17 ADVICE: the old form tracked only plain
-    * quotes, and a backslash-escaped quote INVERTED its in-string
-    * state, mis-routing a real multi-statement string to Parse).
-    * Anything unterminated/ambiguous returns false — the safe
-    * direction, since the simple-query path executes every statement
-    * form.
-    */
-  def singleStatement(sql: String): Boolean = {
-    val n = sql.length
-    var i = 0
-    var semi = -1
-    while (i < n) {
-      val ch = sql.charAt(i)
-      if (ch == '\'') {
-        // E'…' iff the quote is preceded by a lone E/e (not part of
-        // an identifier like TABLE_E).
-        val eStyle = i > 0 &&
-          (sql.charAt(i - 1) == 'E' || sql.charAt(i - 1) == 'e') &&
-          (i < 2 || !(Character.isLetterOrDigit(sql.charAt(i - 2)) ||
-            sql.charAt(i - 2) == '_'))
-        i += 1
-        var closed = false
-        while (i < n && !closed) {
-          val c = sql.charAt(i)
-          if (eStyle && c == '\\') i += 2
-          else if (c == '\'') {
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-            else { closed = true; i += 1 }
-          } else i += 1
-        }
-        if (!closed) return false
-      } else if (ch == '"') {
-        i += 1
-        var closed = false
-        while (i < n && !closed) {
-          if (sql.charAt(i) == '"') {
-            if (i + 1 < n && sql.charAt(i + 1) == '"') i += 2
-            else { closed = true; i += 1 }
-          } else i += 1
-        }
-        if (!closed) return false
-      } else if (ch == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        while (i < n && sql.charAt(i) != '\n') i += 1
-      } else if (ch == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        var depth = 1
-        i += 2
-        while (i < n && depth > 0) {
-          if (sql.charAt(i) == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-            depth += 1; i += 2
-          } else if (sql.charAt(i) == '*' && i + 1 < n &&
-              sql.charAt(i + 1) == '/') {
-            depth -= 1; i += 2
-          } else i += 1
-        }
-        if (depth > 0) return false
-      } else if (ch == '$') {
-        // $tag$ opener: tag is empty or [A-Za-z_][A-Za-z0-9_]* (a
-        // digit-first "$1$" is a parameter ref followed by '$', not
-        // a quote). Unclosed tag → not provably single.
-        var j = i + 1
-        while (j < n && (sql.charAt(j) == '_' ||
-            Character.isLetterOrDigit(sql.charAt(j)))) j += 1
-        val validTag = j < n && sql.charAt(j) == '$' &&
-          (j == i + 1 || !Character.isDigit(sql.charAt(i + 1)))
-        if (validTag) {
-          val tag = sql.substring(i, j + 1)
-          val end = sql.indexOf(tag, j + 1)
-          if (end < 0) return false
-          i = end + tag.length
-        } else i += 1
-      } else {
-        if (ch == ';') semi = i
-        i += 1
-      }
-    }
-    semi < 0 || sql.substring(semi + 1).forall(_.isWhitespace)
-  }
 }
 
 /** One live wire session (socket + startup + simple queries).
@@ -834,7 +501,9 @@ object MiniPgWire {
   * seconds unit; 0 disables) bounds every blocking read — without it
   * a stalled server parks a Spark task forever with no cancel path
   * (r16 ADVICE). The default is generous: this is a hang breaker,
-  * not a statement timeout.
+  * not a statement timeout. `binaryTransfer` (URL param of the same
+  * name) is the transfer format [[MiniPgScan]] asks for on this wire;
+  * the wire's own reads are text.
   */
 final class MiniPgWire(host: String, port: Int, database: String,
     user: String, password: Option[String],
@@ -855,31 +524,6 @@ final class MiniPgWire(host: String, port: Int, database: String,
   private var buf = new Array[Byte](1 << 12)
   private var bufLen = 0
   @volatile private var read = 0L
-
-  /** The server's session TimeZone, tracked from ParameterStatus
-    * messages (TimeZone is GUC_REPORT: the server announces it at
-    * startup and after every SET that changes it). Used to re-render
-    * binary `timestamptz` instants in the text form PG itself would
-    * have sent.
-    */
-  @volatile private var serverZone: java.time.ZoneId = ZoneOffset.UTC
-  def zone: java.time.ZoneId = serverZone
-
-  /** ParameterStatus payload: cstring name + cstring value. */
-  private def onParameterStatus(payload: Array[Byte]): Unit = {
-    val nameEnd = payload.indexOf(0.toByte)
-    if (nameEnd > 0) {
-      val name = new String(payload, 0, nameEnd, UTF_8)
-      if (name == "TimeZone") {
-        val valEnd = payload.indexOf(0.toByte, nameEnd + 1)
-        val v = new String(payload, nameEnd + 1,
-          (if (valEnd < 0) payload.length else valEnd) - nameEnd - 1, UTF_8)
-        serverZone =
-          try java.time.ZoneId.of(v, java.time.ZoneId.SHORT_IDS)
-          catch { case _: Exception => ZoneOffset.UTC }
-      }
-    }
-  }
 
   // A failed startup must not leak the socket it opened.
   try startup()
@@ -979,8 +623,7 @@ final class MiniPgWire(host: String, port: Int, database: String,
       } else {
         def payload = java.util.Arrays.copyOf(buf, bufLen)
         tpe match {
-          case 'S' => onParameterStatus(payload)
-          case 'N' | 'A' => () // Notice / NotificationResponse
+          case 'S' | 'N' | 'A' => () // ParameterStatus / Notice / NotificationResponse
           case 'Z' if failure != null || stop.indexOf('Z') >= 0 => done = true
           case _ if failure != null => () // draining to ReadyForQuery
           case _ if on.isDefinedAt((tpe, null)) =>
@@ -1109,18 +752,9 @@ final class MiniPgWire(host: String, port: Int, database: String,
   private def i16bytes(v: Int): Array[Byte] =
     Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
 
-  /** Run ONE statement over the EXTENDED protocol with per-column
-    * result formats — BINARY for [[MiniPgWire.BinaryOids]], text for
-    * everything else. Two phases on the wire: Parse+Describe+Flush
-    * learns the result shape (OIDs) so the Bind that follows can
-    * request binary only where the decode is implemented and
-    * value-identical; Bind+Execute+Sync then streams DataRows
-    * straight into the typed [[ColumnStore]]. This is the r17 wire
-    * fast path: binary int/float/date/timestamp/numeric cells skip
-    * text entirely (an int8 is 8 bytes + one shift-or instead of up
-    * to 20 ASCII digits through a parse loop), which is how the
-    * reference's native client reads too (rust-postgres requests
-    * binary format for typed reads).
+  /** Run ONE statement over the EXTENDED protocol, every result
+    * column in text: Parse+Describe+Flush learns the result shape, then
+    * Bind+Execute+Sync streams the DataRows into a [[ColumnStore]].
     */
   def queryExtended(sql: String): Seq[Result] = synchronized {
     if (!open) throw new SQLException("connection is closed")
@@ -1134,11 +768,9 @@ final class MiniPgWire(host: String, port: Int, database: String,
       case ('T', p) => cols = parseRowDescription(p)
       case ('n', _) => () // NoData (command-only statement)
     }
-    // Phase 2: Bind with per-column result formats, Execute, Sync.
-    val formats: Array[Byte] =
-      cols.map(c => if (BinaryOids(c.oid)) 1.toByte else 0.toByte)
-    bindExecuteSync(formats)
-    val store = new ColumnStore(cols, formats, serverZone)
+    // Phase 2: Bind with no result formats (all text), Execute, Sync.
+    bindExecuteSync(Array.empty)
+    val store = new ColumnStore(cols)
     var tag = "SELECT"
     pump("execute", rows = store) {
       case ('2', _) => () // BindComplete

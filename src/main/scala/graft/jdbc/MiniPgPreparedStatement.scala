@@ -125,10 +125,7 @@ final class MiniPgPreparedStatement(wire: MiniPgWire, conn: Connection,
   }
 
   private def runQuery(q: String): java.sql.ResultSet = {
-    val res =
-      if (wire.binaryTransfer && MiniPgWire.singleStatement(q))
-        wire.queryExtended(q)
-      else wire.query(q)
+    val res = wire.query(q)
     val withRows = res.find(_.cols.nonEmpty).getOrElse(res.last)
     lastResult = Some(withRows)
     new MiniPgResultSet(withRows)

@@ -5,18 +5,15 @@ import java.time.{LocalDate, LocalDateTime}
 
 import MiniPgWire.{Col, ColumnStore, parseByteaHex, parseDateFast, parseTimestampNtz, parseTimestamptz}
 
-/** Concrete (non-reflective) ResultSet over a [[MiniPgWire.ColumnStore]]
-  * — the wire read's hot path. The r16 probe put the proxy-served
-  * ResultSet ~4-5x off the reference's native-client headline; the
-  * per-CELL costs were (a) a reflective Proxy invoke + tuple +
-  * PartialFunction double-dispatch per getter call and (b) a String
-  * allocation per cell at message-decode time even for int/float
-  * columns. This class serves getters as plain virtual calls over
-  * per-column TYPED vectors the wire layer decoded once by OID (the
-  * reference's own row->columnar dispatch shape, lib.rs:197-389, here
-  * as text->primitive column decode). Everything Spark's JDBC source
-  * does not call throws the same NAMED SQLFeatureNotSupportedException
-  * contract as the proxy faces.
+/** Concrete (non-reflective) ResultSet over a [[MiniPgWire.ColumnStore]].
+  * Spark's JDBC reader calls a getter per cell, so the getters are
+  * plain virtual calls over per-column typed vectors the wire layer
+  * decoded once by OID, with no reflective dispatch and no per-cell
+  * String for int, float and bool columns. Every cell arrives in text,
+  * so this decode shares nothing with [[MiniPgScan]]'s binary one and
+  * can check it. Everything Spark's JDBC source does not call throws
+  * the same NAMED SQLFeatureNotSupportedException contract as the
+  * proxy faces.
   */
 final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
   private[this] val store: ColumnStore = res.data
@@ -43,8 +40,6 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
     if (isNull(i)) 0.0 else store.kindDouble(i - 1)(cursor)
   private def strAt(i: Int): String =
     if (isNull(i)) null else store.text(i - 1, cursor)
-  private def objAt(i: Int): AnyRef =
-    if (isNull(i)) null else store.kindObj(i - 1)(cursor)
 
   override def next(): Boolean = { cursor += 1; cursor < nRows }
   override def close(): Unit = closed = true
@@ -67,11 +62,6 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
   override def getLong(i: Int): Long = store.kind(i - 1) match {
     case ColumnStore.KindLong | ColumnStore.KindBool => longAt(i)
     case ColumnStore.KindDouble => dblAt(i).toLong
-    case ColumnStore.KindDecimal => objAt(i) match {
-      case null => 0L
-      case bd: java.math.BigDecimal => bd.longValueExact()
-      case s => s.asInstanceOf[String].toLong
-    }
     case _ => val v = strAt(i); if (v == null) 0L else v.toLong
   }
   override def getLong(l: String): Long = getLong(findColumn(l))
@@ -84,13 +74,6 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
   override def getDouble(i: Int): Double = store.kind(i - 1) match {
     case ColumnStore.KindDouble => dblAt(i)
     case ColumnStore.KindLong | ColumnStore.KindBool => longAt(i).toDouble
-    case ColumnStore.KindDecimal => objAt(i) match {
-      case null => 0.0
-      // OpenJDK BigDecimal.doubleValue is correctly rounded, so this
-      // equals the text path's parseDouble of the same decimal.
-      case bd: java.math.BigDecimal => bd.doubleValue
-      case s => s.asInstanceOf[String].toDouble
-    }
     case _ => val v = strAt(i); if (v == null) 0.0 else v.toDouble
   }
   override def getDouble(l: String): Double = getDouble(findColumn(l))
@@ -101,40 +84,25 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
     case _ => val v = strAt(i); v == "t" || v == "true"
   }
   override def getBoolean(l: String): Boolean = getBoolean(findColumn(l))
-  override def getBigDecimal(i: Int): java.math.BigDecimal =
-    if (store.kind(i - 1) == ColumnStore.KindDecimal) objAt(i) match {
-      case null => null
-      case bd: java.math.BigDecimal => bd
-      case s => new java.math.BigDecimal(s.asInstanceOf[String]) // throws on NaN, like the text path
-    } else {
-      val v = strAt(i)
-      if (v == null) null else new java.math.BigDecimal(v)
-    }
+  override def getBigDecimal(i: Int): java.math.BigDecimal = {
+    val v = strAt(i)
+    if (v == null) null else new java.math.BigDecimal(v) // throws on NaN
+  }
   override def getBigDecimal(l: String): java.math.BigDecimal =
     getBigDecimal(findColumn(l))
-  override def getBytes(i: Int): Array[Byte] =
-    if (store.kind(i - 1) == ColumnStore.KindBytes) objAt(i) match {
-      case null => null
-      case b => b.asInstanceOf[Array[Byte]].clone()
-    } else {
-      val v = strAt(i)
-      if (v == null) null else parseByteaHex(v)
-    }
+  override def getBytes(i: Int): Array[Byte] = {
+    val v = strAt(i)
+    if (v == null) null else parseByteaHex(v)
+  }
   override def getBytes(l: String): Array[Byte] = getBytes(findColumn(l))
-  override def getDate(i: Int): java.sql.Date =
-    if (store.kind(i - 1) == ColumnStore.KindDate) {
-      if (isNull(i)) null else MiniPgResultSet.dateOf(longAt(i))
-    } else {
-      val v = strAt(i)
-      if (v == null) null else MiniPgResultSet.dateOf(v)
-    }
+  override def getDate(i: Int): java.sql.Date = {
+    val v = strAt(i)
+    if (v == null) null else MiniPgResultSet.dateOf(v)
+  }
   override def getDate(l: String): java.sql.Date = getDate(findColumn(l))
-  override def getTimestamp(i: Int): java.sql.Timestamp = store.kind(i - 1) match {
-    case ColumnStore.KindTs | ColumnStore.KindTstz =>
-      if (isNull(i)) null else MiniPgResultSet.timestampOf(col(i).oid, longAt(i))
-    case _ =>
-      val v = strAt(i)
-      if (v == null) null else MiniPgResultSet.timestampOf(col(i).oid, v)
+  override def getTimestamp(i: Int): java.sql.Timestamp = {
+    val v = strAt(i)
+    if (v == null) null else MiniPgResultSet.timestampOf(col(i).oid, v)
   }
   override def getTimestamp(l: String): java.sql.Timestamp =
     getTimestamp(findColumn(l))
@@ -144,20 +112,12 @@ final class MiniPgResultSet(res: MiniPgWire.Result) extends java.sql.ResultSet {
   }
   override def getTime(l: String): java.sql.Time = getTime(findColumn(l))
   override def getObject[T](i: Int, cls: Class[T]): T = {
-    val k = store.kind(i - 1)
+    val v = strAt(i)
     val out: AnyRef =
-      if (k == ColumnStore.KindTs && cls == classOf[LocalDateTime]) {
-        if (isNull(i)) null
-        else ColumnStore.microsToLocalDateTime(longAt(i))
-      } else if (k == ColumnStore.KindDate && cls == classOf[LocalDate]) {
-        if (isNull(i)) null else LocalDate.ofEpochDay(longAt(i))
-      } else {
-        val v = strAt(i)
-        if (v == null) null
-        else if (cls == classOf[LocalDateTime]) parseTimestampNtz(v)
-        else if (cls == classOf[LocalDate]) parseDateFast(v)
-        else nope(s"getObject(${cls.getName})")
-      }
+      if (v == null) null
+      else if (cls == classOf[LocalDateTime]) parseTimestampNtz(v)
+      else if (cls == classOf[LocalDate]) parseDateFast(v)
+      else nope(s"getObject(${cls.getName})")
     out.asInstanceOf[T]
   }
   override def getObject[T](l: String, cls: Class[T]): T =
@@ -335,33 +295,11 @@ object MiniPgResultSet {
   def describing(cols: Array[Col]): MiniPgResultSet =
     new MiniPgResultSet(MiniPgWire.Result(cols, new ColumnStore(cols), "SELECT"))
 
-  // The values a cell reads as through the getters; MiniPgScan's
+  // The values a text cell reads as through the getters; MiniPgScan's
   // decoders call the same functions where they take the getter's value.
-
-  /** A binary date cell (epoch day); PG's ±infinity map to pgjdbc's
-    * convention, a Date at Long.MAX/MIN ms.
-    */
-  def dateOf(epochDay: Long): java.sql.Date = epochDay match {
-    case ColumnStore.DatePosInfinity => new java.sql.Date(Long.MaxValue)
-    case ColumnStore.DateNegInfinity => new java.sql.Date(Long.MinValue)
-    case d => java.sql.Date.valueOf(LocalDate.ofEpochDay(d))
-  }
 
   /** A text date cell. */
   def dateOf(text: String): java.sql.Date = java.sql.Date.valueOf(parseDateFast(text))
-
-  /** A binary timestamp (`oid` 1114: wall-clock µs, read back with the
-    * text path's Timestamp.valueOf semantics in the JVM zone) or
-    * timestamptz (1184: an instant) cell; PG's ±infinity map to
-    * pgjdbc's convention, a Timestamp at Long.MAX/MIN ms.
-    */
-  def timestampOf(oid: Int, us: Long): java.sql.Timestamp = us match {
-    case ColumnStore.TsPosInfinity => new java.sql.Timestamp(Long.MaxValue)
-    case ColumnStore.TsNegInfinity => new java.sql.Timestamp(Long.MinValue)
-    case _ if oid == 1114 =>
-      java.sql.Timestamp.valueOf(ColumnStore.microsToLocalDateTime(us))
-    case _ => ColumnStore.microsToTimestamptz(us)
-  }
 
   /** A text timestamptz, time, timetz or (any other `oid`) timestamp
     * cell. Time and timetz follow pgjdbc's convention, a timestamp on

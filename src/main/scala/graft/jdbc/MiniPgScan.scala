@@ -208,17 +208,160 @@ final class MiniPgPartitionReader(wire: MiniPgWire, stmt: String,
   }
 }
 
-/** Per-column decoders from wire cells to column vectors. */
+/** Per-column decoders from wire cells to column vectors, and the
+  * binary cell decoders only they use. A binary decoder reads by its
+  * type's width, so it first checks that the cell is that wide: past
+  * the cell lie the next cell's bytes, or stale ones of an earlier row.
+  */
 private[jdbc] object Cells {
   import MiniPgWire._
-  import MiniPgResultSet.{dateOf, timeOf, timestampOf}
 
   abstract class Cell(val format: Byte) {
     /** Writes non-null cell `p(off until off + len)` to row `r` of `v`. */
     def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit
   }
 
+  /** OIDs the scan reads in BINARY result format when the wire's
+    * `binaryTransfer` is on (everything else stays text, chosen per
+    * column in the Bind message): the types whose binary decode is
+    * cheaper than the text parse and reads as the same value through
+    * Spark's JDBC getters. Absent: time/timetz/interval/json/jsonb,
+    * whose text is already the contract the dialect parities pin.
+    */
+  val BinaryOids: Set[Int] =
+    Set(16, 17, 20, 21, 23, 700, 701, 1082, 1114, 1184, 1700, 2950)
+
+  /** PG epoch (2000-01-01) as a Unix epoch-day / epoch-second. */
+  val PgEpochDay = 10957L
+  val PgEpochSec = 946684800L
   private val PgEpochMicros = PgEpochSec * 1000000L
+
+  /** PG's binary ±infinity timestamp sentinels (Long.MAX/MIN µs). */
+  val TsPosInfinity: Long = Long.MaxValue
+  val TsNegInfinity: Long = Long.MinValue
+  /** Binary ±infinity date sentinels (Int.MAX/MIN days), shifted to
+    * epoch days like every other date cell.
+    */
+  val DatePosInfinity: Long = Int.MaxValue.toLong + PgEpochDay
+  val DateNegInfinity: Long = Int.MinValue.toLong + PgEpochDay
+
+  /** Throws unless a binary cell of `len` bytes is the `width` its value takes. */
+  private def fixed(len: Int, width: Int): Unit =
+    if (len != width) throw malformed(s"binary cell of $len bytes for a $width-byte value")
+
+  /** Binary int2/int4/int8, by the column's `oid` (21/23/20). */
+  def binaryIntegral(oid: Int, p: Array[Byte], off: Int, len: Int): Long = oid match {
+    case 21 => fixed(len, 2); be16(p, off).toShort.toLong
+    case 23 => fixed(len, 4); be32(p, off).toLong
+    case _ => fixed(len, 8); be64(p, off)
+  }
+  def binaryFloat4(p: Array[Byte], off: Int, len: Int): Float = {
+    fixed(len, 4); java.lang.Float.intBitsToFloat(be32(p, off))
+  }
+  def binaryFloat8(p: Array[Byte], off: Int, len: Int): Double = {
+    fixed(len, 8); java.lang.Double.longBitsToDouble(be64(p, off))
+  }
+  def binaryBool(p: Array[Byte], off: Int, len: Int): Boolean = { fixed(len, 1); p(off) == 1 }
+  /** Binary date → epoch day (the ±infinity sentinels shifted alike). */
+  def binaryDate(p: Array[Byte], off: Int, len: Int): Long = {
+    fixed(len, 4); be32(p, off) + PgEpochDay
+  }
+  /** Binary timestamp/timestamptz: µs since the PG epoch, raw. */
+  def binaryMicros(p: Array[Byte], off: Int, len: Int): Long = { fixed(len, 8); be64(p, off) }
+
+  /** Binary `numeric` → BigDecimal (NaN/±Infinity → their text
+    * forms, which the text path reads): ndigits base-10000 groups, a
+    * group-aligned weight and a display scale. The unscaled integer is
+    * the digit groups read as one base-10000 number shifted to the
+    * dscale grid — exact by construction (value × 10^dscale is
+    * integral whenever dscale covers the fractional groups, which PG
+    * guarantees).
+    */
+  def decodeNumericBinary(p: Array[Byte], off: Int, len: Int): AnyRef = {
+    if (len < 8) fixed(len, 8)
+    val ndigits = be16(p, off)
+    fixed(len, 8 + 2 * ndigits)
+    val weight = be16(p, off + 2).toShort.toInt
+    val sign = be16(p, off + 4)
+    val dscale = be16(p, off + 6)
+    sign match {
+      case 0xC000 => "NaN"
+      case 0xD000 => "Infinity"
+      case 0xF000 => "-Infinity"
+      case _ =>
+        val neg = sign == 0x4000
+        if (ndigits == 0)
+          java.math.BigDecimal.ZERO.setScale(dscale)
+        else {
+          // Digit groups as one base-10000 integer…
+          var acc = java.math.BigInteger.ZERO
+          val tenK = java.math.BigInteger.valueOf(10000L)
+          var i = 0
+          var accL = 0L
+          val fitsLong = ndigits <= 4
+          while (i < ndigits) {
+            val d = be16(p, off + 8 + 2 * i)
+            if (fitsLong) accL = accL * 10000 + d
+            else acc = acc.multiply(tenK)
+              .add(java.math.BigInteger.valueOf(d.toLong))
+            i += 1
+          }
+          if (fitsLong) acc = java.math.BigInteger.valueOf(accL)
+          // …aligned: the last group sits at 10^(4·(weight−ndigits+1)).
+          val exp10 = 4 * (weight - ndigits + 1)
+          val bd = new java.math.BigDecimal(acc, -exp10)
+          val scaled = bd.setScale(dscale)
+          if (neg) scaled.negate() else scaled
+        }
+    }
+  }
+
+  /** Binary `uuid` (16 bytes) → the canonical lowercase-hex render
+    * PG's text format uses.
+    */
+  def decodeUuidBinary(p: Array[Byte], off: Int, len: Int): String = {
+    fixed(len, 16)
+    new java.util.UUID(be64(p, off), be64(p, off + 8)).toString
+  }
+
+  /** µs since the PG epoch → wall-clock LocalDateTime (the binary
+    * `timestamp` payload; the zone it is read in is the caller's).
+    */
+  def microsToLocalDateTime(us: Long): java.time.LocalDateTime =
+    java.time.LocalDateTime.ofEpochSecond(
+      Math.floorDiv(us, 1000000L) + PgEpochSec,
+      (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+
+  /** µs since the PG epoch (as an instant) → java.sql.Timestamp (the
+    * binary `timestamptz` payload).
+    */
+  def microsToTimestamptz(us: Long): java.sql.Timestamp =
+    java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+      Math.floorDiv(us, 1000000L) + PgEpochSec,
+      Math.floorMod(us, 1000000L) * 1000L))
+
+  /** A binary date cell (epoch day) as the JDBC getter of its text
+    * would read it; PG's ±infinity map to pgjdbc's convention, a Date
+    * at Long.MAX/MIN ms.
+    */
+  def dateOf(epochDay: Long): java.sql.Date = epochDay match {
+    case DatePosInfinity => new java.sql.Date(Long.MaxValue)
+    case DateNegInfinity => new java.sql.Date(Long.MinValue)
+    case d => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d))
+  }
+
+  /** A binary timestamp (`oid` 1114: wall-clock µs, read back with the
+    * text path's Timestamp.valueOf semantics in the JVM zone) or
+    * timestamptz (1184: an instant) cell; PG's ±infinity map to
+    * pgjdbc's convention, a Timestamp at Long.MAX/MIN ms.
+    */
+  def timestampOf(oid: Int, us: Long): java.sql.Timestamp = us match {
+    case TsPosInfinity => new java.sql.Timestamp(Long.MaxValue)
+    case TsNegInfinity => new java.sql.Timestamp(Long.MinValue)
+    case _ if oid == 1114 => java.sql.Timestamp.valueOf(microsToLocalDateTime(us))
+    case _ => microsToTimestamptz(us)
+  }
+
   /** Epoch days in which a date or timestamp reads through JDBC as its
     * own value: after the Julian→Gregorian rebase window and inside the
     * range JDBC's conversions hold. Outside it a cell takes the getter's
@@ -255,15 +398,15 @@ private[jdbc] object Cells {
 
   /** The decoder for `f` from `col`, or None when there is none (the
     * statement then belongs to Spark's JDBC reader). Each decoder yields
-    * the value Spark's JDBC getter gives for the same cell through
-    * [[MiniPgResultSet]]: a date or time cell takes the helper that
-    * getter calls and the dialect's conversion, which a binary cell
-    * skips where it is the identity (JDBC's default conversions, a date
-    * in the plain range and, for a wall-clock timestamp, a UTC JVM).
+    * the value Spark's JDBC getter gives for the text of the same value
+    * through [[MiniPgResultSet]]: a date or time cell takes the helper
+    * that getter calls (or, in binary, its epoch-day/µs twin above) and
+    * the dialect's conversion, which a binary cell skips where it is the
+    * identity (JDBC's default conversions, a date in the plain range
+    * and, for a wall-clock timestamp, a UTC JVM).
     */
   def decoder(f: StructField, col: Col, binaryTransfer: Boolean,
       dialect: JdbcDialect): Option[Cell] = {
-    // The format the JDBC path requests (see queryExtended).
     val bin = binaryTransfer && BinaryOids(col.oid)
     val fmt: Byte = if (bin) 1 else 0
     val times = defaultTimes(dialect)
@@ -276,7 +419,7 @@ private[jdbc] object Cells {
     Option((col.oid, f.dataType) match {
       case (16, BooleanType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-          v.putBoolean(r, if (bin) binaryBool(p, off, len) else p(off) == 't')
+          v.putBoolean(r, if (bin) binaryBool(p, off, len) else parseBoolCell(p, off, len))
       }
       case (20 | 21 | 23, t @ (ByteType | ShortType | IntegerType | LongType)) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit = {
@@ -331,7 +474,7 @@ private[jdbc] object Cells {
       }
       case (1082, DateType) => new Cell(fmt) {
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-          v.putInt(r, if (!bin) jdbcDate(dateOf(text(p, off, len)))
+          v.putInt(r, if (!bin) jdbcDate(MiniPgResultSet.dateOf(text(p, off, len)))
             else {
               val day = binaryDate(p, off, len)
               if (times && plainDay(day)) day.toInt else jdbcDate(dateOf(day))
@@ -343,7 +486,8 @@ private[jdbc] object Cells {
         // an instant read as an instant, otherwise only in a UTC JVM.
         private val same = times && ((col.oid == 1184 && t == TimestampType) || utcJvm)
         def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-          v.putLong(r, if (!bin) jdbcTimestamp(t, timestampOf(col.oid, text(p, off, len)))
+          v.putLong(r,
+            if (!bin) jdbcTimestamp(t, MiniPgResultSet.timestampOf(col.oid, text(p, off, len)))
             else {
               val us = binaryMicros(p, off, len)
               if (same && plainMicros(us)) us + PgEpochMicros
@@ -354,7 +498,8 @@ private[jdbc] object Cells {
       case (1083 | 1266, TimestampType) if f.metadata.contains("logical_time_type") =>
         new Cell(fmt) {
           def put(v: WritableColumnVector, r: Int, p: Array[Byte], off: Int, len: Int): Unit =
-            v.putLong(r, Math.multiplyExact(timeOf(col.oid, text(p, off, len)).getTime, 1000L))
+            v.putLong(r, Math.multiplyExact(
+              MiniPgResultSet.timeOf(col.oid, text(p, off, len)).getTime, 1000L))
         }
       case _ => null
     })

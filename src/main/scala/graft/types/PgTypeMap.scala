@@ -60,8 +60,11 @@ object PgTypeMap {
 
   /** Native-mode override for TIME/TIMETZ: Spark 4.1's `TIME(6)` —
     * the typed equivalent of the reference's `Time64(Microsecond)`
-    * Arrow columns (`src/lib.rs:350-366`). Micro precision matches
-    * the PG wire payload exactly. Resolution requires
+    * Arrow columns (`src/lib.rs:350-366`). The type holds µs, but the
+    * values do not yet: both read paths (MiniPgScan and Spark's JDBC
+    * reader) take a TIME/TIMETZ cell through `ResultSet.getTime`,
+    * which keeps whole milliseconds, so sub-millisecond digits read as
+    * zero (ROADMAP direction 3). Resolution requires
     * `spark.sql.timeType.enabled=true` ([[graft.Flaco.session]] sets
     * it; [[applyParity]] checks and raises a typed error otherwise).
     *

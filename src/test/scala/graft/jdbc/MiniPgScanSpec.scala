@@ -19,8 +19,9 @@ import graft.{Flaco, TestSpark}
 
 /** Offline tests of [[MiniPgScan]]'s partition reader against a
   * scripted server: it streams batch by batch, cleans up on close and
-  * on failure, and every cell reads as Spark's JDBC getters read the
-  * same frames through [[MiniPgResultSet]].
+  * on failure, and every cell reads as Spark's JDBC getters read it
+  * through [[MiniPgResultSet]]: the same text frames, or, for a binary
+  * frame, PostgreSQL's text render of the same values.
   */
 class MiniPgScanSpec extends AnyFunSuite {
   import MiniPgScanSpec._
@@ -138,37 +139,48 @@ class MiniPgScanSpec extends AnyFunSuite {
     }
   }
 
-  /** The same DataRows through the JDBC path (ColumnStore, then Spark's
+  test("a text cell that does not parse fails the reader with 08P01") {
+    badText.foreach { case (oid, cell) =>
+      val server = new ScriptedPgServer(Hello, Seq(streamed(Seq(row(cell)))))
+      val r = reader(server, Seq("x" -> oid), binary = false)
+      try {
+        assert(intercept[SQLException](r.next()).getSQLState === "08P01", s"oid $oid '$cell'")
+        assert(server.clientClosed.await(2, TimeUnit.SECONDS))
+      } finally { r.close(); server.close() }
+    }
+  }
+
+  /** Each row through the JDBC path (`query`: ColumnStore, then Spark's
     * getters) and through the reader: each side's rows, or its failure.
+    * A row is a pair of DataRows, the reader's then the JDBC path's:
+    * for a binary reader, the second is PostgreSQL's text render of the
+    * same values, which the JDBC path parses independently.
     */
-  private def bothWays(spec: Seq[(String, Int)], rows: Seq[Array[Byte]],
+  private def bothWays(spec: Seq[(String, Int)], rows: Seq[(Array[Byte], Array[Byte])],
       binary: Boolean): (Try[Seq[Seq[Any]]], Try[Seq[Seq[Any]]]) = {
     val cols = colsOf(spec)
     val schema = schemaOf(cols)
     val types = schema.fields.map(_.dataType)
     def plain(v: Any): Any = v match {
       case b: Array[Byte] => b.toSeq
-      case d: Double if d.isNaN => "NaN" // NaN != NaN
-      case f: Float if f.isNaN => "NaN"
+      // Distinct renders for -0.0 and 0.0, and NaN equal to itself.
+      case d: Double => java.lang.Double.toString(d)
+      case f: Float => java.lang.Float.toString(f)
       case x => x
     }
     def values(row: org.apache.spark.sql.catalyst.InternalRow) =
       types.indices.map(i => if (row.isNullAt(i)) null else plain(row.get(i, types(i)))).toSeq
-    val desc = rowDescription(spec: _*)
-    val jdbcTurns =
-      if (binary) Seq(Seq(ParseComplete, NoParams, desc),
-        Seq(BindComplete) ++ rows ++ Seq(complete("SELECT"), Ready))
-      else Seq(Seq(desc) ++ rows ++ Seq(complete("SELECT"), Ready))
     val jdbc = Try {
-      val server = new ScriptedPgServer(Hello, jdbcTurns)
-      val wire = new MiniPgWire("localhost", server.port, "db", "u", None, 5, binary)
+      val server = new ScriptedPgServer(Hello,
+        Seq(Seq(rowDescription(spec: _*)) ++ rows.map(_._2) ++ Seq(complete("SELECT"), Ready)))
+      val wire = new MiniPgWire("localhost", server.port, "db", "u", None, 5)
       try {
-        val res = if (binary) wire.queryExtended("q").head else wire.query("q").head
-        GraftSqlBridge.jdbcRows(new MiniPgResultSet(res), dialect, schema).map(values).toList
+        GraftSqlBridge.jdbcRows(new MiniPgResultSet(wire.query("q").head), dialect, schema)
+          .map(values).toList
       } finally { wire.close(); server.close() }
     }
     val columnar = Try {
-      val server = new ScriptedPgServer(Hello, Seq(streamed(rows)))
+      val server = new ScriptedPgServer(Hello, Seq(streamed(rows.map(_._1))))
       val r = reader(server, spec, binary)
       try {
         Iterator.continually(r.next()).takeWhile(identity)
@@ -184,9 +196,9 @@ class MiniPgScanSpec extends AnyFunSuite {
     * are compared across rows, and a failing cell cannot hide the
     * others); returns the indices of the rows that fail on both.
     */
-  private def assertSame(spec: Seq[(String, Int)], rows: Seq[Array[Byte]],
+  private def assertSame(spec: Seq[(String, Int)], rows: Seq[(Array[Byte], Array[Byte])],
       binary: Boolean): Set[Int] = {
-    def same(rs: Seq[Array[Byte]]): Boolean = {
+    def same(rs: Seq[(Array[Byte], Array[Byte])]): Boolean = {
       val (jdbc, columnar) = bothWays(spec, rs, binary)
       assert(jdbc.isSuccess === columnar.isSuccess,
         s"JDBC gave $jdbc, the columnar reader $columnar")
@@ -205,7 +217,7 @@ class MiniPgScanSpec extends AnyFunSuite {
     * midnight, 86 400 000 000 µs on the time-of-day scale (for time, in
     * the JVM zone, as its midnight reads).
     */
-  private def assertEndOfDay(spec: Seq[(String, Int)], rows: Seq[Array[Byte]],
+  private def assertEndOfDay(spec: Seq[(String, Int)], rows: Seq[(Array[Byte], Array[Byte])],
       binary: Boolean): Unit = {
     val day = 86400000000L
     val midnight = MiniPgResultSet.timeOf(1083, "00:00:00").getTime * 1000L
@@ -215,28 +227,63 @@ class MiniPgScanSpec extends AnyFunSuite {
     assert(columnar.get.map(_.takeRight(2)) === want)
   }
 
-  test("every binary kind reads as the JDBC getters read ColumnStore's " +
-    "decode of the same frames, NULLs and range edges included") {
+  test("every binary kind reads as the JDBC getters read PostgreSQL's " +
+    "text render of the same values, NULLs and range edges included") {
     val spec = Seq("i2" -> 21, "i4" -> 23, "i8" -> 20, "f4" -> 700, "f8" -> 701,
       "b" -> 16, "d" -> 1082, "ts" -> 1114, "tz" -> 1184, "n" -> 1700,
       "by" -> 17, "u" -> 2950, "s" -> 25, "t" -> 1083, "tt" -> 1266)
+    val kolkata = micros(LocalDateTime.of(2021, 3, 13, 19, 32, 3, 250000000))
+    /** A binary row and its text render, cell by cell (null = NULL). */
+    def pair(cells: (Array[Byte], String)*): (Array[Byte], Array[Byte]) =
+      (rawRow(cells.map(_._1): _*), row(cells.map(_._2): _*))
+    val nul = (null: Array[Byte], null: String)
+    /** A row of NULLs but for column `c`. */
+    def only(c: String, cell: (Array[Byte], String)): (Array[Byte], Array[Byte]) =
+      pair(spec.map { case (n, _) => if (n == c) cell else nul }: _*)
     def times(t: String, tt: String) =
-      rawRow(Seq.fill(spec.size - 2)(null) ++ Seq(t, tt).map(c => Option(c).map(utf8).orNull): _*)
+      pair(Seq.fill(spec.size - 2)(nul) ++ Seq(t, tt).map(c => (Option(c).map(utf8).orNull, c)): _*)
     val rows = Seq(
-      rawRow(int2(-32768), int4(Int.MinValue), int8(Long.MinValue), float4(0.1f),
-        float8(-2.2250738585072014e-308), Array[Byte](1), int4(days(1999, 12, 31)),
-        int8(micros(LocalDateTime.of(2021, 3, 14, 1, 2, 3, 250000000))),
-        int8(micros(LocalDateTime.of(2021, 3, 13, 19, 32, 3, 250000000))),
-        numeric(2, 0, 0, 4, 1234, 5678), Array[Byte](0, 1, -1, 127, -128),
-        int8(0x0123456789abcdefL) ++ int8(-1L), utf8("plain 'text' ü"), utf8("12:34:56.25"),
-        utf8("12:34:56.5+05:30")),
-      rawRow(Seq.fill(spec.size)(null): _*),
-      rawRow(int2(32767), int4(Int.MaxValue), int8(Long.MaxValue), float4(Float.NaN),
-        float8(Double.PositiveInfinity), Array[Byte](0), int4(days(1000, 1, 1)),
-        int8(micros(LocalDateTime.of(1000, 1, 1, 0, 0))),
-        int8(micros(LocalDateTime.of(1582, 10, 10, 12, 0))),
-        numeric(0, 0, 0xC000, 0), Array.emptyByteArray, new Array[Byte](16),
-        utf8(""), utf8("00:00:00"), utf8("23:59:59+00")),
+      pair(int2(-32768) -> "-32768", int4(Int.MinValue) -> "-2147483648",
+        int8(Long.MinValue) -> "-9223372036854775808", float4(0.1f) -> "0.1",
+        float8(-2.2250738585072014e-308) -> "-2.2250738585072014e-308",
+        Array[Byte](1) -> "t", int4(days(1999, 12, 31)) -> "1999-12-31",
+        int8(micros(LocalDateTime.of(2021, 3, 14, 1, 2, 3, 250000000))) -> "2021-03-14 01:02:03.25",
+        int8(kolkata) -> "2021-03-13 19:32:03.25+00",
+        numeric(2, 0, 0, 4, 1234, 5678) -> "1234.5678",
+        Array[Byte](0, 1, -1, 127, -128) -> "\\x0001ff7f80",
+        (int8(0x0123456789abcdefL) ++ int8(-1L)) -> "01234567-89ab-cdef-ffff-ffffffffffff",
+        utf8("plain 'text' ü") -> "plain 'text' ü", utf8("12:34:56.25") -> "12:34:56.25",
+        utf8("12:34:56.5+05:30") -> "12:34:56.5+05:30"),
+      pair(Seq.fill(spec.size)(nul): _*),
+      pair(int2(32767) -> "32767", int4(Int.MaxValue) -> "2147483647",
+        int8(Long.MaxValue) -> "9223372036854775807", float4(Float.NaN) -> "NaN",
+        float8(Double.PositiveInfinity) -> "Infinity", Array[Byte](0) -> "f",
+        int4(days(1000, 1, 1)) -> "1000-01-01",
+        int8(micros(LocalDateTime.of(1000, 1, 1, 0, 0))) -> "1000-01-01 00:00:00",
+        int8(micros(LocalDateTime.of(1582, 10, 10, 12, 0))) -> "1582-10-10 12:00:00+00",
+        numeric(0, 0, 0xC000, 0) -> "NaN", Array.emptyByteArray -> "\\x",
+        new Array[Byte](16) -> "00000000-0000-0000-0000-000000000000",
+        utf8("") -> "", utf8("00:00:00") -> "00:00:00", utf8("23:59:59+00") -> "23:59:59+00"),
+      // The same instant in the render of other session time zones.
+      only("tz", int8(kolkata) -> "2021-03-14 01:02:03.25+05:30"),
+      only("tz", int8(kolkata) -> "2021-03-13 14:32:03.25-05"),
+      // float4 at its largest, subnormal and signed zero: getFloat of
+      // the text equals the binary value.
+      only("f4", float4(3.4e38f) -> "3.4e+38"),
+      only("f4", float4(Float.MinPositiveValue) -> "1e-45"),
+      only("f4", float4(-0.0f) -> "-0"),
+      only("f8", float8(-0.0) -> "-0"),
+      only("n", numeric(1, -1, 0x4000, 4, 1) -> "-0.0001"),
+      // Years java.time's four-digit parsers do not take: BC (1 BC is
+      // ISO year 0, a leap year) and past 9999.
+      pair(Seq.fill(6)(nul) ++ Seq(int4(days(-4712, 1, 1)) -> "4713-01-01 BC",
+        int8(micros(LocalDateTime.of(0, 2, 29, 12, 0))) -> "0001-02-29 12:00:00 BC",
+        int8(micros(LocalDateTime.of(-4712, 1, 1, 0, 0, 1))) -> "4713-01-01 00:00:01+00 BC") ++
+        Seq.fill(6)(nul): _*),
+      pair(Seq.fill(6)(nul) ++ Seq(int4(days(10000, 1, 1)) -> "10000-01-01",
+        int8(micros(LocalDateTime.of(12345, 6, 7, 8, 9, 10))) -> "12345-06-07 08:09:10",
+        int8(micros(LocalDateTime.of(10000, 1, 1, 0, 0))) -> "10000-01-01 00:00:00+00") ++
+        Seq.fill(6)(nul): _*),
       times("12:34:56.123456", "12:34:56.123456-07"),
       // PG's end of day reads as the next day's midnight.
       times("24:00:00", null),
@@ -246,10 +293,23 @@ class MiniPgScanSpec extends AnyFunSuite {
   }
 
   test("±infinity dates and timestamps fail or read alike on both paths") {
-    Seq("d" -> 1082 -> int4(Int.MaxValue), "d" -> 1082 -> int4(Int.MinValue),
-      "ts" -> 1114 -> int8(Long.MaxValue), "ts" -> 1114 -> int8(Long.MinValue),
-      "tz" -> 1184 -> int8(Long.MaxValue), "tz" -> 1184 -> int8(Long.MinValue)).foreach {
-      case (col, cell) => assertSame(Seq(col), Seq(rawRow(cell)), binary = true)
+    Seq("d" -> 1082 -> (int4(Int.MaxValue) -> "infinity"),
+      "d" -> 1082 -> (int4(Int.MinValue) -> "-infinity"),
+      "ts" -> 1114 -> (int8(Long.MaxValue) -> "infinity"),
+      "ts" -> 1114 -> (int8(Long.MinValue) -> "-infinity"),
+      "tz" -> 1184 -> (int8(Long.MaxValue) -> "infinity"),
+      "tz" -> 1184 -> (int8(Long.MinValue) -> "-infinity")).foreach {
+      case (col, (cell, render)) =>
+        assertSame(Seq(col), Seq(rawRow(cell) -> row(render)), binary = true)
+    }
+    // The binary sentinels take pgjdbc's convention on their way to
+    // Spark's conversions: a Date or Timestamp at Long.MAX/MIN ms.
+    import Cells.{dateOf, timestampOf}
+    assert(dateOf(Int.MaxValue + Cells.PgEpochDay).getTime === Long.MaxValue)
+    assert(dateOf(Int.MinValue + Cells.PgEpochDay).getTime === Long.MinValue)
+    Seq(1114, 1184).foreach { oid =>
+      assert(timestampOf(oid, Long.MaxValue).getTime === Long.MaxValue)
+      assert(timestampOf(oid, Long.MinValue).getTime === Long.MinValue)
     }
   }
 
@@ -270,8 +330,9 @@ class MiniPgScanSpec extends AnyFunSuite {
       times("12:34:56.123456", "12:34:56.123456-07"),
       times("24:00:00", null),
       times(null, "24:00:00+00"))
-    assert(assertSame(spec, rows.map(r => row(r: _*)), binary = false) === Set.empty)
-    assertEndOfDay(spec, rows.takeRight(2).map(r => row(r: _*)), binary = false)
+    val frames = rows.map(r => row(r: _*)).map(r => r -> r)
+    assert(assertSame(spec, frames, binary = false) === Set.empty)
+    assertEndOfDay(spec, frames.takeRight(2), binary = false)
   }
 
   test("Flaco.readSqlToDataFrame reads a MiniPg URI through the columnar " +
@@ -354,4 +415,12 @@ object MiniPgScanSpec {
     */
   val wrongWidth: Seq[(Int, Array[Byte])] =
     Seq(20 -> int4(7), 1184 -> int4(0), 1700 -> numeric(3, 0, 0, 0, 1, 2))
+  /** Text cells no PostgreSQL render of their type takes, by column
+    * OID: integers with a stray character, empty, a bare sign or past
+    * Long's range; floats empty, with a suffix, a space or in hex;
+    * bools other than `t`/`f`.
+    */
+  val badText: Seq[(Int, String)] = Seq(23 -> "12a", 23 -> "", 21 -> "-",
+    20 -> "9223372036854775808", 20 -> "-9223372036854775809", 701 -> "", 701 -> "1.5x",
+    701 -> " 1", 700 -> "0x1p3", 16 -> "x", 16 -> "", 16 -> "true")
 }

@@ -256,16 +256,15 @@ class MiniPgWireRecoverySpec extends AnyFunSuite {
     }
   }
 
-  test("a binary cell whose length is not its type's width is a " +
-    "protocol error that closes the wire") {
-    MiniPgScanSpec.wrongWidth.foreach { case (oid, cell) =>
-      val server = new ScriptedPgServer(Hello, Seq(
-        Seq(ParseComplete, NoParams, rowDescription("x" -> oid)),
-        Seq(BindComplete, rawRow(cell), complete("SELECT 1"), Ready)))
+  test("a text cell that does not parse is a protocol error that " +
+    "closes the wire") {
+    MiniPgScanSpec.badText.foreach { case (oid, cell) =>
+      val server = new ScriptedPgServer(Hello,
+        Seq(Seq(rowDescription("x" -> oid), row(cell), complete("SELECT 1"), Ready)))
       val wire = wireTo(server)
       try {
-        val e = intercept[SQLException](wire.queryExtended("select x"))
-        assert(e.getSQLState === "08P01", s"oid $oid")
+        val e = intercept[SQLException](wire.query("select x"))
+        assert(e.getSQLState === "08P01", s"oid $oid '$cell'")
         assert(!wire.isOpen)
         assert(server.clientClosed.await(2, TimeUnit.SECONDS))
       } finally { wire.close(); server.close() }

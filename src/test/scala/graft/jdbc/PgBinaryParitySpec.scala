@@ -1,26 +1,26 @@
 package graft.jdbc
 
+import scala.util.Try
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Flaco, TestSpark}
 
-/** The r17 binary-transfer read path (extended protocol, per-column
-  * BINARY result formats for [[MiniPgWire.BinaryOids]]) pinned
-  * value-identical to the text path it replaced, on a LIVE
-  * PostgreSQL 15 — env-gated like PagilaLiveSpec
-  * (`scripts/pg_provision.sh` arms; cancels offline).
-  *
-  * Two layers:
-  *  1. raw JDBC getters over the same rows with `binaryTransfer`
-  *     on/off (the decode-level contract, every BinaryOids type +
-  *     NULLs + sign/fraction/scale edges);
-  *  2. Spark's whole JDBC read both ways, full-row hash-compared
-  *     (the engine-level contract on a pagila-shaped bulk table).
-  *
-  * The reference reads typed values over the same wire contract
-  * (rust-postgres issues extended-protocol reads with binary result
-  * format); this gate is what makes the sandbox driver's fast path
-  * trustworthy rather than merely fast.
+/** [[MiniPgScan]]'s binary transfer (extended protocol, BINARY result
+  * formats for `Cells.BinaryOids`) against the text decode of Spark's
+  * JDBC reader, on a LIVE PostgreSQL 15 — env-gated like PagilaLiveSpec
+  * (`scripts/pg_provision.sh` arms; cancels offline). A MiniPg result
+  * set reads text only, so the two decodes share no cell code and each
+  * checks the other:
+  *  1. every BinaryOids type, cell by cell, with NULLs and
+  *     sign/fraction/scale/range edges;
+  *  2. ±infinity, which both fail on;
+  *  3. timestamptz under other session time zones, whose text render
+  *     carries their offsets;
+  *  4. the scan's whole read in both transfer modes, hash-compared on
+  *     a pagila-shaped bulk table.
   */
 class PgBinaryParitySpec extends AnyFunSuite {
 
@@ -76,96 +76,62 @@ class PgBinaryParitySpec extends AnyFunSuite {
     true
   }
 
-  test("every BinaryOids getter agrees between binary and text " +
-    "transfer, including NULLs and range edges") {
+  /** `q` through the binary scan and through Spark's JDBC reader. */
+  private def bothReads(u: String, q: String,
+      readerOptions: Map[String, String] = Map.empty): (DataFrame, DataFrame) = {
+    val scan = Flaco.readSqlToDataFrame(spark, u, q)
+    assert(scan.queryExecution.executedPlan.collectFirst { case s: BatchScanExec => s }.isDefined)
+    val reader = spark.read.format("jdbc")
+      .options(Flaco.jdbcOptions(u, q) ++ readerOptions).load()
+    (scan, reader)
+  }
+
+  private def cells(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    // Distinct renders for -0.0 and 0.0, and NaN equal to itself.
+    case d: Double => java.lang.Double.toString(d)
+    case f: Float => java.lang.Float.toString(f)
+    case x => x
+  })
+
+  test("every BinaryOids column reads alike through the scan's binary " +
+    "decode and the JDBC reader's text decode, including NULLs and range edges") {
     val u = uri
     assert(loaded)
-    val q = "select * from flaco_binfmt_live order by id"
-    val cb = java.sql.DriverManager.getConnection(u)
-    val ct = java.sql.DriverManager.getConnection(textUri)
-    try {
-      val rb = cb.createStatement().executeQuery(q)
-      val rt = ct.createStatement().executeQuery(q)
-      var row = 0
-      while (rb.next()) {
-        assert(rt.next())
-        row += 1
-        def both[A](f: java.sql.ResultSet => A): (A, A) = {
-          val vb = f(rb); val nb = rb.wasNull()
-          val vt = f(rt); val nt = rt.wasNull()
-          assert(nb === nt, s"null flag drift row $row")
-          (vb, vt)
-        }
-        Seq(2, 3).foreach { i => // i8, i2
-          val (vb, vt) = both(_.getLong(i)); assert(vb === vt, s"col $i")
-        }
-        locally { val (vb, vt) = both(_.getBoolean(4)); assert(vb === vt) }
-        locally { val (vb, vt) = both(_.getFloat(5)); assert(vb === vt) }
-        locally { val (vb, vt) = both(_.getDouble(6)); assert(vb === vt) }
-        locally { val (vb, vt) = both(_.getDate(7)); assert(vb === vt) }
-        Seq(8, 9).foreach { i =>
-          val (vb, vt) = both(_.getTimestamp(i)); assert(vb === vt, s"col $i")
-        }
-        locally { val (vb, vt) = both(_.getBigDecimal(10)); assert(vb === vt) }
-        // numeric NaN: both transfer modes serve the text form via
-        // getString and throw alike on getBigDecimal.
-        locally {
-          val (vb, vt) = both(_.getString(11)); assert(vb === vt)
-        }
-        locally {
-          val (vb, vt) = both(r => Option(r.getBytes(12)).map(_.toSeq))
-          assert(vb === vt)
-        }
-        Seq(13, 14, 15).foreach { i => // uuid, text, json
-          val (vb, vt) = both(_.getString(i)); assert(vb === vt, s"col $i")
-        }
-        // getString render parity on the binary-decoded columns too
-        // (PG text render vs the ColumnStore.text re-render).
-        Seq(1, 2, 3, 4, 7, 10).foreach { i =>
-          val (vb, vt) = both(_.getString(i)); assert(vb === vt, s"col $i")
-        }
-      }
-      assert(row === 3 && !rt.next())
-    } finally { cb.close(); ct.close() }
+    val (scan, reader) = bothReads(u, "select * from flaco_binfmt_live order by id")
+    assert(scan.schema === reader.schema)
+    val rows = cells(scan)
+    assert(rows === cells(reader))
+    assert(rows.size === 3)
   }
 
-  test("binary transfer serves PG's ±infinity timestamps/dates via " +
-    "pgjdbc's sentinel convention (the text path throws at parse — " +
-    "binary is strictly more faithful here)") {
+  test("±infinity timestamps and dates fail alike through the scan's " +
+    "binary decode and the JDBC reader's text decode") {
     val u = uri
-    val c = java.sql.DriverManager.getConnection(u)
-    try {
-      val rs = c.createStatement().executeQuery(
-        "select 'infinity'::timestamp, '-infinity'::timestamptz, " +
-          "'infinity'::date, '-infinity'::date")
-      assert(rs.next())
-      assert(rs.getTimestamp(1).getTime === Long.MaxValue)
-      assert(rs.getTimestamp(2).getTime === Long.MinValue)
-      assert(rs.getDate(3).getTime === Long.MaxValue)
-      assert(rs.getDate(4).getTime === Long.MinValue)
-      assert(rs.getString(1) === "infinity")
-      assert(rs.getString(2) === "-infinity")
-    } finally c.close()
+    Seq("'infinity'::timestamp", "'-infinity'::timestamptz", "'infinity'::date",
+      "'-infinity'::date").foreach { v =>
+      val (scan, reader) = bothReads(u, s"select $v as v")
+      assert(Try(scan.collect()).isFailure, v)
+      assert(Try(reader.collect()).isFailure, v)
+    }
   }
 
-  test("binary timestamptz getString tracks the session TimeZone the " +
-    "server reports (ParameterStatus), matching the text wire's own " +
-    "render after SET TIME ZONE") {
+  test("binary timestamptz reads the instant that the text render of " +
+    "every session TimeZone carries") {
     val u = uri
-    val cb = java.sql.DriverManager.getConnection(u)
-    val ct = java.sql.DriverManager.getConnection(textUri)
-    try {
-      val q = "select '2021-03-13 19:32:03.25+00'::timestamptz"
-      Seq("Asia/Kolkata", "America/New_York", "UTC").foreach { z =>
-        cb.createStatement().executeUpdate(s"SET TIME ZONE '$z'"): Unit
-        ct.createStatement().executeUpdate(s"SET TIME ZONE '$z'"): Unit
-        val rb = cb.createStatement().executeQuery(q)
-        val rt = ct.createStatement().executeQuery(q)
-        assert(rb.next() && rt.next())
-        assert(rb.getString(1) === rt.getString(1), s"zone $z")
-        assert(rb.getTimestamp(1) === rt.getTimestamp(1), s"zone $z")
-      }
-    } finally { cb.close(); ct.close() }
+    val q = "select tz, tz::text as r from " +
+      "(select '2021-03-13 19:32:03.25+00'::timestamptz as tz) t"
+    val (scan, _) = bothReads(u, q)
+    val want = scan.collect().head.getTimestamp(0)
+    assert(want.toInstant === java.time.Instant.parse("2021-03-13T19:32:03.250Z"))
+    Seq("Asia/Kolkata" -> "2021-03-14 01:02:03.25+05:30",
+      "America/New_York" -> "2021-03-13 14:32:03.25-05",
+      "UTC" -> "2021-03-13 19:32:03.25+00").foreach { case (z, render) =>
+      val (_, reader) = bothReads(u, q, Map("sessionInitStatement" -> s"SET TIME ZONE '$z'"))
+      val got = reader.collect().head
+      assert(got.getString(1) === render, s"zone $z")
+      assert(got.getTimestamp(0) === want, s"zone $z")
+    }
   }
 
   test("Spark's whole JDBC read is row-identical across transfer " +

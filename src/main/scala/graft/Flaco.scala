@@ -49,8 +49,12 @@ object FileFormat {
   *                        Mutually exclusive with `timeAsMicros`.
   * @param charAsCode      1-byte "char" → its code as TINYINT
   *                        (`src/lib.rs:214-219`); same metadata contract.
-  * @param singleFile      one output file / row group like the
-  *                        single-chunk writers (`src/lib.rs:124,163`).
+  * @param singleFile      one output file, like the single-chunk
+  *                        writers (`src/lib.rs:124,163`): one task
+  *                        writes it over every partition (Parquet and
+  *                        the text formats by `coalesce(1)`, Feather
+  *                        in partition order), so no row passes
+  *                        through the driver.
   * @param uncompressed    Parquet compression=none (`src/lib.rs:125-129`).
   * @param variantInterop  write VARIANT columns external-reader-safe.
   *                        Spark 4.1 shreds variant Parquet BY DEFAULT

@@ -12,9 +12,7 @@ import org.apache.spark.sql.types._
   * STRUCT<months INT, days INT, micros BIGINT> — the Parquet-writable
   * representation SURVEY.md §1.2 chose (CalendarIntervalType cannot
   * be written). Codegen'd so bulk decodes stay in Tungsten; null or
-  * wrong-length payloads yield NULL (the catchable-error contract —
-  * the driver-side [[graft.types.PgTypeMap.decodeInterval]] twin
-  * throws for callers that want the loud version).
+  * wrong-length payloads yield NULL (the catchable-error contract).
   */
 case class DecodeInterval(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {

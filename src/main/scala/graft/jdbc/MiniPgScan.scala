@@ -213,7 +213,7 @@ final class MiniPgPartitionReader(wire: MiniPgWire, stmt: String,
   * type's width, so it first checks that the cell is that wide: past
   * the cell lie the next cell's bytes, or stale ones of an earlier row.
   */
-private[jdbc] object Cells {
+private[graft] object Cells {
   import MiniPgWire._
 
   abstract class Cell(val format: Byte) {

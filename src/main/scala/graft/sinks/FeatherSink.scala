@@ -1,19 +1,19 @@
 package graft.sinks
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, File, FileOutputStream}
-import java.nio.channels.{Channels, WritableByteChannel}
+import java.io.{ByteArrayOutputStream, File, FileOutputStream}
+import java.nio.channels.Channels
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.{VectorLoader, VectorSchemaRoot, VectorUnloader}
-import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter, ReadChannel, WriteChannel}
-import org.apache.arrow.vector.ipc.message.MessageSerializer
+import org.apache.arrow.vector.{VectorSchemaRoot, VectorUnloader}
+import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter, WriteChannel}
+import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, WholeStageCodegenExec}
@@ -30,57 +30,53 @@ import graft.FlacoSparkException
   * record batches (bounded memory — the reference's own TODO at
   * `src/lib.rs:75`) and, by default, write one IPC file per partition
   * in parallel (the 100 TB path), in one Spark job. `singleFile = true`
-  * gives the reference's one-file layout by pulling one partition per
-  * job through the driver, still batch-streamed.
+  * gives the reference's one-file layout: the same task, run once over
+  * every partition in order.
   *
-  * One encoder serves every path: the tasks fill Arrow-Java 18.3
-  * vectors from InternalRows (the plan's, or row views over a columnar
-  * scan's own batches) with Spark's own
+  * One encoder, in the tasks only, produces every Arrow IPC byte: the
+  * tasks fill Arrow-Java 18.3 vectors from InternalRows (the plan's, or
+  * row views over a columnar scan's own batches) with Spark's own
   * `execution.arrow.ArrowWriter` — the writer behind Spark's Arrow
   * exchange with Python — so no row goes through an external `Row`
-  * and its `java.sql`/`String` objects.
+  * and its `java.sql`/`String` objects. The driver decodes no batch:
+  * it writes the schema-only file of an empty result, and concatenates
+  * the tasks' record-batch messages into [[collectAsArrowStream]]'s
+  * stream.
   */
 object FeatherSink {
 
   private[graft] val BatchRows = 4096
 
-  /** Ceiling for [[write]]'s `singleFile` parity mode. That mode
-    * streams the WHOLE result through the driver by design
-    * (reference-layout parity) — correct for interchange-sized
-    * results, catastrophic if invoked on a corpus-sized one by
-    * accident. The guard fails fast with a typed error the moment
-    * the budget is crossed (bytes actually written, not an estimate
-    * — plan statistics are unreliable before execution), deletes the
-    * partial file, and names the per-partition mode as the scale
-    * path. Override per call for bigger deliberate exports.
-    */
-  val DefaultSingleFileByteBudget: Long = 4L << 30
-
   /** Replaces whatever is at `path`, like the Parquet sink's
     * `overwrite`. Per-partition mode writes `part-NNNNN.arrow` for
-    * each non-empty partition, or one schema-only file when every
-    * partition is empty.
+    * each non-empty partition; `singleFile` writes the file `path`
+    * from one task. A result with no rows writes one schema-only file.
+    * A failed write leaves nothing at `path`.
     */
-  def write(df: DataFrame, path: String, singleFile: Boolean = false,
-      singleFileByteBudget: Long = DefaultSingleFileByteBudget): Unit = {
+  def write(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
     val schema = df.schema
     validate(schema)
     val target = new File(path)
     if (target.exists()) FileUtils.forceDelete(target)
-    if (singleFile) {
-      try writeFile(schema, path, singleFileByteBudget)(pulled(df))
-      catch { case e: Throwable =>
-        target.delete() // no truncated IPC file left behind
-        throw e
-      }
-    } else {
-      target.mkdirs()
-      val (rdd, columnar) = source(df)
+    try {
+      if (!singleFile) target.mkdirs()
+      val (parts, columnar) = source(df)
+      // singleFile: one task over every partition's iterator, so that
+      // its batches end where the partitions do.
+      val rdd = if (singleFile)
+        parts.mapPartitions(Iterator(_)).coalesce(1, partitionCoalescer = Some(InOrder))
+          .asInstanceOf[RDD[AnyRef]]
+        else parts
+      val task = WritePartition(schema, path, columnar, singleFile)
       val wrote = new Array[Boolean](rdd.getNumPartitions)
-      rdd.sparkContext.runJob(rdd, WritePartition(schema, path, columnar),
-        wrote.indices, (pid: Int, nonEmpty: Boolean) => wrote(pid) = nonEmpty)
-      if (!wrote.contains(true))
-        writeFile(schema, s"$path/part-00000.arrow")(_ => false)
+      rdd.sparkContext.runJob(rdd, task, wrote.indices,
+        (pid: Int, nonEmpty: Boolean) => wrote(pid) = nonEmpty)
+      if (!wrote.contains(true)) writeFile(schema, task.file(0), Iterator.empty)
+    } catch { case e: Throwable =>
+      // The tasks that finished wrote whole files, which a reader would
+      // take for the whole result.
+      FileUtils.deleteQuietly(target)
+      throw e
     }
   }
 
@@ -92,14 +88,25 @@ object FeatherSink {
     * Python/Arrow consumer" path, bounded by what one process can
     * hold — same contract and same limit as the reference; the
     * distributed paths (parquet/feather sinks, the DataFrame itself)
-    * remain the 100 TB story. The tasks encode the record batches and
-    * the driver pulls them one partition at a time, so peak memory is
-    * one partition's encoded batches plus one 4096-row batch.
+    * remain the 100 TB story. The driver writes the schema message,
+    * then each partition's record-batch messages as its task encoded
+    * them (one job per partition, in order, so the driver holds one
+    * partition's messages beyond the stream), then the end-of-stream
+    * marker. Every message is padded to 8 bytes, so the bytes are
+    * those `ArrowStreamWriter` writes for the same batches.
     */
   def collectAsArrowStream(df: DataFrame): Array[Byte] = {
     validate(df.schema)
+    val (rdd, columnar) = source(df)
+    val encode = EncodePartition(df.schema, columnar)
     val bos = new ByteArrayOutputStream()
-    writeIpc(df.schema, Channels.newChannel(bos), stream = true)(pulled(df))
+    val ch = new WriteChannel(Channels.newChannel(bos))
+    MessageSerializer.serialize(ch, arrowSchema(df.schema))
+    rdd.partitions.indices.foreach { pid =>
+      rdd.sparkContext.runJob(rdd, encode, Seq(pid),
+        (_: Int, messages: Array[Array[Byte]]) => messages.foreach(ch.write))
+    }
+    ArrowStreamWriter.writeEndOfStream(ch, IpcOption.DEFAULT)
     bos.toByteArray
   }
 
@@ -146,96 +153,35 @@ object FeatherSink {
     }
   }
 
-  /** Write one IPC file at `file` from `next` (see [[writeIpc]]).
-    * `byteBudget`, if finite, bounds the bytes actually written.
+  private def arrowSchema(schema: StructType): Schema =
+    new Schema(schema.fields.map(arrowField).toSeq.asJava)
+
+  /** Write one IPC file at `file`, one record batch per element of
+    * `batches` (see [[batchesOf]]). A failure leaves the file without
+    * its footer.
     */
   private def writeFile(schema: StructType, file: String,
-      byteBudget: Long = Long.MaxValue)(next: BatchEncoder => Boolean): Unit = {
+      batches: Iterator[Iterator[InternalRow]]): Unit = {
+    val enc = new BatchEncoder(schema)
     val out = new FileOutputStream(file)
     try {
-      if (byteBudget == Long.MaxValue)
-        writeIpc(schema, out.getChannel, stream = false)(next)
-      else {
-        val ch = new BudgetedChannel(out.getChannel, byteBudget)
-        // The trip surfaces as IOException somewhere inside the Arrow
-        // writer (possibly wrapped, possibly superseded by the
-        // writer's own shutdown) — the flag, not the exception type,
-        // is the reliable signal to translate into the typed error.
-        try writeIpc(schema, ch, stream = false)(next)
-        catch { case e: Throwable =>
-          if (ch.tripped) throw new FlacoSparkException(
-            s"Feather singleFile output exceeded its $byteBudget-byte " +
-              s"budget at $file. singleFile streams the whole result " +
-              "through the driver (reference-parity layout); use the " +
-              "default per-partition mode for large results, or raise " +
-              "singleFileByteBudget deliberately.")
-          throw e
-        }
-      }
-    } finally out.close()
-  }
-
-  /** Counts bytes through to `inner`; crossing `budget` sets
-    * [[tripped]] and refuses all further writes — fail-fast for the
-    * driver-side singleFile parity path.
-    */
-  private final class BudgetedChannel(
-      inner: WritableByteChannel, budget: Long)
-      extends WritableByteChannel {
-    private var written = 0L
-    @volatile var tripped = false
-    override def write(src: java.nio.ByteBuffer): Int = {
-      if (tripped) throw new java.io.IOException("byte budget exceeded")
-      val n = inner.write(src)
-      written += n
-      if (written > budget) {
-        tripped = true
-        throw new java.io.IOException("byte budget exceeded")
-      }
-      n
-    }
-    override def isOpen: Boolean = inner.isOpen
-    override def close(): Unit = inner.close()
-  }
-
-  /** Write `ch` as the IPC file format (Feather) or the IPC stream
-    * format (interchange), one batch per call of `next` that filled
-    * the encoder's root, until a call returns false.
-    */
-  private def writeIpc(schema: StructType, ch: WritableByteChannel,
-      stream: Boolean)(next: BatchEncoder => Boolean): Unit = {
-    val enc = new BatchEncoder(schema)
-    val writer = if (stream) new ArrowStreamWriter(enc.root, null, ch)
-                 else new ArrowFileWriter(enc.root, null, ch)
-    try {
+      val writer = new ArrowFileWriter(enc.root, null, out.getChannel)
       writer.start()
-      while (next(enc)) writer.writeBatch()
+      batches.foreach { rows => enc.encode(rows); writer.writeBatch() }
       writer.end()
-    } catch { case e: Throwable =>
-      // writer.close() re-flushes through the (possibly tripped)
-      // channel; don't let its secondary failure supersede the real
-      // one or leak the root/allocator.
-      try writer.close() catch { case _: Throwable => () }
-      enc.close()
-      throw e
-    }
-    writer.close(); enc.close()
+    } finally { out.close(); enc.close() }
   }
 
-  /** The driver-side paths: one job per partition, in order, encodes
-    * that partition into IPC record-batch messages, so the driver holds
-    * one partition's batches at a time.
+  /** The parent's partitions, in index order, as one partition.
+    * Spark's default coalescer puts a partition with preferred
+    * locations ahead of one without.
     */
-  private def pulled(df: DataFrame): BatchEncoder => Boolean = {
-    val (rdd, columnar) = source(df)
-    val encode = EncodePartition(df.schema, columnar)
-    val messages = Iterator.range(0, rdd.getNumPartitions).flatMap { pid =>
-      var out = Array.empty[Array[Byte]]
-      rdd.sparkContext.runJob(rdd, encode, Seq(pid),
-        (_: Int, m: Array[Array[Byte]]) => out = m)
-      out
+  private object InOrder extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val all = new PartitionGroup()
+      all.partitions ++= parent.partitions
+      Array(all)
     }
-    enc => messages.hasNext && { enc.load(messages.next()); true }
   }
 
   /** What the tasks read: the scan's own column batches when the plan
@@ -254,6 +200,12 @@ object FeatherSink {
     if (columnar) it.flatMap(_.asInstanceOf[ColumnarBatch].rowIterator().asScala)
     else it.asInstanceOf[Iterator[InternalRow]]
 
+  /** `rows` once for each batch they fill: encoding an element takes
+    * the next [[BatchRows]] rows or the rest.
+    */
+  private def batchesOf(rows: Iterator[InternalRow]): Iterator[Iterator[InternalRow]] =
+    Iterator.continually(rows).takeWhile(_.hasNext)
+
   /** A task: its partition as IPC record-batch messages. The task
     * functions are named classes, not lambdas, because Spark's closure
     * cleaner returns at once for them instead of re-parsing the
@@ -262,23 +214,25 @@ object FeatherSink {
   private final case class EncodePartition(schema: StructType, columnar: Boolean)
       extends ((TaskContext, Iterator[AnyRef]) => Array[Array[Byte]]) {
     def apply(ctx: TaskContext, it: Iterator[AnyRef]): Array[Array[Byte]] = {
-      val rows = rowsOf(it, columnar)
       val enc = new BatchEncoder(schema)
-      try Iterator.continually(enc.encode(rows)).takeWhile(_ > 0).map(_ => enc.message()).toArray
+      try batchesOf(rowsOf(it, columnar)).map { rows => enc.encode(rows); enc.message() }.toArray
       finally enc.close()
     }
   }
 
-  /** A task: its partition as `part-NNNNN.arrow` under `path`, unless
-    * empty; whether it wrote one.
+  /** A task: its partition (for `singleFile`, the iterators of every
+    * partition) as the IPC file [[file]], unless empty; whether it
+    * wrote one.
     */
-  private final case class WritePartition(schema: StructType, path: String, columnar: Boolean)
+  private final case class WritePartition(schema: StructType, path: String,
+      columnar: Boolean, singleFile: Boolean)
       extends ((TaskContext, Iterator[AnyRef]) => Boolean) {
+    def file(pid: Int): String = if (singleFile) path else f"$path/part-$pid%05d.arrow"
     def apply(ctx: TaskContext, it: Iterator[AnyRef]): Boolean = {
-      val rows = rowsOf(it, columnar)
-      val nonEmpty = rows.hasNext
-      if (nonEmpty)
-        writeFile(schema, f"$path/part-${ctx.partitionId()}%05d.arrow")(_.encode(rows) > 0)
+      val parts = if (singleFile) it.map(_.asInstanceOf[Iterator[AnyRef]]) else Iterator(it)
+      val batches = parts.flatMap(p => batchesOf(rowsOf(p, columnar)))
+      val nonEmpty = batches.hasNext
+      if (nonEmpty) writeFile(schema, file(ctx.partitionId()), batches)
       nonEmpty
     }
   }
@@ -288,17 +242,15 @@ object FeatherSink {
     */
   private final class BatchEncoder(schema: StructType) extends AutoCloseable {
     private val allocator = new RootAllocator()
-    val root: VectorSchemaRoot = VectorSchemaRoot.create(
-      new Schema(schema.fields.map(arrowField).toSeq.asJava), allocator)
+    val root: VectorSchemaRoot = VectorSchemaRoot.create(arrowSchema(schema), allocator)
     private val writer = GraftArrowBridge.writer(root)
 
-    /** Fill the root with the next rows; their count, 0 once drained. */
-    def encode(rows: Iterator[InternalRow]): Int = {
+    /** Fill the root with the next [[BatchRows]] rows, or the rest. */
+    def encode(rows: Iterator[InternalRow]): Unit = {
       writer.reset()
       var n = 0
       while (n < BatchRows && rows.hasNext) { writer.write(rows.next()); n += 1 }
       writer.finish()
-      n
     }
 
     /** The root's batch as one IPC record-batch message. */
@@ -308,13 +260,6 @@ object FeatherSink {
       try MessageSerializer.serialize(new WriteChannel(Channels.newChannel(out)), batch)
       finally batch.close()
       out.toByteArray
-    }
-
-    /** Load a [[message]] into the root. */
-    def load(message: Array[Byte]): Unit = {
-      val batch = MessageSerializer.deserializeRecordBatch(
-        new ReadChannel(Channels.newChannel(new ByteArrayInputStream(message))), allocator)
-      try new VectorLoader(root).load(batch) finally batch.close()
     }
 
     override def close(): Unit = { root.close(); allocator.close() }

@@ -45,9 +45,8 @@ import graft.ParityOptions
   * semantics as opt-in column transforms
   * (`ParityOptions(timeAsMicros/charAsCode)`);
   * [[graft.functions.DecodeInterval]] decodes interval payloads.
-  * [[PgTypeMap.mapping]] documents the TARGET types (the reference's
-  * contract, which is why it intentionally differs from what a bare
-  * JDBC load yields).
+  * PgTypeMapSpec pins the type every wire type reads as, at default
+  * and at exact parity.
   */
 class FlacoPostgresDialect(parity: ParityOptions = ParityOptions())
     extends JdbcDialect {

@@ -173,8 +173,8 @@ class PgTypesLiveSpec extends AnyFunSuite {
         "CAST(id AS INT))) AS t FROM range(3)")
     // Boundary: Spark's JDBC relation provider rejects TIME before
     // any dialect runs (no JdbcUtils setter on 4.1.2). If this ever
-    // starts passing, the PgTypeMap.timeNative doc and this fallback
-    // contract should be revisited.
+    // starts passing, PgTypeMap.applyParity's timeAsNative doc and
+    // this fallback contract should be revisited.
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       df.write.mode("overwrite")
         .jdbc(u, "flaco_time_write", new java.util.Properties())

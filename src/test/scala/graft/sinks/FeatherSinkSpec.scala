@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.io.FileInputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, FileInputStream}
+import java.nio.channels.Channels
 import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
@@ -8,11 +9,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.ListVector
-import org.apache.arrow.vector.ipc.ArrowFileReader
+import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.pojo.ArrowType
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types._
 import org.scalatest.concurrent.Eventually._
@@ -300,6 +302,16 @@ class FeatherSinkSpec extends AnyFunSuite {
     assert(back.count() === 0)
   }
 
+  test("an empty singleFile write reads back as 0 rows with its schema") {
+    val df = Corpus.read(spark, TestSpark.sf, "orders").filter("o_orderkey < 0")
+    val file = Files.createTempDirectory("fte1").toString + "/t.arrow"
+    FeatherSink.write(df, file, singleFile = true)
+    val back = graft.Flaco.readFile(spark, file, graft.FileFormat.Feather)
+    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+    assert(back.count() === 0)
+  }
+
   test("collectAsArrowStream round-trips through an independent Arrow reader") {
     val df = Corpus.read(spark, TestSpark.sf, "customer")
     val bytes = graft.Flaco.collectAsArrowStream(df)
@@ -348,23 +360,6 @@ class FeatherSinkSpec extends AnyFunSuite {
       FeatherSink.write(df, "/tmp/never-written.arrow", singleFile = true)
     }
     assert(e.getMessage.contains("not supported"))
-  }
-
-  test("singleFile byte budget fails fast with a typed error, no partial file") {
-    val df = Corpus.read(spark, TestSpark.sf, "documents")
-      .select("doc_id", "text")
-    val path = Files.createTempDirectory("feather-budget").toString + "/one.arrow"
-    val e = intercept[FlacoSparkException] {
-      FeatherSink.write(df, path, singleFile = true,
-        singleFileByteBudget = 1024L)
-    }
-    assert(e.getMessage.contains("byte budget"))
-    assert(!new java.io.File(path).exists(),
-      "partial over-budget IPC file left behind")
-    // The same result within budget (and the per-partition scale
-    // mode) writes fine — the guard gates only the parity path.
-    FeatherSink.write(df, path, singleFile = true)
-    assert(readBack(path, df.schema).size === df.count())
   }
 
   /** Runs `body` with `key` set to `value` on the shared session. */
@@ -418,9 +413,18 @@ class FeatherSinkSpec extends AnyFunSuite {
       Set("stream", "one.arrow", "parts/part-00000.arrow", "parts/part-00001.arrow"))
     assert(viaBatches === viaRows)
 
-    // And the batches carry the values themselves.
+    // And the batches carry the values themselves, 4096 rows at most,
+    // none spanning two partitions.
     val single = Files.createTempDirectory("ftc1").toString + "/t.arrow"
     FeatherSink.write(columnar, single, singleFile = true)
+    val alloc = new RootAllocator()
+    val in = new FileInputStream(single)
+    val reader = new ArrowFileReader(in.getChannel, alloc)
+    try assert(reader.getRecordBlocks.asScala.indices.map { b =>
+      reader.loadRecordBatch(reader.getRecordBlocks.get(b))
+      reader.getVectorSchemaRoot.getRowCount
+    } === Seq(4096, 904, 4096, 904))
+    finally { reader.close(); in.close(); alloc.close() }
     assert(readBack(single, allTypes) === columnar.collect().toSeq.map(r =>
       allTypes.fields.indices.map(c => expected(r, c, allTypes.fields(c).dataType))))
   }
@@ -457,8 +461,8 @@ class FeatherSinkSpec extends AnyFunSuite {
     out.toSeq
   }
 
-  test("a driver-side pull runs one job per partition and streams the " +
-    "partitions in order; a per-partition write runs one job") {
+  test("collectAsArrowStream runs one job per partition and streams the " +
+    "partitions in order; a singleFile and a per-partition write run one job each") {
     val ranged = spark.range(0, 25000, 1, 5).toDF("id")
     val parquet = readAllTypes().select("i8")
     Seq(ranged -> false, parquet -> true).foreach { case (df, columnar) =>
@@ -469,7 +473,8 @@ class FeatherSinkSpec extends AnyFunSuite {
       // collect() returns the partitions in order.
       assert(readStream(bytes, df.schema) === df.collect().toSeq.map(r => Seq(r.get(0))))
       val dir = Files.createTempDirectory("ftj").toString
-      assert(jobsDuring(FeatherSink.write(df, s"$dir/one.arrow", singleFile = true)) === n)
+      assert(jobsDuring(FeatherSink.write(df, s"$dir/one.arrow", singleFile = true)) === 1)
+      assert(readBack(s"$dir/one.arrow", df.schema) === df.collect().toSeq.map(r => Seq(r.get(0))))
       assert(jobsDuring(FeatherSink.write(df, s"$dir/parts")) === 1)
     }
     assert(readStream(graft.Flaco.collectAsArrowStream(ranged), ranged.schema) ===
@@ -500,5 +505,78 @@ class FeatherSinkSpec extends AnyFunSuite {
         }
     }
     assert(!new java.io.File(s"$dir/one.arrow").exists())
+    // The other tasks' files are whole; the failed task's is valid
+    // Arrow up to its last batch. None of them may read as the result.
+    assert(!new java.io.File(s"$dir/parts").exists())
+  }
+
+  /** `bytes` read back with ArrowStreamReader and written again
+    * through ArrowStreamWriter, batch for batch.
+    */
+  private def rewritten(bytes: Array[Byte]): Array[Byte] = {
+    val alloc = new RootAllocator()
+    val reader = new ArrowStreamReader(new ByteArrayInputStream(bytes), alloc)
+    val out = new ByteArrayOutputStream()
+    try {
+      val writer = new ArrowStreamWriter(reader.getVectorSchemaRoot, null, Channels.newChannel(out))
+      writer.start()
+      while (reader.loadNextBatch()) writer.writeBatch()
+      writer.end()
+    } finally { reader.close(); alloc.close() }
+    out.toByteArray
+  }
+
+  test("collectAsArrowStream writes the bytes ArrowStreamWriter writes for the same batches") {
+    val frames = Seq(
+      "every type" -> spark.createDataFrame(
+        spark.sparkContext.parallelize(allTypesRows(30), 3), allTypes),
+      "every type, columnar, two batches a partition" -> readAllTypes(),
+      "empty" -> readAllTypes().filter("i4 < 0"))
+    frames.foreach { case (name, df) =>
+      val bytes = graft.Flaco.collectAsArrowStream(df)
+      assert(java.util.Arrays.equals(bytes, rewritten(bytes)), name)
+    }
+  }
+
+  test("a singleFile write keeps the order of a multi-split Parquet read " +
+    "whose splits have preferred locations") {
+    val dir = Files.createTempDirectory("ftord").toString
+    spark.range(0, 40000, 1, 8).selectExpr("id", "cast(id as string) as s")
+      .write.parquet(s"$dir/t")
+    spark.sparkContext.hadoopConfiguration.set("fs.hosted.impl", classOf[HostedFileSystem].getName)
+    // One file a split: no split is empty, so a reorder shows.
+    withConf("spark.sql.files.maxPartitionBytes", "1048576") {
+      withConf("spark.sql.files.openCostInBytes", "1048576") {
+        val split = spark.read.parquet(s"hosted://$dir/t")
+        val files = split.queryExecution.executedPlan.collectFirst {
+          case scan: FileSourceScanExec => scan.inputRDD
+        }.get
+        assert(files.getNumPartitions === 8)
+        assert(files.partitions.forall(p => files.preferredLocations(p).nonEmpty))
+        assert(split.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq === Seq.fill(8)(5000))
+        // A partition without locations ahead of those with them.
+        val mixed = spark.range(-5, 0, 1, 1).selectExpr("id", "cast(id as string) as s")
+          .union(split)
+        Seq("split" -> split, "mixed" -> mixed).foreach { case (name, df) =>
+          val file = s"$dir/$name.arrow"
+          FeatherSink.write(df, file, singleFile = true)
+          assert(readBack(file, df.schema) === df.collect().toSeq.map(_.toSeq), name)
+        }
+      }
+    }
+  }
+}
+
+/** The local file system under the scheme `hosted`, whose files each
+  * report their one block on a host of their own, as HDFS reports
+  * them; Spark drops `localhost` from a split's preferred locations,
+  * so a local read has none.
+  */
+class HostedFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("hosted:///")
+  override def getFileBlockLocations(f: org.apache.hadoop.fs.FileStatus, start: Long,
+      len: Long): Array[org.apache.hadoop.fs.BlockLocation] = {
+    val host = s"host-${f.getPath.getName.hashCode & 3}"
+    Array(new org.apache.hadoop.fs.BlockLocation(Array(s"$host:9866"), Array(host), 0, f.getLen))
   }
 }

@@ -15,9 +15,11 @@ import graft.TestSpark
   * in-process (reference `README.md:39-50`,
   * `benchmarks/test_benchmarks.py:103-138`). The Spark-native
   * analogue of that streaming write is
-  * [[FeatherSink.write]]`(singleFile = true)`: a pull of one partition
-  * per job that holds ONE partition plus one 4096-row Arrow batch at a
-  * time, never the table.
+  * [[FeatherSink.write]]`(singleFile = true)`: one task that reads the
+  * partitions in order and writes the file itself, holding one 4096-row
+  * Arrow batch and one partition's reader at a time, never the table.
+  * No row passes through the driver; in local mode the task runs in
+  * the driver's JVM, so the probe counts it.
   *
   * The probe: build a 1M-row mixed-type table with a null stripe
   * (the reference's column mix: int/long/float/double/string/binary/

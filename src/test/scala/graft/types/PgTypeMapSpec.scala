@@ -10,56 +10,102 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{FlacoSparkException, ParityOptions, TestSpark}
 
 /** The reference's 19-arm wire-type switch (reference
-  * `src/lib.rs:199-386`) as a mapping contract, plus the value-level
-  * parity transforms. The reference itself has zero unit tests; this
-  * is the upgrade SURVEY.md §5 calls for.
+  * `src/lib.rs:199-386`) as the types a read returns, plus the
+  * value-level parity transforms. The reference itself has zero unit
+  * tests; this is the upgrade SURVEY.md §5 calls for.
   */
 class PgTypeMapSpec extends AnyFunSuite {
 
-  test("mapping covers every arm of the reference type switch") {
-    val expected = Map(
-      "bytea" -> BinaryType, "bool" -> BooleanType, "char" -> ByteType,
-      "text" -> StringType, "varchar" -> StringType, "name" -> StringType,
-      "bpchar" -> StringType, "unknown" -> StringType, "json" -> StringType,
-      "jsonb" -> StringType, "oid" -> LongType, "uuid" -> StringType,
-      "int2" -> ShortType, "int4" -> IntegerType, "int8" -> LongType,
-      "float4" -> FloatType, "float8" -> DoubleType,
-      "timestamp" -> TimestampNTZType, "timestamptz" -> TimestampType,
-      "date" -> DateType, "time" -> LongType, "timetz" -> LongType,
-      "numeric" -> DoubleType)
-    expected.foreach { case (pg, dt) =>
-      assert(PgTypeMap.toCatalyst(pg) === dt, s"for pg type $pg")
+  /** An enum's OID: one the wire has no name for. */
+  private val EnumOid = 16390
+
+  /** What a read returns for each type the wire names, and for an
+    * enum: (OID, Catalyst type at default parity, at exact parity,
+    * whether the columnar scan decodes the column itself rather than
+    * sending the statement to the JDBC reader). TIME and TIMETZ read as
+    * timestamps on the epoch date, interval as PG's text render and
+    * `"char"` as a string; `timeAsMicros`, `timeAsNative` and
+    * `charAsCode` ([[PgTypeMap.applyParity]]) change those after the
+    * read, and [[graft.functions.DecodeInterval]] decodes a binary
+    * interval payload.
+    */
+  private val readTypes: Seq[(Int, DataType, DataType, Boolean)] = Seq(
+    (16, BooleanType, BooleanType, true), // bool
+    (17, BinaryType, BinaryType, true), // bytea
+    (18, StringType, StringType, true), // "char"
+    (20, LongType, LongType, true), // int8
+    (21, ShortType, ShortType, true), // int2
+    (23, IntegerType, IntegerType, true), // int4
+    (25, StringType, StringType, true), // text
+    (114, StringType, StringType, true), // json
+    (142, StringType, StringType, true), // xml
+    (700, FloatType, FloatType, true), // float4
+    (701, DoubleType, DoubleType, true), // float8
+    (1042, StringType, StringType, true), // bpchar
+    (1043, StringType, StringType, true), // varchar
+    (1082, DateType, DateType, true), // date
+    (1083, TimestampType, TimestampType, true), // time
+    (1114, TimestampNTZType, TimestampNTZType, true), // timestamp
+    (1184, TimestampType, TimestampType, true), // timestamptz
+    (1186, StringType, StringType, true), // interval
+    (1266, TimestampType, TimestampType, true), // timetz
+    (1700, DoubleType, DecimalType(38, 18), true), // numeric
+    (2950, StringType, StringType, true), // uuid
+    (3802, StringType, StringType, true), // jsonb
+    // The reference aborts on an enum such as pagila's
+    // `film.mpaa_rating` (`src/lib.rs:382-385`); here it reads as text.
+    (EnumOid, StringType, StringType, true))
+
+  test("every type the wire names reads as one Catalyst type at each " +
+    "parity, decoded by the scan or by the JDBC reader") {
+    import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+    import org.apache.spark.sql.jdbc.JdbcDialects
+    import graft.jdbc.{Cells, MiniPgResultSet, MiniPgWire}
+    val oids = MiniPgWire.TypeName.keys.toSeq.sorted :+ EnumOid
+    val cols = oids.map(oid => MiniPgWire.Col(s"c$oid", oid, -1)).toArray
+    // Per parity: the schema a read gets, and whether the scan decodes
+    // each column, alike in binary and in text transfer.
+    def read(parity: ParityOptions): (StructType, Seq[Boolean]) = {
+      val installed = FlacoPostgresDialect.register(parity)
+      try {
+        val dialect = JdbcDialects.get("jdbc:postgresql://localhost/db")
+        val schema = JdbcUtils.getSchema(null, MiniPgResultSet.describing(cols), dialect, true, false)
+        (schema, cols.indices.map { c =>
+          val byMode = Seq(true, false).map(Cells.decoder(schema(c), cols(c), _, dialect).isDefined)
+          assert(byMode.distinct.size === 1, s"OID ${cols(c).oid}")
+          byMode.head
+        })
+      } finally JdbcDialects.unregisterDialect(installed)
     }
-    assert(PgTypeMap.mapping.keySet === expected.keySet + "interval")
-    assert(PgTypeMap.toCatalyst("interval").isInstanceOf[StructType])
-  }
-
-  test("numeric maps to DecimalType(38,18) in exact mode") {
-    assert(PgTypeMap.toCatalyst("numeric",
-      ParityOptions(numericAsDouble = false)) === DecimalType(38, 18))
-  }
-
-  test("unsupported type raises FlacoSparkException, not an abort") {
-    // Mirrors the pagila `film.mpaa_rating` enum the reference panics
-    // on (`src/lib.rs:382-385`, excluded in tests/test_general.py:19).
-    val e = intercept[FlacoSparkException] {
-      PgTypeMap.toCatalyst("mpaa_rating")
+    val (default, decoded) = read(ParityOptions())
+    val (exact, exactDecoded) = read(ParityOptions(numericAsDouble = false))
+    assert(exactDecoded === decoded)
+    val got = oids.indices.map(c => (oids(c), default(c).dataType, exact(c).dataType, decoded(c)))
+    assert(got === readTypes)
+    // The dialect names each column's wire type for applyParity.
+    oids.indices.foreach { c =>
+      assert(default(c).metadata.getString("pg_type") ===
+        MiniPgWire.TypeName.getOrElse(oids(c), "unknown"))
     }
-    assert(e.getMessage.contains("not implemented"))
   }
 
-  test("decodeInterval round-trips any (months, days, micros) [property]") {
-    val prop = Prop.forAll { (months: Int, days: Int, micros: Long) =>
-      val bytes = ByteBuffer.allocate(16)
-        .putLong(micros).putInt(days).putInt(months).array()
-      PgTypeMap.decodeInterval(bytes) == ((months, days, micros))
+  test("decode_interval round-trips any (months, days, micros) [property]") {
+    import graft.functions.IntervalFunctions.decode_interval
+    import org.apache.spark.sql.functions.col
+    import org.scalacheck.{Arbitrary, Gen}
+    val spark = TestSpark.spark
+    val schema = StructType(Seq(StructField("k", IntegerType), StructField("p", BinaryType)))
+    val samples = Gen.listOfN(200, Arbitrary.arbitrary[(Int, Int, Long)])
+    val prop = Prop.forAll(samples) { ivs =>
+      val rows = ivs.zipWithIndex.map { case ((months, days, micros), k) =>
+        Row(k, ByteBuffer.allocate(16).putLong(micros).putInt(days).putInt(months).array())
+      }
+      val got = spark.createDataFrame(java.util.List.of(rows: _*), schema)
+        .select(col("k"), decode_interval(col("p")).as("iv")).orderBy("k").collect()
+        .map { r => val iv = r.getStruct(1); (iv.getInt(0), iv.getInt(1), iv.getLong(2)) }
+      got.toSeq == ivs
     }
-    assert(SCTest.check(SCTest.Parameters.default, prop).passed)
-  }
-
-  test("decodeInterval rejects null and wrong-length payloads") {
-    intercept[FlacoSparkException](PgTypeMap.decodeInterval(null))
-    intercept[FlacoSparkException](PgTypeMap.decodeInterval(Array[Byte](1, 2)))
+    assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5), prop).passed)
   }
 
   test("decode_interval expression decodes payload columns (codegen path)") {
@@ -143,15 +189,6 @@ class PgTypeMapSpec extends AnyFunSuite {
     // (src/lib.rs:350-366).
     assert(rows(0).getLong(0) === 3723000456L)
     assert(rows(1).isNullAt(0))
-  }
-
-  test("toCatalyst timeAsNative lands TIME/TIMETZ on Spark's TIME(6)") {
-    val nat = ParityOptions(timeAsNative = true)
-    assert(PgTypeMap.toCatalyst("time", nat) === TimeType(6))
-    assert(PgTypeMap.toCatalyst("timetz", nat) === TimeType(6))
-    // Default stays the documented BIGINT-twin contract.
-    assert(PgTypeMap.toCatalyst("time") === LongType)
-    assert(PgTypeMap.toCatalyst("timetz") === LongType)
   }
 
   test("applyParity timeAsNative lands TIME columns on TIME(6), value-identical to the µs twin") {

@@ -41,7 +41,10 @@ BUCKETS = [
     ("optimizer", ("org.apache.spark.sql.catalyst.optimizer.",)),
     ("planner", ("org.apache.spark.sql.execution.SparkStrategies",
                  "org.apache.spark.sql.execution.QueryExecution$.prepareForExecution",
-                 "org.apache.spark.sql.catalyst.planning.")),
+                 "org.apache.spark.sql.catalyst.planning.",
+                 # the sinks' plan execution (executedPlan, executeColumnar),
+                 # which the arrow_encode prefix below would otherwise claim
+                 "graft.sinks.FeatherSink$.source")),
     ("pg_wire", ("graft.jdbc.MiniPgWire",)),
     ("arrow_encode", ("graft.sinks.FeatherSink", "org.apache.arrow.")),
     ("parquet", ("org.apache.parquet.",)),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
 /** The reference raises exactly one exception type for every failure
   * (connection, SQL, conversion) — `FlacoException`
@@ -51,9 +51,10 @@ object FileFormat {
   *                        (`src/lib.rs:214-219`); same metadata contract.
   * @param singleFile      one output file, like the single-chunk
   *                        writers (`src/lib.rs:124,163`): one task
-  *                        writes it over every partition (Parquet and
-  *                        the text formats by `coalesce(1)`, Feather
-  *                        in partition order), so no row passes
+  *                        writes it over every partition, in partition
+  *                        order (an in-order coalesce, `FeatherSink.InOrder`,
+  *                        for every format), so the file holds the rows
+  *                        in `collect()` order and no row passes
   *                        through the driver.
   * @param uncompressed    Parquet compression=none (`src/lib.rs:125-129`).
   * @param variantInterop  write VARIANT columns external-reader-safe.
@@ -241,16 +242,23 @@ object Flaco {
     case FileFormat.Parquet => writeParquet(df, path, parity)
     case FileFormat.Feather => writeFeather(df, path, parity)
     case FileFormat.Csv =>
-      maybeSingle(df, parity).write.mode("overwrite")
+      single(df, parity).write.mode("overwrite")
         .option("header", "true").csv(path)
     case FileFormat.Json =>
-      maybeSingle(df, parity).write.mode("overwrite").json(path)
+      single(df, parity).write.mode("overwrite").json(path)
     case FileFormat.Orc =>
-      maybeSingle(df, parity).write.mode("overwrite").orc(path)
+      single(df, parity).write.mode("overwrite").orc(path)
   }
 
-  private def maybeSingle(df: DataFrame, parity: ParityOptions): DataFrame =
-    if (parity.singleFile) df.coalesce(1) else df
+  /** `df` as one partition that holds its partitions' rows in order
+    * when `parity.singleFile`, else `df`. (`df.coalesce(1)` would put
+    * the partitions with preferred locations first.)
+    */
+  private def single(df: DataFrame, parity: ParityOptions): DataFrame =
+    if (!parity.singleFile) df
+    else GraftSqlBridge.dataFrame(df.sparkSession,
+      df.queryExecution.toRdd.coalesce(1, partitionCoalescer = Some(sinks.FeatherSink.InOrder)),
+      df.schema)
 
   /** Source dispatch — read back what [[writeFile]] wrote. A schema is
     * required for the text formats (header-only CSV/JSON inference
@@ -290,10 +298,11 @@ object Flaco {
       df: DataFrame,
       path: String,
       parity: ParityOptions = ParityOptions()): Unit = {
-    val out = if (parity.singleFile) df.coalesce(1) else df
-    var w = out.write.mode("overwrite")
-      .option("parquet.dictionary.page.size", ParquetDictionaryBytes.toString)
-    if (parity.uncompressed) w = w.option("compression", "none")
+    val out = single(df, parity)
+    val options = Map("parquet.dictionary.page.size" -> ParquetDictionaryBytes.toString) ++
+      Option.when(parity.uncompressed)("compression" -> "none")
+    def save(frame: DataFrame, more: (String, String)*): Unit =
+      frame.write.mode("overwrite").options(options ++ more).parquet(path)
     if (parity.variantInterop) {
       // The annotation half has no per-write option (verified r20), so
       // the write runs on an ISOLATED session (own runtime SQLConf,
@@ -335,15 +344,10 @@ object Flaco {
         val vname = "flaco_interop_" +
           java.util.UUID.randomUUID().toString.replace("-", "")
         out.createOrReplaceGlobalTempView(vname)
-        try {
-          var wi = isolated.table(s"`$gtDb`.$vname").write.mode("overwrite")
-            .option("parquet.dictionary.page.size", ParquetDictionaryBytes.toString)
-          if (parity.uncompressed) wi = wi.option("compression", "none")
-          wi.option("spark.sql.variant.inferShreddingSchema", "false")
-            .parquet(path)
-        } finally { sess.catalog.dropGlobalTempView(vname): Unit }
+        try save(isolated.table(s"`$gtDb`.$vname"), "spark.sql.variant.inferShreddingSchema" -> "false")
+        finally { sess.catalog.dropGlobalTempView(vname): Unit }
       }
-    } else w.parquet(path)
+    } else save(out)
   }
 
   /** Feather / Arrow-IPC sink (`write_table_to_feather`,

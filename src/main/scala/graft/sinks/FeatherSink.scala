@@ -55,7 +55,7 @@ object FeatherSink {
     */
   def write(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
     val schema = df.schema
-    validate(schema)
+    val arrow = arrowSchema(schema)
     val target = new File(path)
     if (target.exists()) FileUtils.forceDelete(target)
     try {
@@ -71,7 +71,7 @@ object FeatherSink {
       val wrote = new Array[Boolean](rdd.getNumPartitions)
       rdd.sparkContext.runJob(rdd, task, wrote.indices,
         (pid: Int, nonEmpty: Boolean) => wrote(pid) = nonEmpty)
-      if (!wrote.contains(true)) writeFile(schema, task.file(0), Iterator.empty)
+      if (!wrote.contains(true)) writeFile(arrow, task.file(0), Iterator.empty)
     } catch { case e: Throwable =>
       // The tasks that finished wrote whole files, which a reader would
       // take for the whole result.
@@ -96,12 +96,12 @@ object FeatherSink {
     * those `ArrowStreamWriter` writes for the same batches.
     */
   def collectAsArrowStream(df: DataFrame): Array[Byte] = {
-    validate(df.schema)
+    val arrow = arrowSchema(df.schema)
     val (rdd, columnar) = source(df)
     val encode = EncodePartition(df.schema, columnar)
     val bos = new ByteArrayOutputStream()
     val ch = new WriteChannel(Channels.newChannel(bos))
-    MessageSerializer.serialize(ch, arrowSchema(df.schema))
+    MessageSerializer.serialize(ch, arrow)
     rdd.partitions.indices.foreach { pid =>
       rdd.sparkContext.runJob(rdd, encode, Seq(pid),
         (_: Int, messages: Array[Array[Byte]]) => messages.foreach(ch.write))
@@ -110,19 +110,9 @@ object FeatherSink {
     bos.toByteArray
   }
 
-  private def validate(schema: StructType): Unit =
-    schema.fields.foreach { f =>
-      f.dataType match {
-        case IntegerType | LongType | ShortType | ByteType | FloatType |
-            DoubleType | StringType | BinaryType | BooleanType | DateType |
-            TimestampType | TimestampNTZType => ()
-        case _: TimeType => ()
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => ()
-        case dt => throw new FlacoSparkException(
-          s"Feather sink: type $dt (column ${f.name}) not supported")
-      }
-    }
-
+  /** The Arrow field the sink writes for `f`; the one place that
+    * decides which types the sink accepts.
+    */
   private def arrowField(f: StructField): Field = {
     def prim(t: ArrowType) =
       new Field(f.name, FieldType.nullable(t), null)
@@ -145,11 +135,12 @@ object FeatherSink {
         // The reference's own TIME output shape: Time64(Microsecond)
         // (src/lib.rs:350-366). Spark TIME(p≤6) values are µs-exact.
         prim(new ArrowType.Time(ArrowTimeUnit.MICROSECOND, 64))
-      case ArrayType(elem, _) =>
+      case ArrayType(elem @ (FloatType | DoubleType), _) =>
         val child = arrowField(StructField("item", elem))
         new Field(f.name, FieldType.nullable(ArrowType.List.INSTANCE),
           Seq(child).asJava)
-      case dt => throw new FlacoSparkException(s"unsupported $dt")
+      case dt => throw new FlacoSparkException(
+        s"Feather sink: type $dt (column ${f.name}) not supported")
     }
   }
 
@@ -160,7 +151,7 @@ object FeatherSink {
     * `batches` (see [[batchesOf]]). A failure leaves the file without
     * its footer.
     */
-  private def writeFile(schema: StructType, file: String,
+  private def writeFile(schema: Schema, file: String,
       batches: Iterator[Iterator[InternalRow]]): Unit = {
     val enc = new BatchEncoder(schema)
     val out = new FileOutputStream(file)
@@ -176,7 +167,7 @@ object FeatherSink {
     * Spark's default coalescer puts a partition with preferred
     * locations ahead of one without.
     */
-  private object InOrder extends PartitionCoalescer with Serializable {
+  private[graft] object InOrder extends PartitionCoalescer with Serializable {
     def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
       val all = new PartitionGroup()
       all.partitions ++= parent.partitions
@@ -214,7 +205,7 @@ object FeatherSink {
   private final case class EncodePartition(schema: StructType, columnar: Boolean)
       extends ((TaskContext, Iterator[AnyRef]) => Array[Array[Byte]]) {
     def apply(ctx: TaskContext, it: Iterator[AnyRef]): Array[Array[Byte]] = {
-      val enc = new BatchEncoder(schema)
+      val enc = new BatchEncoder(arrowSchema(schema))
       try batchesOf(rowsOf(it, columnar)).map { rows => enc.encode(rows); enc.message() }.toArray
       finally enc.close()
     }
@@ -232,17 +223,17 @@ object FeatherSink {
       val parts = if (singleFile) it.map(_.asInstanceOf[Iterator[AnyRef]]) else Iterator(it)
       val batches = parts.flatMap(p => batchesOf(rowsOf(p, columnar)))
       val nonEmpty = batches.hasNext
-      if (nonEmpty) writeFile(schema, file(ctx.partitionId()), batches)
+      if (nonEmpty) writeFile(arrowSchema(schema), file(ctx.partitionId()), batches)
       nonEmpty
     }
   }
 
-  /** An Arrow root for a sink schema that Spark's ArrowWriter fills
-    * from InternalRows, BatchRows rows at a time.
+  /** An Arrow root of `schema` that Spark's ArrowWriter fills from
+    * InternalRows, BatchRows rows at a time.
     */
-  private final class BatchEncoder(schema: StructType) extends AutoCloseable {
+  private final class BatchEncoder(schema: Schema) extends AutoCloseable {
     private val allocator = new RootAllocator()
-    val root: VectorSchemaRoot = VectorSchemaRoot.create(arrowSchema(schema), allocator)
+    val root: VectorSchemaRoot = VectorSchemaRoot.create(schema, allocator)
     private val writer = GraftArrowBridge.writer(root)
 
     /** Fill the root with the next [[BatchRows]] rows, or the rest. */

@@ -5,13 +5,12 @@ import java.io.{File, FileInputStream}
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
 import org.apache.arrow.vector.ipc.ArrowFileReader
-import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.arrow.ArrowColumns
+import org.apache.spark.sql.types.StructType
 
 import graft.FlacoSparkException
 
@@ -24,6 +23,9 @@ import graft.FlacoSparkException
   * reader — the natural parallelism for a sink that writes one IPC
   * file per partition. (IPC files are not block-splittable like
   * parquet; at scale the sink's many-files layout IS the split.)
+  * Spark reads the record batches in place, through its own Arrow
+  * column vectors ([[ArrowColumns]]), so the types are Spark's Arrow
+  * type map plus the sink's Time64(µs) TIME.
   */
 object FeatherSource {
 
@@ -37,125 +39,48 @@ object FeatherSource {
       else throw new FlacoSparkException(s"feather read: no such path $path")
     if (files.isEmpty)
       throw new FlacoSparkException(s"feather read: no .arrow files under $path")
-    val schema = StructType(withSchemaReader(files.head) { reader =>
-      reader.getVectorSchemaRoot.getSchema.getFields.asScala.map(sparkField).toSeq
-    })
+    val first = new IpcFile(files.head)
+    val schema = try first.columns.schema finally first.close()
     val rows = spark.sparkContext.parallelize(files, files.length)
       .flatMap(file => readRows(file, schema))
-    spark.createDataFrame(rows, schema)
+    GraftSqlBridge.dataFrame(spark, rows, schema)
   }
 
-  private def withSchemaReader[T](file: String)(f: ArrowFileReader => T): T = {
-    val alloc = new RootAllocator()
-    val in = new FileInputStream(file)
+  /** One IPC file open for reading; `close` frees every buffer. */
+  private final class IpcFile(file: String) extends AutoCloseable {
+    private val alloc = new RootAllocator()
+    private val in = new FileInputStream(file)
     val reader = new ArrowFileReader(in.getChannel, alloc)
-    try f(reader)
-    finally { reader.close(); in.close(); alloc.close() }
-  }
-
-  /** Inverse of FeatherSink.arrowField, for the types the sink emits. */
-  private def sparkField(f: Field): StructField = {
-    val dt = f.getType match {
-      case t: ArrowType.Int => t.getBitWidth match {
-        case 8 => ByteType
-        case 16 => ShortType
-        case 32 => IntegerType
-        case 64 => LongType
-        case w => throw new FlacoSparkException(s"feather read: int$w unsupported")
+    val columns: ArrowColumns =
+      try new ArrowColumns(reader.getVectorSchemaRoot)
+      catch {
+        case e: UnsupportedOperationException =>
+          closeFile()
+          throw new FlacoSparkException(s"feather read: $file: ${e.getMessage}", e)
+        case e: Throwable => closeFile(); throw e
       }
-      case t: ArrowType.FloatingPoint =>
-        if (t.getPrecision == FloatingPointPrecision.SINGLE) FloatType else DoubleType
-      case _: ArrowType.Utf8 => StringType
-      case _: ArrowType.Binary => BinaryType
-      case _: ArrowType.Bool => BooleanType
-      case _: ArrowType.Date => DateType
-      case t: ArrowType.Timestamp =>
-        if (t.getTimezone == null) TimestampNTZType else TimestampType
-      case t: ArrowType.Time =>
-        // Inverse of FeatherSink's Time64(MICROSECOND) arm — the
-        // reference's own Feather TIME shape (src/lib.rs:350-366).
-        if (t.getUnit == ArrowTimeUnit.MICROSECOND && t.getBitWidth == 64)
-          TimeType(6)
-        else throw new FlacoSparkException(
-          s"feather read: Time(${t.getUnit}, ${t.getBitWidth}) unsupported")
-      case _: ArrowType.List =>
-        ArrayType(sparkField(f.getChildren.get(0)).dataType)
-      case t => throw new FlacoSparkException(s"feather read: $t unsupported")
-    }
-    StructField(f.getName, dt)
+    private def closeFile(): Unit = { reader.close(); in.close(); alloc.close() }
+    override def close(): Unit = { columns.close(); closeFile() }
   }
 
   /** Batch-streaming row iterator over one IPC file: only the current
     * Arrow record batch is resident, so task memory is bounded by the
-    * writer's batch size, not the file. The reader is closed when the
+    * writer's batch size, not the file. The file is closed when the
     * iterator drains (and on task completion, for early-terminating
     * consumers like limit).
     */
-  private def readRows(file: String, schema: StructType): Iterator[Row] = {
-    val alloc = new RootAllocator()
-    val in = new FileInputStream(file)
-    val reader = new ArrowFileReader(in.getChannel, alloc)
+  private def readRows(file: String, schema: StructType): Iterator[InternalRow] = {
+    val ipc = new IpcFile(file)
     var closed = false
-    def close(): Unit = if (!closed) {
-      closed = true
-      reader.close(); in.close(); alloc.close()
+    def close(): Unit = if (!closed) { closed = true; ipc.close() }
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    if (ipc.columns.schema != schema) {
+      close()
+      throw new FlacoSparkException(
+        s"feather read: $file holds ${ipc.columns.schema.simpleString}, not ${schema.simpleString}")
     }
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => close()))
-    val root = reader.getVectorSchemaRoot
-    new Iterator[Row] {
-      private var i = 0
-      private var n = 0
-      private def advance(): Unit =
-        while (i >= n && !closed) {
-          if (reader.loadNextBatch()) { n = root.getRowCount; i = 0 }
-          else close()
-        }
-      override def hasNext: Boolean = { advance(); !closed }
-      override def next(): Row = {
-        advance()
-        if (closed) throw new NoSuchElementException("drained")
-        val row = Row.fromSeq(schema.fields.indices.map { c =>
-          val v = root.getVector(c)
-          if (v.isNull(i)) null else cell(v, schema.fields(c).dataType, i)
-        })
-        i += 1
-        row
-      }
-    }
-  }
-
-  private def cell(v: FieldVector, dt: DataType, i: Int): Any = dt match {
-    case IntegerType => v.asInstanceOf[IntVector].get(i)
-    case LongType => v.asInstanceOf[BigIntVector].get(i)
-    case ShortType => v.asInstanceOf[SmallIntVector].get(i)
-    case ByteType => v.asInstanceOf[TinyIntVector].get(i)
-    case FloatType => v.asInstanceOf[Float4Vector].get(i)
-    case DoubleType => v.asInstanceOf[Float8Vector].get(i)
-    case BooleanType => v.asInstanceOf[BitVector].get(i) == 1
-    case StringType => new String(v.asInstanceOf[VarCharVector].get(i), "UTF-8")
-    case BinaryType => v.asInstanceOf[VarBinaryVector].get(i)
-    case DateType =>
-      java.time.LocalDate.ofEpochDay(v.asInstanceOf[DateDayVector].get(i).toLong)
-    case TimestampType =>
-      val micros = v.asInstanceOf[TimeStampMicroTZVector].get(i)
-      java.time.Instant.ofEpochSecond(
-        Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)
-    case _: TimeType =>
-      java.time.LocalTime.ofNanoOfDay(
-        v.asInstanceOf[TimeMicroVector].get(i) * 1000L)
-    case TimestampNTZType =>
-      val micros = v.asInstanceOf[TimeStampMicroVector].get(i)
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(micros, 1000000L),
-        (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-        java.time.ZoneOffset.UTC)
-    case ArrayType(FloatType, _) =>
-      v.asInstanceOf[ListVector].getObject(i)
-        .asInstanceOf[java.util.List[java.lang.Float]].asScala.toSeq
-    case ArrayType(DoubleType, _) =>
-      v.asInstanceOf[ListVector].getObject(i)
-        .asInstanceOf[java.util.List[java.lang.Double]].asScala.toSeq
-    case other => throw new FlacoSparkException(s"feather read: $other unsupported")
+    Iterator.continually(ipc.reader.loadNextBatch())
+      .takeWhile { loaded => if (!loaded) close(); loaded }
+      .flatMap(_ => ipc.columns.batch().rowIterator().asScala)
   }
 }

@@ -21,7 +21,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
-import graft.{FlacoSparkException, TestSpark}
+import graft.{FileFormat, Flaco, FlacoSparkException, ParityOptions, TestSpark}
 import graft.sources.Corpus
 
 /** End-to-end exercise of the Feather/Arrow-IPC sink (the analogue of
@@ -561,9 +561,65 @@ class FeatherSinkSpec extends AnyFunSuite {
           val file = s"$dir/$name.arrow"
           FeatherSink.write(df, file, singleFile = true)
           assert(readBack(file, df.schema) === df.collect().toSeq.map(_.toSeq), name)
+          // The other formats' singleFile writes, through the same coalesce.
+          Seq(FileFormat.Parquet, FileFormat.Csv, FileFormat.Json, FileFormat.Orc).foreach { fmt =>
+            val out = s"$dir/$name-$fmt"
+            Flaco.writeFile(df, out, fmt, ParityOptions(singleFile = true))
+            assert(new java.io.File(out).list().count(_.startsWith("part-")) === 1, s"$name $fmt")
+            assert(Flaco.readFile(spark, out, fmt, Some(df.schema)).collect().toSeq ===
+              df.collect().toSeq, s"$name $fmt")
+          }
         }
       }
     }
+  }
+
+  test("readFile(Feather) reads a TIME(6) file of several batches whole " +
+    "and through a limit, freeing every buffer") {
+    val schema = StructType(Seq(StructField("id", LongType), StructField("t6", TimeType(6))))
+    val rows = (0 until 10000).map { i =>
+      Row(i.toLong,
+        if (i % 7 == 3) null else java.time.LocalTime.ofNanoOfDay((i * 8640000L + i) * 1000L))
+    }
+    assert(rows.length > FeatherSink.BatchRows)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    val file = Files.createTempDirectory("ftt").toString + "/t.arrow"
+    FeatherSink.write(df, file, singleFile = true)
+    val back = Flaco.readFile(spark, file, FileFormat.Feather)
+    // Whole: the task drains the file and closes it as the rows run out.
+    assert(back.collect().toSeq === rows)
+    // One row: the task stops early and closes the file when it completes.
+    assert(back.limit(1).collect().toSeq === rows.take(1))
+  }
+
+  test("readFile(Feather) rejects an Arrow type it cannot read, naming the column") {
+    val file = Files.createTempDirectory("ftm").toString + "/t.arrow"
+    val alloc = new RootAllocator()
+    val id = new IntVector("id", alloc)
+    val ms = new TimeMilliVector("t_ms", alloc)
+    id.allocateNew(2); ms.allocateNew(2)
+    id.set(0, 1); id.set(1, 2)
+    ms.set(0, 45296123); ms.setNull(1)
+    val root = VectorSchemaRoot.of(id, ms)
+    root.setRowCount(2)
+    val out = new java.io.FileOutputStream(file)
+    try {
+      val writer = new org.apache.arrow.vector.ipc.ArrowFileWriter(root, null, out.getChannel)
+      writer.start(); writer.writeBatch(); writer.end()
+    } finally { out.close(); root.close(); alloc.close() }
+    val e = intercept[FlacoSparkException](Flaco.readFile(spark, file, FileFormat.Feather))
+    assert(e.getMessage.contains("t_ms"), e.getMessage)
+  }
+
+  test("readFile(Feather) rejects a directory whose files disagree on the schema") {
+    val dir = Files.createTempDirectory("ftx").toString
+    FeatherSink.write(spark.range(3).toDF("a"), s"$dir/part-00000.arrow", singleFile = true)
+    FeatherSink.write(spark.range(3).selectExpr("cast(id as string) as a"),
+      s"$dir/part-00001.arrow", singleFile = true)
+    val e = intercept[Exception](Flaco.readFile(spark, dir, FileFormat.Feather).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[FlacoSparkException] &&
+      c.getMessage.contains("part-00001.arrow")), e)
   }
 }
 
